@@ -657,26 +657,36 @@ def containment_pairs(
 def near_dup_clusters(
     pairs: DataFrame,
     max_iter: int = 20,
-    checkpoint_every: int = 5,
     checkpoint: str = "local",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Near-dup pairs → (node, cluster) connected components.
+    """Near-dup pairs → (node, cluster) connected components, where
+    cluster is the minimum node id of the node's component.
 
     THE scale-shaped dedup output: pair lists are quadratic in cluster
     size (a 1000-copy boilerplate family is half a million pairs), but
     cluster labels are linear in docs. Min-label propagation over the
     undirected pair graph; near-dup clusters have tiny diameters, so a
-    handful of join+groupBy rounds converges (each round is one shuffle
-    on node id; the loop stops early on fixpoint).
+    handful of sweeps converges.
 
-    Every `checkpoint_every` rounds the label frame's lineage is cut:
-    each round's plan otherwise stacks on the previous round's, and at
-    corpus scale 10+ rounds of lineage (re-planned per round by the
-    driver-side fixpoint count()) blows up optimizer time and recovery
-    cost. Checkpointing truncates the plan to the materialized blocks,
-    keeping every round's plan depth constant. Convergence across long
-    chains (diameter > checkpoint interval) is pytest-covered.
+    The persisted edge list holds both directions of every pair plus
+    one self-loop per node, so a sweep is a single
+    `edges ⋈ labels` join on dst = node and a `groupBy(src).min(label)`
+    over the node's closed neighbourhood: the label frame is read once
+    per sweep. The initial labels are the self-loop rows themselves.
+
+    A round runs two sweeps and then cuts the label frame's lineage
+    with one eager `cut_lineage` — the round's only Spark action — so
+    every round plans over materialized blocks and plan depth stays
+    constant. The same action observes how many nodes the round's
+    second sweep lowered (read off each node's self-loop row); labels
+    never increase, so zero means the labels were already a fixpoint
+    and the loop stops in that round.
+
+    max_iter bounds the sweeps (rounded up to a whole round). If the
+    last sweep run still lowered a label, a component's diameter
+    exceeds the budget and the call raises RuntimeError rather than
+    return a splintered cluster.
 
     checkpoint: "local" (localCheckpoint — executor blocks, fastest,
     no executor-loss recovery; right for local[] runs) or "reliable"
@@ -686,102 +696,63 @@ def near_dup_clusters(
     from .lineage import cut_lineage, prepare_checkpoint
 
     prepare_checkpoint(pairs.sparkSession, checkpoint, checkpoint_dir)
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
+    a, b = F.col("id_a"), F.col("id_b")
+    # one pass over `pairs`: each pair emits both directions and both
+    # endpoints' self-loops, so the pair pipeline runs once
     edges = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        pairs.select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(s.alias("src"), d.alias("dst"))
+                        for s, d in ((a, b), (b, a), (a, a), (b, b))
+                    ]
+                )
+            ).alias("e")
         )
+        .select("e.src", "e.dst")
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .persist()
+    labels = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("node"), F.col("src").alias("label")
     )
-    def _hop(lab: DataFrame) -> DataFrame:
-        """One min-label sweep: (node, label, ...carried cols) →
-        same shape with label := min(own, neighbors')."""
-        neighbor_min = (
+
+    def _sweep(lab: DataFrame) -> DataFrame:
+        """(node, label) → (node, label := min over the closed
+        neighbourhood, own := the node's label before the sweep)."""
+        return (
             edges.join(lab.select("node", "label"),
-                       edges["dst"] == F.col("node"))
+                       F.col("dst") == F.col("node"))
             .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        carried = [c for c in lab.columns if c not in ("node", "label")]
-        return lab.join(
-            neighbor_min, lab["node"] == neighbor_min["src"], "left"
-        ).select(
-            lab["node"].alias("node"),
-            F.least(
-                lab["label"], F.coalesce("nlabel", lab["label"])
-            ).alias("label"),
-            *[lab[c] for c in carried],
+            .agg(
+                F.min("label").alias("label"),
+                F.min(
+                    F.when(F.col("src") == F.col("dst"), F.col("label"))
+                ).alias("own"),
+            )
+            .withColumnRenamed("src", "node")
         )
 
-    # TWO hops per materialized round (round 14, optimization): labels
-    # are monotone non-increasing under min-propagation, so "changed
-    # anywhere in the round" is exactly label₂ < label₀ — the fixpoint
-    # check stays one inline observed metric, but each driver action
-    # (the per-round count + plan round-trip, the dominant cost of the
-    # loop on small diameters) now advances two sweeps. The fixpoint
-    # itself (per-component min) is hop-schedule-independent, so the
-    # returned labels are identical. max_iter still counts SWEEPS.
-    #
-    # Lineage-cut cadence counts SWEEPS too (checkpoint_every // 2
-    # rounds): with two join+agg hops stacked per round, keeping the
-    # ROUND cadence would let the uncut plan reach 2x the depth the
-    # single-hop loop ever had — measured consequence: a driversim
-    # batch of 16 dedup queries in one default 1g session OOM'd on
-    # q_corpus_card from analyzer/codegen heap (this session's
-    # bisect: same batch green with the hop depth re-bounded, green
-    # at single-hop HEAD, red with double-hop at the round cadence).
-    n_rounds = (max_iter + 1) // 2
-    cut_every_rounds = max(1, checkpoint_every // 2)
-    for i in range(n_rounds):
-        # The change flag is derivable inline (new < old) — observed
-        # metrics ride the SAME job that materializes the round's
-        # labels, so each round is exactly one action (an earlier
-        # version re-joined old vs new just to count changes: one
-        # extra shuffle join + job per round).
-        l0 = labels.withColumn("_l0", F.col("label"))
-        upd = _hop(_hop(l0)).select(
-            "node",
-            "label",
-            (F.col("label") < F.col("_l0")).cast("long").alias("_chg"),
-        )
-        obs = Observation()
-        new_labels = upd.observe(obs, F.sum("_chg").alias("n")).drop("_chg")
-        if (i + 1) % cut_every_rounds == 0:
-            # Materializes eagerly and truncates lineage; the blocks it
-            # writes replace the persist for this round.
-            new_labels = cut_lineage(new_labels, checkpoint, eager=True)
-        else:
-            new_labels = new_labels.persist()
-            new_labels.count()
-        changed = int(obs.get["n"] or 0)
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # max_iter exhausted with labels still moving: min-label
-        # propagation advances one hop per sweep (two sweeps per
-        # materialized round), so a component whose BFS depth exceeds
-        # the sweeps run would SILENTLY splinter into multiple
-        # clusters (dedup would keep extra copies) — the
-        # no-silent-caps rule says fail loudly instead.
+    try:
+        for _ in range((max_iter + 1) // 2):
+            obs = Observation()
+            swept = _sweep(_sweep(labels)).observe(
+                obs,
+                F.sum((F.col("label") < F.col("own")).cast("long")).alias("n"),
+            )
+            labels = cut_lineage(swept.select("node", "label"), checkpoint)
+            if not obs.get["n"]:
+                return labels.select(
+                    F.col("node"), F.col("label").alias("cluster")
+                )
+    finally:
         edges.unpersist()
-        raise RuntimeError(
-            f"near_dup_clusters: labels still changing after "
-            f"{max_iter} sweeps (a component's diameter exceeds "
-            "max_iter) — raise max_iter"
-        )
-    edges.unpersist()
-    return labels.select(F.col("node"), F.col("label").alias("cluster"))
+    raise RuntimeError(
+        f"near_dup_clusters: labels still changing after "
+        f"{max_iter} sweeps (a component's diameter exceeds "
+        "max_iter) — raise max_iter"
+    )
 
 
 def dedup_report(

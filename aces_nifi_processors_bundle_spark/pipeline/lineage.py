@@ -1,8 +1,11 @@
 """Lineage truncation for iterative DataFrame jobs.
 
-Iterative ops (pagerank, near_dup_clusters) stack one plan per round;
-without a cut, optimizer time and recovery cost grow with round
-count. Two cut strategies, chosen per run:
+Iterative ops (pagerank, label_propagation, near_dup_clusters) stack
+one plan per round; without a cut, optimizer time and recovery cost
+grow with round count. near_dup_clusters cuts eagerly after every
+two-sweep round, and that cut is the round's only Spark action: the
+fixpoint count rides on it as an observed metric. Two cut strategies,
+chosen per run:
 
 - "local": localCheckpoint — blocks stored on executors. Fastest, but
   an executor loss mid-iteration kills the job with no recovery. The

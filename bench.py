@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": sf}.
+"queries": {name: sec}, "sf": sf}. The full per-query map also goes to
+bench_logs/sweep_<UTC start>_p<pid>_c<SPARK_GRAFT_CPUS>.json.
 
 Each query is fully materialized through the built-in `noop` sink —
 unlike count(), noop cannot let Catalyst prune the projected columns
@@ -20,6 +21,7 @@ from aces_nifi_processors_bundle_spark.session import get_spark
 
 
 def main() -> None:
+    t_start = time.time()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         # derived fixture dirs carry suffixes (".scale/sf1-skew"):
@@ -181,18 +183,24 @@ def main() -> None:
         "rerun_truncated": rerun_truncated,
     }
     print(json.dumps(full_record))
-    # Also persist the COMPLETE per-query map as a file artifact
-    # (r14 verdict item 2): the summary line's 10-slowest trim reduced
-    # round-over-round comparison to a biased 4-query sample. The file
-    # is overwritten per run, lives next to bench.py (not CWD — the
-    # driver may invoke from anywhere), and is an ADDITION: the stdout
-    # contract above is unchanged. Best-effort: a read-only checkout
-    # must not fail the bench.
+    # Also persist the COMPLETE per-query map as a file artifact: the
+    # summary line below keeps only the 10 slowest queries. Each run
+    # writes its own file under bench_logs/ (next to bench.py, not
+    # CWD), tagged with start time, pid and core count, so runs never
+    # overwrite each other. Best-effort: a read-only checkout must not
+    # fail the bench.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    full_record["cpus"] = cpus
     try:
-        sweep_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_SWEEP.json"
+        log_dir = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "bench_logs"
         )
-        full_record["cpus"] = os.environ.get("SPARK_GRAFT_CPUS")
+        os.makedirs(log_dir, exist_ok=True)
+        sweep_path = os.path.join(
+            log_dir,
+            f"sweep_{time.strftime('%Y%m%dT%H%M%S', time.gmtime(t_start))}"
+            f"_p{os.getpid()}_c{cpus or 'na'}.json",
+        )
         with open(sweep_path, "w") as fh:
             json.dump(full_record, fh, indent=1, sort_keys=True)
             fh.write("\n")

@@ -175,3 +175,13 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql: str):
     )
     for i, (a, b) in enumerate(zip(spark_rows, duck_rows)):
         assert a == b, f"row {i} differs:\n  spark : {a}\n  oracle: {b}"
+
+
+def pytest_collection_modifyitems(session, config, items):
+    """Run the oracle gate (test_queries_vs_oracle.py) first, keeping
+    the relative order of everything else, so a suite-level timeout on
+    a loaded machine cuts the least critical tests rather than it."""
+    def _is_oracle(item) -> bool:
+        return os.path.basename(str(item.fspath)) == "test_queries_vs_oracle.py"
+
+    items[:] = sorted(items, key=lambda item: not _is_oracle(item))

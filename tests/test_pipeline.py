@@ -318,6 +318,20 @@ def test_near_dup_clusters_long_chain_converges(spark):
     assert labels[100] == labels[101] == 100
 
 
+def test_near_dup_clusters_stops_on_fixpoint_within_last_round(spark):
+    """The chain 1-2-3-4 needs three label-lowering sweeps and one that
+    confirms the fixpoint. With max_iter=4 the confirming sweep is the
+    second sweep of the last round, so the loop must stop there with
+    one cluster instead of raising."""
+    from aces_nifi_processors_bundle_spark.pipeline.dedup import near_dup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
+    )
+    got = sorted(map(tuple, near_dup_clusters(pairs, max_iter=4).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 1)]
+
+
 def test_put_if_absent_single_pass_routing(spark):
     """In-batch dupes of new keys: min-order occurrence wins; target
     clashes all route to already-exists; post-state has unique keys."""
@@ -1268,14 +1282,13 @@ def test_near_dup_clusters_checkpoint_modes_identical(spark, tmp_path):
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     local = sorted(
-        map(tuple, near_dup_clusters(pairs, checkpoint_every=2).collect())
+        map(tuple, near_dup_clusters(pairs).collect())
     )
     reliable = sorted(
         map(
             tuple,
             near_dup_clusters(
                 pairs,
-                checkpoint_every=2,
                 checkpoint="reliable",
                 checkpoint_dir=str(tmp_path / "ckpt2"),
             ).collect(),
@@ -4308,6 +4321,37 @@ def test_ngram_jaccard_hashed_equals_string_verify(spark):
     )
     assert hashed == strings
     assert len(hashed) > 0
+
+
+def test_pairs_within_groups_strategies_identical(spark):
+    """Both sides of the skew-guard switch: the bounded collect_list
+    explode and the unbounded self-join return the same distinct
+    (id_a < id_b) pairs on one hot group plus several small ones, with
+    ids shared across groups and a repeated (group, id) entry."""
+    from itertools import combinations
+
+    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
+        _pairs_within_groups,
+    )
+
+    groups = {"hot": list(range(40))}
+    groups.update({f"g{i}": [i, i + 1, 100 + i] for i in range(0, 30, 3)})
+    groups["solo"] = [500]
+    rows = [(g, i) for g, ids in groups.items() for i in ids]
+    rows.append(("g0", 100))
+    entries = spark.createDataFrame(rows, "shingle string, doc_id long")
+    want = {
+        p for ids in groups.values() for p in combinations(sorted(set(ids)), 2)
+    }
+    got = {
+        bounded: sorted(
+            map(tuple,
+                _pairs_within_groups(entries, "shingle", "doc_id", bounded)
+                .collect())
+        )
+        for bounded in (True, False)
+    }
+    assert got[True] == got[False] == sorted(want)
 
 
 def test_temperature_mix_upsamples_low_resource_sources(spark):
