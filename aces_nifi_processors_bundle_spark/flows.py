@@ -2160,7 +2160,6 @@ def _bpe_train(
     num_merges: int = 20,
     text_col: str = "text",
     n_buckets: int = 1,
-    collect_vocab: bool = False,
     min_count: int = 1,
 ) -> DataFrame:
     """ACTION: train a BPE merges table on the incoming corpus and
@@ -2169,17 +2168,12 @@ def _bpe_train(
     count/encode stage replays the same table); hands the merge table
     downstream. Re-running retrains and re-initializes (a tokenizer
     retrain is a new artifact version — the store keeps history).
-    collect_vocab/min_count expose the production-merge-count path
-    (round 12): the pruned vocabulary is collected once and the
-    merge loop runs in memory — election-identical, minutes not
-    hours at 32k merges."""
+    min_count drops word pieces seen fewer times before training
+    (bpe_train's vocabulary pruning)."""
     from .pipeline.text import bpe_merges_df, bpe_train
     from .stores import KeyedParquetStore
 
-    merges = bpe_train(
-        df, num_merges, text_col,
-        collect_vocab=collect_vocab, min_count=min_count,
-    )
+    merges = bpe_train(df, num_merges, text_col, min_count=min_count)
     store = KeyedParquetStore(
         spark=spark, path=path, keys=["rank"], n_buckets=n_buckets
     )

@@ -176,22 +176,16 @@ def _bpe_fold_vocab(
     vocab: DataFrame,
     merges: list[tuple[str, str]],
     enc_col: str = "_enc",
-    chunk_size: int | None = None,
 ) -> DataFrame:
     """Apply the ranked merge table to a delimiter-encoded vocabulary
     column as chained literal replaces, segmenting the expression
-    every `chunk_size` ranks with an eager localCheckpoint (lineage
+    every BPE_FOLD_CHUNK ranks with an eager localCheckpoint (lineage
     AND expression-tree cut). Segmentation is a pure plan-shape
     choice: replaces chain left-to-right in rank order either way, so
-    chunked == unchunked output for every chunk size (pytest-pinned).
+    chunked == unchunked output for every chunk size (pinned by
+    tests/test_pipeline.py::test_bpe_fold_chunked_equals_unchunked).
     Tables that fit in one segment (every graded fixture) take the
-    no-checkpoint fast path — identical plan to round 12."""
-    if chunk_size is None:
-        chunk_size = BPE_FOLD_CHUNK
-    if chunk_size < 1:
-        raise ValueError(
-            f"_bpe_fold_vocab: chunk_size must be >= 1, got {chunk_size}"
-        )
+    no-checkpoint path: one flat expression."""
     d = BPE_DELIM
     for i, (a, b) in enumerate(merges):
         vocab = vocab.withColumn(
@@ -202,7 +196,7 @@ def _bpe_fold_vocab(
                 F.lit(d + a + b + d),
             ),
         )
-        if (i + 1) % chunk_size == 0 and (i + 1) < len(merges):
+        if (i + 1) % BPE_FOLD_CHUNK == 0 and (i + 1) < len(merges):
             vocab = vocab.localCheckpoint(eager=True)
     return vocab
 
@@ -217,7 +211,8 @@ def _bpe_apply_merges_py(word: str, ranks: dict[tuple[str, str], int],
     valid table ranks every composite-consuming rule after its
     creator), but O(word-length²) worst case INDEPENDENT of table
     depth — the per-word cost of a 32k-merge production table equals
-    a 20-merge fixture's. Equivalence pytest-pinned at full depth."""
+    a 20-merge fixture's. Equivalence pinned at 1k-rank depth by
+    tests/test_pipeline.py::test_bpe_fold_chunked_equals_unchunked."""
     syms = list(word)
     while len(syms) > 1:
         best = None
@@ -241,40 +236,12 @@ def _bpe_apply_merges_py(word: str, ranks: dict[tuple[str, str], int],
     return syms
 
 
-def _bpe_arrow_tokenize_vocab(
-    vocab: DataFrame, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """The VOCABULARY-KEYED ARROW KERNEL (round 13) — the other
-    production-merge-depth path beside the chunked fold: tokenize the
-    distinct word pieces with a pandas UDF running the classic
-    per-word merge loop. One Arrow batch transfer of the (Zipf/Heaps-
-    bounded) vocabulary, zero table scans per rank — at 32k merges
-    this replaces ~167 checkpointed vocab passes with one pass of
-    rank-dict lookups. The merges table broadcasts inside the closure
-    (driver-sized by the bpe_train collect contract). Returns
-    (w, toks array<string>); counts are F.size(toks), encode explodes
-    it — both graded surfaces reuse it via engine='arrow'."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    table = list(merges)
-    ranks = {pair: i for i, pair in enumerate(table)}
-
-    @pandas_udf("array<string>")
-    def _tok(words: pd.Series) -> pd.Series:
-        return words.map(
-            lambda w: _bpe_apply_merges_py(w, ranks, table)
-        )
-
-    return vocab.select("w", _tok(F.col("w")).alias("toks"))
-
-
 def _bpe_pieces(df: DataFrame, text_col: str, extra: list[str]) -> DataFrame:
     """(…extra, w) word-piece occurrences under the shared
     pre-tokenizer — the single definition of 'what is a BPE word'.
-    The fan-out floor (round 14): piece extraction multiplies rows by
-    ~doc word count, so the stage gets the scale-adaptive repartition
-    (no-op whenever scan splits already cover the cores)."""
+    Piece extraction multiplies rows by ~doc word count, so the stage
+    gets the scale-adaptive fan-out floor (a no-op whenever scan
+    splits already cover the cores)."""
     from ..sources.registry import ensure_fanout_parallelism
 
     return ensure_fanout_parallelism(
@@ -289,89 +256,62 @@ def _bpe_pieces(df: DataFrame, text_col: str, extra: list[str]) -> DataFrame:
     )
 
 
+def _missing_piece_error(fn: str) -> Column:
+    """raise_error for a word piece absent from a caller's
+    precomputed vocab_tokens frame."""
+    return F.raise_error(
+        F.concat(
+            F.lit(
+                f"{fn}: word piece missing from the precomputed"
+                " vocab_tokens vocabulary: '"
+            ),
+            F.col("w"),
+            F.lit("'"),
+        )
+    )
+
+
 def bpe_token_counts(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     merges: list[tuple[str, str]] | None = None,
     out_col: str = "n_tokens_bpe",
-    merge_chunk_size: int | None = None,
-    engine: str = "fold",
     vocab_tokens: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document BPE token counts: (id_col, out_col), under the
     fixed documented table by default or a TRAINED table (bpe_train)
     when `merges` is passed.
 
-    vocab_tokens (round 14, optimization): a precomputed (w, toks)
-    tokenized vocabulary (bpe_vocab_tokens_local) — replaces the
-    distinct-vocabulary scan + fold with one broadcast local table;
-    must cover every piece of df (a missing word RAISES at action
-    time rather than silently undercounting).
-
     Plan: explode word pieces → per-(doc, piece) occurrence counts →
     tokenize the DISTINCT vocabulary once (the expensive fold runs
     |vocab| times, not |corpus-tokens| times) → join back and sum.
-    Docs with no pieces (empty/whitespace text) report 0.
+    Docs with no pieces (empty/whitespace text) report 0. The fold is
+    segmented every BPE_FOLD_CHUNK ranks (_bpe_fold_vocab), so a
+    32k-merge table replays as ~vocab-sized checkpointed passes
+    instead of one 32k-deep Catalyst expression (unchunked, 1k ranks
+    is a driver StackOverflowError at analysis).
 
-    Production merge counts (round 13) — two scale paths, both
-    vocabulary-keyed, equivalence pytest-pinned:
-    - engine='fold' (default, oracle-mirrorable): the replace chain
-      SEGMENTED every merge_chunk_size ranks (default BPE_FOLD_CHUNK)
-      via _bpe_fold_vocab — a 32k-merge table replays as ~vocab-sized
-      checkpointed passes instead of one 32k-deep Catalyst expression
-      (codegen/analyzer walls; unchunked, 1k ranks is a driver
-      StackOverflowError at analysis).
-    - engine='arrow': the classic per-word merge loop as a pandas UDF
-      over the distinct vocabulary (_bpe_arrow_tokenize_vocab) —
-      per-word cost independent of table depth, ONE vocab pass at any
-      num_merges. Not SQL-expressible, so graded surfaces stay on the
-      fold; production replays of registered 32k tables want this."""
+    vocab_tokens: a precomputed (w, toks) tokenized vocabulary
+    (bpe_vocab_tokens_local) — replaces the distinct-vocabulary scan
+    + fold with one broadcast local table; must cover every piece of
+    df (a missing word RAISES at action time rather than silently
+    undercounting)."""
     d = BPE_DELIM
     table = merges if merges is not None else BPE_MERGES
-    if engine not in ("fold", "arrow"):
-        raise ValueError(
-            f"bpe_token_counts: engine must be 'fold' or 'arrow', "
-            f"got {engine!r}"
-        )
     per_doc_word = _bpe_pieces(df, text_col, [id_col]).groupBy(
         id_col, "w"
     ).agg(F.count(F.lit(1)).alias("occ"))
     if vocab_tokens is not None:
+        vocab, how = F.broadcast(vocab_tokens), "left"
         nt = F.when(
             F.col("toks").isNotNull(), F.size("toks").cast("bigint")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "bpe_token_counts: word piece missing from the"
-                        " precomputed vocab_tokens vocabulary: '"
-                    ),
-                    F.col("w"),
-                    F.lit("'"),
-                )
-            ).cast("bigint")
-        )
-        sums = (
-            per_doc_word.join(F.broadcast(vocab_tokens), "w", "left")
-            .groupBy(id_col)
-            .agg(F.sum(F.col("occ") * nt).alias(out_col))
-        )
-        return df.select(id_col).join(sums, id_col, "left").select(
-            F.col(id_col),
-            F.coalesce(F.col(out_col), F.lit(0)).cast("bigint")
-            .alias(out_col),
-        )
-    distinct_w = per_doc_word.select("w").distinct()
-    if engine == "arrow":
-        vocab = _bpe_arrow_tokenize_vocab(distinct_w, table).select(
-            "w", F.size("toks").cast("bigint").alias("nt")
-        )
+        ).otherwise(_missing_piece_error("bpe_token_counts").cast("bigint"))
     else:
         folded = _bpe_fold_vocab(
-            distinct_w.select("w", _bpe_wrap(F.col("w")).alias("_enc")),
+            per_doc_word.select("w").distinct()
+            .select("w", _bpe_wrap(F.col("w")).alias("_enc")),
             table,
-            chunk_size=merge_chunk_size,
         )
         n_delims = F.length("_enc") - F.length(
             F.replace(F.col("_enc"), F.lit(d), F.lit(""))
@@ -379,10 +319,11 @@ def bpe_token_counts(
         vocab = folded.select(
             "w", (n_delims / F.lit(2)).cast("bigint").alias("nt")
         )
+        how, nt = "inner", F.col("nt")
     sums = (
-        per_doc_word.join(vocab, "w")
+        per_doc_word.join(vocab, "w", how)
         .groupBy(id_col)
-        .agg(F.sum(F.col("occ") * F.col("nt")).alias(out_col))
+        .agg(F.sum(F.col("occ") * nt).alias(out_col))
     )
     return df.select(id_col).join(sums, id_col, "left").select(
         F.col(id_col),
@@ -394,19 +335,13 @@ def _bpe_local_merge_loop(
     vocab: list[tuple[str, int]], num_merges: int
 ) -> list[tuple[str, str]]:
     """The Sennrich merge loop over an ALREADY-COLLECTED (word, count)
-    vocabulary — bpe_train's collect_vocab=True engine. Incremental
-    pair statistics (only words containing the elected pair are
-    re-scanned per merge — the update discipline of the public
-    subword-nmt learn_bpe.py) plus a lazy-deletion heap make each
-    election O(log |pairs|) amortized instead of a full vocabulary
-    scan, so 32k merges over a few-million-word pruned vocabulary is
-    minutes of driver CPU, not hours of Spark job scheduling.
-
-    Election semantics are IDENTICAL to the distributed loop: max
-    summed count, ties broken lexicographically on (left, right) code
-    points (== UTF-8 byte order == the encode()-sorted Spark orderBy
-    == DuckDB memcmp); overlapping adjacencies count; the per-word
-    merge scan is left-to-right non-overlapping. Result order is
+    vocabulary — bpe_train's engine. Incremental pair statistics (only
+    words containing the elected pair are re-scanned per merge — the
+    update discipline of the public subword-nmt learn_bpe.py) plus a
+    lazy-deletion heap make each election O(log |pairs|) amortized
+    instead of a full vocabulary scan, so 32k merges over a
+    few-million-word pruned vocabulary is minutes of driver CPU.
+    Elections follow bpe_train's contract. Result order is
     independent of the input list's order (the heap key is the full
     (-count, pair) tuple — a total order)."""
     import heapq
@@ -483,137 +418,35 @@ def bpe_train(
     df: DataFrame,
     num_merges: int = 20,
     text_col: str = "text",
-    collect_vocab: bool = False,
     min_count: int = 1,
 ) -> list[tuple[str, str]]:
-    """TRAIN a BPE merges table on the corpus (round 11) — the public
-    Sennrich et al. 2016 algorithm, distributed: start from the
-    per-symbol-wrapped character encoding of the DISTINCT word-piece
-    vocabulary (with occurrence counts — the Zipf economy: every
-    iteration works on |vocab| rows, never |corpus tokens|), then
-    num_merges times (a) count adjacent symbol pairs weighted by word
-    frequency — overlapping adjacencies count, exactly get_stats —
-    (b) elect the most frequent pair (ties broken lexicographically on
-    (left, right) UTF-8 BYTES — Spark sorts the encoded binary, so
-    the order matches DuckDB's memcmp and Python's code-point
-    comparison for every input including supplementary-plane
-    symbols), (c) merge it everywhere with the one
-    literal-replace scan bpe_token_count_expr replays.
+    """TRAIN a BPE merges table on the corpus — the public Sennrich et
+    al. 2016 algorithm. One distributed corpus scan counts the
+    word-piece vocabulary, drops pieces seen fewer than `min_count`
+    times, and collects the survivors (bounded driver state by Heaps'
+    law: a 100 TB web corpus's >=5-count word-piece vocabulary is a
+    few million rows, tens of MB); the merge loop then runs in memory
+    (_bpe_local_merge_loop, via bpe_train_collected).
 
-    Per-iteration shape: ONE driver action — the 1-row argmax collect
-    over the vocab-sized pair-count groupBy (map-side combinable); the
-    merge IS a driver decision, num_merges scheduling points, same as
-    any iterative algorithm here. The string replace + lineage cut
-    between elections is a LAZY localCheckpoint whose blocks
-    materialize inside the next election's collect (keeps iteration
-    i's scan from replaying i-1 replace chains without paying a
-    second blocking job per merge).
-    Returns the ranked merge list — bounded driver state (num_merges
-    pairs), feed it straight to bpe_token_counts(merges=...) or
-    persist it as store state.
+    Election contract (the DuckDB oracle re-derives every election):
+    - each merge elects the adjacent symbol pair with the largest
+      occurrence-weighted count; overlapping adjacencies count
+      (get_stats semantics: 'aaa' holds two ('a', 'a') pairs);
+    - ties break lexicographically on the (left, right) UTF-8 BYTES
+      (Python compares code points, and code-point order == UTF-8
+      byte order == DuckDB's memcmp, for every input including
+      supplementary-plane symbols);
+    - the elected pair merges left-to-right, non-overlapping, in every
+      word — the literal-replace scan bpe_token_count_expr replays;
+    - running out of adjacent pairs before num_merges RAISES (a toy
+      corpus asking for more merges than it has adjacencies is a
+      config error, not a silently shorter table).
 
-    Raises when the pair inventory runs dry before num_merges (a toy
-    corpus asking for more merges than it has adjacencies is a config
-    error, not a silent shorter table).
-
-    PRODUCTION MERGE COUNTS (collect_vocab=True): the distributed
-    loop schedules 2-3 Spark jobs per merge — perfect for auditing 20
-    elections against the DuckDB oracle, hopeless for a realistic
-    32k-vocab tokenizer (~10^5 sequential driver round-trips). The
-    fast path keeps the ONE distributed corpus scan (word-piece
-    counts), prunes the counted vocabulary by `min_count`, collects
-    the surviving (word, count) rows — bounded driver state by the
-    same Heaps'-law argument SCALE.md already makes for the
-    per-iteration work (a 100 TB web corpus's >=5-count word-piece
-    vocabulary is a few million rows, tens of MB), and runs the merge
-    loop in memory with incremental pair statistics
-    (_bpe_local_merge_loop). Elections are IDENTICAL to the
-    distributed loop under the same min_count
-    (equivalence-pytested); min_count > 1 changes elections exactly
-    as pruning the vocabulary changes pair counts — pass the same
-    value to both paths when comparing. min_count applies to either
-    path."""
-    if num_merges < 1:
-        raise ValueError(f"bpe_train: num_merges must be >= 1, got {num_merges}")
-    if min_count < 1:
-        raise ValueError(f"bpe_train: min_count must be >= 1, got {min_count}")
-    piece_counts = (
-        _bpe_pieces(df, text_col, [])
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    if min_count > 1:
-        piece_counts = piece_counts.where(F.col("c") >= min_count)
-    if collect_vocab:
-        return bpe_train_collected(
-            df, num_merges, text_col=text_col, min_count=min_count
-        )[0]
-    d = BPE_DELIM
-    # round 14 (guide §1.2 step 1 — fewer sequential driver round-trips):
-    # every lineage cut in the training loop is LAZY. Iteration i's
-    # 1-row argmax collect computes the full pair-count aggregate, so it
-    # materializes the (lazily) checkpointed vocab blocks as a side
-    # effect — one driver action per election instead of the previous
-    # collect + eager-checkpoint pair (41 jobs → 20 at num_merges=20).
-    # Plan depth between materializations stays at ONE replace.
-    vocab = (
-        piece_counts
-        .select("w", "c", _bpe_wrap(F.col("w")).alias("toks"))
-        .localCheckpoint(eager=False)
-    )
-    merges: list[tuple[str, str]] = []
-    for i in range(num_merges):
-        arr = F.split(
-            F.expr("substring(toks, 2, length(toks) - 2)"), d + d
-        )
-        n = F.greatest(F.size(arr) - 1, F.lit(0))
-        prs = F.zip_with(
-            F.slice(arr, 1, n),
-            F.slice(arr, 2, n),
-            lambda x, y: F.struct(x.alias("l"), y.alias("r")),
-        )
-        best = (
-            vocab.select("c", F.explode(prs).alias("p"))
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("c").alias("cnt"))
-            .orderBy(
-                F.desc("cnt"),
-                # tie-break on UTF-8 BYTES, not the string: Spark's
-                # string comparison is UTF-16 code-unit order, where
-                # supplementary-plane symbols (surrogate pairs,
-                # 0xD800..) sort BELOW high-BMP chars — but DuckDB
-                # compares UTF-8 bytes (memcmp) and Python compares
-                # code points, and UTF-8 byte order == code-point
-                # order. Sorting the encoded bytes (binary sorts
-                # unsigned-bytewise) aligns all three engines for
-                # EVERY input, not just BMP/ASCII corpora.
-                F.encode("l", "UTF-8"),
-                F.encode("r", "UTF-8"),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            raise ValueError(
-                f"bpe_train: pair inventory exhausted at merge {i} of "
-                f"{num_merges} — the corpus has no adjacent symbols left"
-            )
-        left, right = best[0]["l"], best[0]["r"]
-        merges.append((left, right))
-        if i == num_merges - 1:
-            # the post-final-merge vocab is never read again — skip the
-            # replace + cut outright (one fewer job than eager, zero
-            # dangling plan either way)
-            break
-        vocab = vocab.withColumn(
-            "toks",
-            F.replace(
-                F.col("toks"),
-                F.lit(d + left + d + d + right + d),
-                F.lit(d + left + right + d),
-            ),
-        ).localCheckpoint(eager=False)
-    return merges
+    min_count > 1 changes elections exactly as pruning the vocabulary
+    changes pair counts. Returns the ranked merge list — feed it
+    straight to bpe_token_counts(merges=...) or persist it as store
+    state."""
+    return bpe_train_collected(df, num_merges, text_col, min_count)[0]
 
 
 def bpe_train_collected(
@@ -622,15 +455,11 @@ def bpe_train_collected(
     text_col: str = "text",
     min_count: int = 1,
 ) -> tuple[list[tuple[str, str]], list[tuple[str, int]]]:
-    """bpe_train's collect_vocab=True engine, ALSO returning the
-    collected (word, count) piece vocabulary (round 14,
-    optimization): composition pipelines that train AND THEN encode/
-    count/id the same corpus re-derive the distinct-word and alphabet
+    """bpe_train, ALSO returning the collected (word, count) piece
+    vocabulary: composition pipelines that train AND THEN encode/
+    count/id the same corpus derive the distinct-word and alphabet
     frames from this one collect instead of re-scanning the corpus
-    per derived surface (guide §1.2: remove passes). The vocabulary
-    is bounded driver state by the same Heaps'-law contract as
-    collect_vocab itself. Elections are the collect_vocab path's,
-    verbatim."""
+    per derived surface."""
     if num_merges < 1:
         raise ValueError(
             f"bpe_train: num_merges must be >= 1, got {num_merges}"
@@ -656,15 +485,15 @@ def bpe_vocab_tokens_local(
     merges: list[tuple[str, str]],
 ) -> DataFrame:
     """Tokenize an ALREADY-COLLECTED distinct-word vocabulary in the
-    driver (round 14, optimization): (w, toks array<string>) as a
-    local table. The per-word merge loop is the arrow kernel's own
-    `_bpe_apply_merges_py` — identical output to the replace fold by
-    the pinned fold==arrow equivalence — so passing this frame as
-    `vocab_tokens=` to bpe_token_counts / bpe_encode removes the
-    distinct-vocabulary corpus scan AND the fold from the plan while
-    computing the exact same tokenization. Bounded driver state by
-    the bpe_train collect contract (Heaps'-law vocabulary); at
-    32k-merge depth the loop is depth-independent, same as arrow."""
+    driver: (w, toks array<string>) as a local table, each word run
+    through the classic per-word merge loop (_bpe_apply_merges_py).
+    The tokenization equals the replace fold's, so passing this frame
+    as `vocab_tokens=` to bpe_token_counts / bpe_encode removes the
+    distinct-vocabulary corpus scan AND the fold from the plan (pinned
+    by tests/test_pipeline.py::test_bpe_local_vocab_frames_equal_distributed).
+    Bounded driver state by the bpe_train collect contract
+    (Heaps'-law vocabulary); per-word cost is independent of table
+    depth."""
     table = list(merges)
     ranks = {pair: i for i, pair in enumerate(table)}
     return spark.createDataFrame(
@@ -678,16 +507,15 @@ def bpe_vocab_local(
     words: list[str],
     merges: list[tuple[str, str]],
 ) -> DataFrame:
-    """bpe_vocab computed from an ALREADY-COLLECTED word list (round
-    14, optimization): identical (token_id, token, is_merged) rows —
-    base alphabet = distinct characters of `words` in UTF-8 byte
-    order (Python sorts the encoded bytes; UTF-8 byte order ==
-    code-point order, the same cross-engine argument bpe_train
-    makes), merges at alphabet_size + rank, duplicate surfaces
-    resolved exactly like the distributed groupBy (min token_id,
-    OR of is_merged). Replaces bpe_vocab's two corpus scans with a
-    local table when the caller already holds the piece vocabulary
-    (bpe_train_collected)."""
+    """bpe_vocab computed from an ALREADY-COLLECTED word list:
+    identical (token_id, token, is_merged) rows — base alphabet =
+    distinct characters of `words` in UTF-8 byte order (Python sorts
+    the encoded bytes; UTF-8 byte order == code-point order, the same
+    cross-engine argument bpe_train makes), merges at alphabet_size +
+    rank, duplicate surfaces resolved exactly like the distributed
+    groupBy (min token_id, OR of is_merged). Replaces bpe_vocab's two
+    corpus scans with a local table when the caller already holds the
+    piece vocabulary (bpe_train_collected)."""
     chars = sorted(
         {ch for w in words for ch in w}, key=lambda c: c.encode("utf-8")
     )
@@ -713,43 +541,30 @@ def bpe_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
     merges: list[tuple[str, str]] | None = None,
-    merge_chunk_size: int | None = None,
-    engine: str = "fold",
     vocab_tokens: DataFrame | None = None,
 ) -> DataFrame:
-    """ENCODE the corpus under a merges table (round 11) — the actual
-    tokenizer output, not just counts: (id, pos, token) rows where pos
-    is the 0-based token offset within the document and token is the
-    surface form (merged symbol string). BPE_MERGES by default; pass
+    """ENCODE the corpus under a merges table — the actual tokenizer
+    output, not just counts: (id, pos, token) rows where pos is the
+    0-based token offset within the document and token is the surface
+    form (merged symbol string). BPE_MERGES by default; pass
     bpe_train's output to encode under a corpus-trained table.
 
     Plan: word pieces with their in-doc order (posexplode), the
     replace fold over the DISTINCT vocabulary only (Zipf economy, same
-    as counting), tokens recovered by splitting the folded symbol
-    string, and one PER-DOCUMENT window to lay (word idx, sub idx)
-    into a flat token offset — partitioned by doc, so the sort is
-    bounded by one document's tokens, never corpus-global.
+    as counting, segmented every BPE_FOLD_CHUNK ranks), tokens
+    recovered by splitting the folded symbol string, and one
+    PER-DOCUMENT window to lay (word idx, sub idx) into a flat token
+    offset — partitioned by doc, so the sort is bounded by one
+    document's tokens, never corpus-global.
 
-    Production merge counts (round 13): engine='fold' segments every
-    merge_chunk_size ranks (_bpe_fold_vocab) so 32k-merge production
-    tables encode without hitting the codegen/analyzer expression
-    walls; engine='arrow' tokenizes the distinct vocabulary with the
-    per-word Arrow kernel (one vocab pass at any table depth — see
-    bpe_token_counts). Fixture-sized tables keep the round-12
-    single-expression fold plan.
-
-    vocab_tokens (round 14, optimization): a precomputed (w, toks)
-    tokenized-vocabulary frame (bpe_vocab_tokens_local) — removes the
-    distinct-vocabulary corpus scan and the fold from the plan; the
-    join becomes one broadcast of the local table. MUST cover every
-    word piece of df (the bpe_train_collected contract: df's pieces
-    are a subset of the training corpus's); a missing word RAISES at
-    action time instead of silently dropping its tokens."""
+    vocab_tokens: a precomputed (w, toks) tokenized-vocabulary frame
+    (bpe_vocab_tokens_local) — removes the distinct-vocabulary corpus
+    scan and the fold from the plan; the join becomes one broadcast of
+    the local table. MUST cover every word piece of df (the
+    bpe_train_collected contract: df's pieces are a subset of the
+    training corpus's); a missing word RAISES at action time instead
+    of silently dropping its tokens."""
     d = BPE_DELIM
-    if engine not in ("fold", "arrow"):
-        raise ValueError(
-            f"bpe_encode: engine must be 'fold' or 'arrow', got {engine!r}"
-        )
     pw = df.select(
         F.col(id_col),
         F.posexplode(
@@ -760,53 +575,24 @@ def bpe_encode(
     )
     table = merges if merges is not None else BPE_MERGES
     if vocab_tokens is not None:
-        w = Window.partitionBy(id_col).orderBy("_wpos", "_tpos")
-        guarded = F.when(
-            F.col("toks").isNotNull(), F.col("toks")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "bpe_encode: word piece missing from the"
-                        " precomputed vocab_tokens vocabulary: '"
-                    ),
-                    F.col("w"),
-                    F.lit("'"),
-                )
-            ).cast("array<string>")
+        vocab, how = F.broadcast(vocab_tokens), "left"
+        toks = F.when(F.col("toks").isNotNull(), F.col("toks")).otherwise(
+            _missing_piece_error("bpe_encode").cast("array<string>")
         )
-        return (
-            pw.join(F.broadcast(vocab_tokens), "w", "left")
-            .select(
-                F.col(id_col),
-                "_wpos",
-                F.posexplode(guarded).alias("_tpos", "token"),
-            )
-            .select(
-                F.col(id_col),
-                (F.row_number().over(w) - 1).cast("bigint").alias("pos"),
-                "token",
-            )
-        )
-    if engine == "arrow":
-        vocab = _bpe_arrow_tokenize_vocab(
-            pw.select("w").distinct(), table
-        )
-        toks = F.col("toks")
     else:
         vocab = _bpe_fold_vocab(
             pw.select("w")
             .distinct()
             .select("w", _bpe_wrap(F.col("w")).alias("_enc")),
             table,
-            chunk_size=merge_chunk_size,
         )
+        how = "inner"
         toks = F.split(
             F.expr("substring(_enc, 2, length(_enc) - 2)"), d + d
         )
     w = Window.partitionBy(id_col).orderBy("_wpos", "_tpos")
     return (
-        pw.join(vocab, "w")
+        pw.join(vocab, "w", how)
         .select(
             F.col(id_col),
             "_wpos",
@@ -827,8 +613,8 @@ def bpe_decode(
     token_col: str = "token",
     out_col: str = "decoded",
 ) -> DataFrame:
-    """DECODE bpe_encode's output back to text (round 12): concatenate
-    each document's tokens in pos order. BPE merges are purely
+    """DECODE bpe_encode's output back to text: concatenate each
+    document's tokens in pos order. BPE merges are purely
     concatenative (a merge glues two symbol strings; no symbol is
     ever rewritten), so decode(encode(text)) reproduces text EXACTLY
     up to the pre-tokenizer's declared canonicalization — lowercasing
@@ -886,7 +672,7 @@ def bpe_vocab(
     merges: list[tuple[str, str]] | None = None,
     text_col: str = "text",
 ) -> DataFrame:
-    """The trained tokenizer's VOCABULARY as an id table (round 12):
+    """The trained tokenizer's VOCABULARY as an id table:
     (token_id, token, is_merged). Base alphabet = the distinct single
     characters of the corpus's word pieces, ids 0..n-1 in UTF-8 byte
     order (engine-neutral, the bpe_train tie-break order); merged
@@ -941,12 +727,10 @@ def bpe_encode_ids(
     id_col: str = "doc_id",
     merges: list[tuple[str, str]] | None = None,
     vocab: DataFrame | None = None,
-    merge_chunk_size: int | None = None,
-    engine: str = "fold",
     vocab_tokens: DataFrame | None = None,
 ) -> DataFrame:
-    """bpe_encode's stream with token IDS (round 12) — what a
-    training pipeline actually consumes: (id, pos, token_id). One
+    """bpe_encode's stream with token IDS — what a training
+    pipeline actually consumes: (id, pos, token_id). One
     broadcast-sized join from the surface stream onto bpe_vocab
     (vocabulary rows = alphabet + num_merges). Pass the TRAINING
     corpus's vocab explicitly when encoding a subset or a later
@@ -954,27 +738,17 @@ def bpe_encode_ids(
     batch's own alphabet (the default derives from df, correct only
     when df IS the training corpus).
 
-    OOV contract (round 13): the join is a LEFT join and a genuinely
+    OOV contract: the join is a LEFT join and a genuinely
     out-of-vocabulary surface token (a character the registered
     vocabulary never saw at training time — exactly the
     later-batch case the paragraph above endorses) RAISES at action
-    time via raise_error, naming the offending token. The previous
-    inner join silently dropped such tokens, leaving gaps in the pos
-    stream — contradicting the no-OOV round-trip contract. When df's
-    own vocab is derived (vocab=None) the branch is dead by
-    construction (every char is a base symbol); it exists for the
-    registered-vocab path.
+    time via raise_error, naming the offending token, instead of
+    leaving a gap in the pos stream. When df's own vocab is derived
+    (vocab=None) the branch is dead by construction (every char is a
+    base symbol); it exists for the registered-vocab path.
 
-    merge_chunk_size / engine (round 14 — ADVICE r13 low): forwarded
-    to the internal bpe_encode, so id-level encoding under a
-    registered 32k-merge table can use the depth-independent Arrow
-    kernel instead of always paying the ~167-segment checkpointed
-    fold. Defaults unchanged (the oracle-mirrorable fold)."""
-    enc = bpe_encode(
-        df, text_col, id_col, merges,
-        merge_chunk_size=merge_chunk_size, engine=engine,
-        vocab_tokens=vocab_tokens,
-    )
+    vocab_tokens is forwarded to bpe_encode."""
+    enc = bpe_encode(df, text_col, id_col, merges, vocab_tokens=vocab_tokens)
     v = (vocab if vocab is not None else bpe_vocab(df, merges, text_col))
     joined = enc.join(
         F.broadcast(v.select("token", "token_id")), "token", "left"
@@ -1134,7 +908,7 @@ def shingle_rows(
     "near-dup" pairs of contentless documents. Exact dedup still
     handles them (md5-group semantics).
 
-    Round 14: the explode gets the scale-adaptive fan-out floor
+    The explode gets the scale-adaptive fan-out floor
     (ensure_fanout_parallelism) — shingling multiplies rows by ~doc
     word count, and a one-row-group local file otherwise runs the
     whole dedup funnel's extraction on one core. No-op at scale."""
@@ -1176,7 +950,7 @@ def positional_shingle_rows(
 
     t = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
     grams = F.regexp_extract_all(t, F.lit(_shingle_regex(k)), 1)
-    # round 14: same fan-out floor as shingle_rows (no-op at scale)
+    # same fan-out floor as shingle_rows (no-op at scale)
     return ensure_fanout_parallelism(
         df.select(F.col(id_col), F.col(text_col))
     ).select(
@@ -1633,7 +1407,7 @@ def char_trigram_rows(
     ids = [F.col(id_col)] if id_col is not None else []
     id_names = [id_col] if id_col is not None else []
     # trigram fan-out is ~|text| rows per doc — floor the stage's
-    # parallelism (round 14; no-op at scan-split-rich scale)
+    # parallelism (no-op at scan-split-rich scale)
     base = ensure_fanout_parallelism(
         df.select(*ids, F.col(text_col).alias("_t")).filter(
             F.length("_t") >= 3
@@ -1660,9 +1434,9 @@ def train_char_trigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Scale shape: ONE hash aggregation over (tri) — map-side combined
     to ≤|charset|³ rows — then the bigram sums as a window over the
-    aggregate (round 14, guide §2.4: the separate groupBy(bi) +
-    self-join re-ran the whole corpus explode subtree for the bigram
-    side; a window partitioned by the bigram computes the identical
+    aggregate (a separate groupBy(bi) + self-join would re-run the
+    whole corpus explode subtree for the bigram side; a window
+    partitioned by the bigram computes the identical
     integer sums over the already-aggregated trigram rows — one
     corpus pass instead of two, window work bounded by trigram
     CARDINALITY, never corpus size). The model frame stays
@@ -1847,7 +1621,7 @@ def drop_reason_histogram(
     weight_col: str = "n_words",
 ) -> DataFrame:
     """The drop-reason HISTOGRAM gopher_quality's docstring promises
-    (round 13) — per rule, how many documents and how much word mass
+    — per rule, how many documents and how much word mass
     a 100 TB filter pass would drop BECAUSE of it: explode the
     comma-joined fail reasons of non-kept docs, one groupBy. A doc
     failing k rules counts in each of the k rows (the per-rule

@@ -6646,10 +6646,8 @@ ORDER BY d.doc_id
 """
 
 
-# Mirrors q_bpe_train_fast: the collected-vocabulary driver loop is
-# election-identical to the distributed loop by contract (equivalence
-# pytest at full merge depth), so the SAME 20-stage election chain
-# grades both implementations.
+# Mirrors q_bpe_train_fast, which the registry maps to the same query
+# function as q_bpe_train: the SAME 20-stage election chain grades it.
 ORACLES["q_bpe_train_fast"] = ORACLES["q_bpe_train"]
 
 

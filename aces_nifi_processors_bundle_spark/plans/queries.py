@@ -58,22 +58,17 @@ def _trained_tokenizer(
 ) -> tuple[list[tuple[str, str]], DataFrame, list[str]]:
     """The 20-merge corpus-trained tokenizer every trained-tokenizer
     composition query starts from, with its driver-local derived
-    frames (round 14, optimization, guide §1.2 — remove passes).
+    frames.
 
-    The merge elections use bpe_train's collect_vocab engine:
-    contractually identical to the distributed loop (equivalence
-    pytest-pinned; BOTH paths stay graded against the same DuckDB
-    election oracle via q_bpe_train / q_bpe_train_fast), with the
-    in-memory merge loop replacing ~40 sequential driver-round-trip
-    jobs — measured 4.4 s -> 0.8 s per composition query at sf0.1.
-
-    The SAME piece-vocabulary collect also yields (a) the tokenized
-    vocabulary (w, toks) local table bpe_encode / bpe_token_counts
-    broadcast instead of re-scanning the corpus for the distinct-word
-    fold, and (b) the distinct word list bpe_vocab_local derives the
-    id table from instead of bpe_vocab's two corpus scans. The
-    derived frames are pinned row-identical to their distributed
-    siblings in tests/test_text.py."""
+    The merge elections are bpe_train's (graded against the DuckDB
+    election oracle by q_bpe_train). The SAME piece-vocabulary collect
+    also yields (a) the tokenized vocabulary (w, toks) local table
+    bpe_encode / bpe_token_counts broadcast instead of re-scanning the
+    corpus for the distinct-word fold, and (b) the distinct word list
+    bpe_vocab_local derives the id table from instead of bpe_vocab's
+    two corpus scans. The derived frames are pinned row-identical to
+    their distributed siblings by
+    tests/test_pipeline.py::test_bpe_local_vocab_frames_equal_distributed."""
     from ..pipeline.text import bpe_train_collected, bpe_vocab_tokens_local
 
     merges, vocab = bpe_train_collected(docs.select("text"), num_merges=20)
@@ -889,40 +884,22 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRAINED BPE merge table (pipeline/text.py::bpe_train, round 11):
-    the public Sennrich et al. 2016 algorithm run distributedly over
-    the documents corpus — 20 ranked merges, each elected by a
-    vocabulary-sized weighted pair count (overlapping adjacencies,
-    get_stats semantics) with a lexicographic tie-break, applied via
-    the same per-symbol-delimited literal-replace scan the counting
-    fold replays. The oracle re-derives every election: 20 chained
-    MATERIALIZED CTE stages, each recomputing pair counts and the
-    argmax — the training ARITHMETIC is what the gate checks, not a
-    stored table."""
+    """TRAINED BPE merge table (pipeline/text.py::bpe_train): the
+    public Sennrich et al. 2016 algorithm over the documents corpus —
+    one distributed scan collects the counted word-piece vocabulary,
+    then the collected trainer elects 20 ranked merges, each by a
+    weighted pair count (overlapping adjacencies, get_stats semantics)
+    with a UTF-8-byte tie-break. Registered as both q_bpe_train and
+    q_bpe_train_fast: both names grade this collected trainer. The
+    oracle re-derives every election: 20 chained MATERIALIZED CTE
+    stages, each recomputing pair counts and the argmax — the training
+    ARITHMETIC is what the gate checks, not a stored table."""
     from ..pipeline.text import bpe_merges_df, bpe_train
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     return bpe_merges_df(spark, bpe_train(docs, num_merges=20)).orderBy(
         "rank"
     )
-
-
-def q_bpe_train_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-merge-count training path under the same oracle
-    gate as q_bpe_train (round 12): bpe_train(collect_vocab=True)
-    keeps the one distributed corpus scan, collects the counted
-    word-piece vocabulary (bounded driver state — Heaps' law), and
-    runs the merge loop in memory with incremental pair statistics —
-    the path that makes a 32k-vocab tokenizer feasible (the
-    distributed loop schedules 2-3 Spark jobs per merge). Elections
-    are contractually identical, so the 20-stage DuckDB election
-    oracle grades BOTH implementations against the same arithmetic."""
-    from ..pipeline.text import bpe_merges_df, bpe_train
-
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    return bpe_merges_df(
-        spark, bpe_train(docs, num_merges=20, collect_vocab=True)
-    ).orderBy("rank")
 
 
 def q_token_count_trained(spark: SparkSession, sf_dir: str) -> DataFrame:

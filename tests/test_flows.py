@@ -1095,25 +1095,35 @@ def test_dsir_select_stage_filters_to_kept(spark, sf_dir):
     assert got == {r["doc_id"]: r["kept"] for r in direct}
 
 
-def test_bpe_train_stage_collect_vocab_path(spark, sf_dir, tmp_path):
-    """The canvas trainer's production knob: collect_vocab=True must
-    persist the IDENTICAL merge table (election equivalence holds
-    through the flow layer and the store round-trip)."""
+def test_bpe_train_stage_passes_min_count(spark, sf_dir, tmp_path):
+    """The canvas trainer forwards min_count: the persisted table
+    equals a direct bpe_train call with the same pruning (through the
+    store round-trip). The removed collect_vocab knob is rejected."""
     from aces_nifi_processors_bundle_spark.flows import build_flow
+    from aces_nifi_processors_bundle_spark.pipeline.text import (
+        bpe_train,
+        bpe_train_collected,
+    )
 
-    slow = build_flow(spark, [
+    docs = load_table(spark, sf_dir, "documents")
+    # just above the rarest piece's count: pruning drops a word
+    mc = min(c for _, c in bpe_train_collected(docs, num_merges=1)[1]) + 1
+    want = bpe_train(docs, num_merges=30, min_count=mc)
+    assert want != bpe_train(docs, num_merges=30)  # min_count matters
+    got = build_flow(spark, [
         {"op": "load", "table": "documents"},
-        {"op": "bpe_train", "path": str(tmp_path / "m1"),
-         "num_merges": 8},
+        {"op": "bpe_train", "path": str(tmp_path / "m"),
+         "num_merges": 30, "min_count": mc},
     ], sf_dir).collect()
-    fast = build_flow(spark, [
-        {"op": "load", "table": "documents"},
-        {"op": "bpe_train", "path": str(tmp_path / "m2"),
-         "num_merges": 8, "collect_vocab": True, "min_count": 1},
-    ], sf_dir).collect()
-    assert [
-        (r["rank"], r["lhs"], r["rhs"]) for r in slow
-    ] == [(r["rank"], r["lhs"], r["rhs"]) for r in fast]
+    assert [(r["rank"], r["lhs"], r["rhs"]) for r in got] == [
+        (i, a, b) for i, (a, b) in enumerate(want)
+    ]
+    with pytest.raises(TypeError, match="collect_vocab"):
+        build_flow(spark, [
+            {"op": "load", "table": "documents"},
+            {"op": "bpe_train", "path": str(tmp_path / "m2"),
+             "num_merges": 8, "collect_vocab": True},
+        ], sf_dir)
 
 
 def test_dsir_fit_score_registered_lifecycle(spark, sf_dir, tmp_path):

@@ -1675,19 +1675,23 @@ def test_bpe_token_counts_per_doc(spark):
     assert got == {1: 3, 2: 0, 3: 0, 4: 5}
 
 
-def test_bpe_fold_chunked_equals_unchunked(spark):
-    """The production-merge-count envelope (round 13): segmenting the
-    replace chain every merge_chunk_size ranks (localCheckpoint plan
-    cuts) must reproduce the single-expression fold EXACTLY — counts
-    AND the full encode stream — for chunk sizes that split the table
-    at every alignment, including mid-composite-dependency. Also: a
-    SYNTHETIC >=1k-rank table (the chain ('a','b'), ('ab','b'), ... —
+def test_bpe_fold_chunked_equals_unchunked(spark, monkeypatch):
+    """Both sides of the BPE_FOLD_CHUNK switch: segmenting the replace
+    chain every BPE_FOLD_CHUNK ranks (localCheckpoint plan cuts) must
+    reproduce the single-expression fold EXACTLY — counts AND the
+    full encode stream — for chunk sizes that split the table at
+    every alignment, including mid-composite-dependency. Also: a
+    SYNTHETIC 1k-rank table (the chain ('a','b'), ('ab','b'), ... —
     each rank consumes the previous rank's output, the worst
-    dependency shape) folds correctly chunked, where the unchunked
+    dependency shape) tokenizes identically through the default
+    chunked fold and through the driver-local per-word merge loop
+    (vocab_tokens=bpe_vocab_tokens_local), where the unchunked
     expression would be a 1k-deep Catalyst tree."""
+    from aces_nifi_processors_bundle_spark.pipeline import text
     from aces_nifi_processors_bundle_spark.pipeline.text import (
         bpe_encode,
         bpe_token_counts,
+        bpe_vocab_tokens_local,
     )
 
     df = spark.createDataFrame(
@@ -1695,30 +1699,44 @@ def test_bpe_fold_chunked_equals_unchunked(spark):
          (3, "internationalization routines"), (4, "")],
         "doc_id long, text string",
     )
+    assert len(text.BPE_MERGES) < text.BPE_FOLD_CHUNK  # unchunked side
     base_counts = sorted(
         map(tuple, bpe_token_counts(df).collect())
     )
     base_enc = sorted(map(tuple, bpe_encode(df).collect()))
     for ck in (1, 3, 7, 64):
+        monkeypatch.setattr(text, "BPE_FOLD_CHUNK", ck)
         assert sorted(map(tuple, bpe_token_counts(
-            df, merge_chunk_size=ck).collect())) == base_counts, ck
+            df).collect())) == base_counts, ck
         assert sorted(map(tuple, bpe_encode(
-            df, merge_chunk_size=ck).collect())) == base_enc, ck
-    # >=1k ranks, every rank dependent on its predecessor: 'a' + 'b'*n
+            df).collect())) == base_enc, ck
+    monkeypatch.undo()
+    # 1k ranks, every rank dependent on its predecessor: 'a' + 'b'*n
     # tokenizes to exactly ONE token once all n merges applied, and to
     # (n - m + 1) tokens under the first m merges.
     n = 1000
     chain = [("a" + "b" * i, "b") for i in range(n)]
+    assert n > text.BPE_FOLD_CHUNK  # chunked side at the default
     big = spark.createDataFrame(
         [(1, "a" + "b" * n), (2, "a" + "b" * 400), (3, "bb a")],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
-        big, merges=chain, merge_chunk_size=100).collect()}
     # doc 1: a+b^1000 -> single token; doc 2: a+b^400 -> 'ab^400' is
     # rank 400's output, fully merged -> 1; doc 3: 'bb' never merges
-    # (no 'a' anchor) -> 2 tokens + 'a' -> 3 total... 'a' alone = 1.
-    assert got == {1: 1, 2: 1, 3: 3}
+    # (no 'a' anchor) -> 2 tokens, plus 'a' alone = 1 -> 3 total.
+    want = {1: 1, 2: 1, 3: 3}
+    got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
+        big, merges=chain).collect()}
+    assert got == want
+    vt = bpe_vocab_tokens_local(
+        spark, ["a" + "b" * n, "a" + "b" * 400, "bb", "a"], chain
+    )
+    got_local = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
+        big, merges=chain, vocab_tokens=vt).collect()}
+    assert got_local == want
+    assert sorted(map(tuple, bpe_encode(
+        big, merges=chain, vocab_tokens=vt).collect())) == sorted(
+        map(tuple, bpe_encode(big, merges=chain).collect()))
 
 
 def test_pack_materialize_chops_exactly_and_straddles(spark):
@@ -1756,49 +1774,6 @@ def test_pack_materialize_chops_exactly_and_straddles(spark):
 
     with _pytest.raises(ValueError, match="seq_tokens"):
         pack_materialize(tokens, plan, 0)
-
-
-def test_bpe_arrow_engine_equals_fold(spark):
-    """The vocabulary-keyed Arrow kernel (engine='arrow', round 13)
-    must reproduce the replace fold EXACTLY — counts and the full
-    (id, pos, token) encode stream — on the fixture table, a trained
-    table, planted untrained symbols (char fallback), and the 1k-rank
-    dependent chain (where the kernel's one vocab pass replaces ~6
-    checkpointed fold segments). Bad engine name is loud."""
-    from aces_nifi_processors_bundle_spark.pipeline.text import (
-        bpe_encode,
-        bpe_token_counts,
-        bpe_train,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "The cat sat on the mat"), (2, "which 2000 things!"),
-         (3, "internationalization routines qqq zz"), (4, "")],
-        "doc_id long, text string",
-    )
-    for merges in (None, bpe_train(df, num_merges=12)):
-        want_c = sorted(map(tuple, bpe_token_counts(
-            df, merges=merges).collect()))
-        got_c = sorted(map(tuple, bpe_token_counts(
-            df, merges=merges, engine="arrow").collect()))
-        assert got_c == want_c
-        want_e = sorted(map(tuple, bpe_encode(df, merges=merges).collect()))
-        got_e = sorted(map(tuple, bpe_encode(
-            df, merges=merges, engine="arrow").collect()))
-        assert got_e == want_e
-    n = 1000
-    chain = [("a" + "b" * i, "b") for i in range(n)]
-    big = spark.createDataFrame(
-        [(1, "a" + "b" * n), (2, "a" + "b" * 400), (3, "bb a")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_counts(
-        big, merges=chain, engine="arrow").collect()}
-    assert got == {1: 1, 2: 1, 3: 3}
-    with pytest.raises(ValueError, match="engine"):
-        bpe_token_counts(df, engine="nope")
-    with pytest.raises(ValueError, match="engine"):
-        bpe_encode(df, engine="nope")
 
 
 def test_bpe_local_vocab_frames_equal_distributed(spark):
@@ -5281,9 +5256,10 @@ def test_anchor_store_compaction_preserves_routing(spark, tmp_path):
     assert frag.read().where("doc_id = 2").count() == 0
 
 
-def _reference_bpe_train(texts, num_merges):
+def _reference_bpe_train(texts, num_merges, min_count=1):
     """Sennrich get_stats/merge loop in pure Python — cross-checks
-    bpe_train's distributed elections."""
+    bpe_train's elections. Pieces seen fewer than min_count times are
+    dropped before the loop."""
     import re
     from collections import Counter
 
@@ -5293,6 +5269,7 @@ def _reference_bpe_train(texts, num_merges):
             continue
         for w in re.findall(r"[a-z]+|[0-9]+|[^a-z0-9\s\x01]", t.lower()):
             vocab[w] += 1
+    vocab = Counter({w: c for w, c in vocab.items() if c >= min_count})
     state = {w: list(w) for w in vocab}
     merges = []
     for _ in range(num_merges):
@@ -5319,7 +5296,7 @@ def _reference_bpe_train(texts, num_merges):
 
 
 def test_bpe_train_matches_reference(spark, sf_dir):
-    """Distributed bpe_train must elect the same 12 merges, in order,
+    """bpe_train must elect the same 12 merges, in order,
     as the pure-Python Sennrich loop on the real corpus; trained-table
     counts must equal the reference tokenization lengths."""
     from aces_nifi_processors_bundle_spark.pipeline.text import (
@@ -5358,85 +5335,6 @@ def test_bpe_train_raises_when_pairs_run_dry(spark):
     assert bpe_train(tiny, num_merges=1) == [("a", "b")]
     with _pytest.raises(ValueError, match="pair inventory exhausted"):
         bpe_train(tiny, num_merges=2)
-
-
-def test_bpe_train_lazy_cuts_cost_fewer_jobs_than_eager_loop(spark):
-    """Round 14: the distributed training loop cuts lineage LAZILY, so
-    each election is ONE driver action (the argmax collect materializes
-    the previous cut's blocks as a side effect) instead of the old
-    collect + eager-localCheckpoint pair. Job-count probe against the
-    pre-round-14 recipe, reconstructed verbatim: same elections,
-    strictly fewer Spark jobs."""
-    from aces_nifi_processors_bundle_spark.pipeline.text import (
-        BPE_DELIM,
-        _bpe_pieces,
-        _bpe_wrap,
-        bpe_train,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the thin cat sat"), (2, "another thing that thins"),
-         (3, "that cat sat on the thing")],
-        "doc_id long, text string",
-    )
-    sc = spark.sparkContext
-
-    def jobs_in(group, fn):
-        sc.setJobGroup(group, "probe")
-        try:
-            out = fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    def eager_recipe(num_merges):
-        # the pre-round-14 loop: eager initial cut, then per election a
-        # 1-row argmax collect AND an eager replace+checkpoint job
-        d = BPE_DELIM
-        piece_counts = (
-            _bpe_pieces(docs, "text", [])
-            .groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-        )
-        vocab = (
-            piece_counts
-            .select("w", "c", _bpe_wrap(F.col("w")).alias("toks"))
-            .localCheckpoint(eager=True)
-        )
-        merges = []
-        for _ in range(num_merges):
-            arr = F.split(
-                F.expr("substring(toks, 2, length(toks) - 2)"), d + d
-            )
-            n = F.greatest(F.size(arr) - 1, F.lit(0))
-            prs = F.zip_with(
-                F.slice(arr, 1, n), F.slice(arr, 2, n),
-                lambda x, y: F.struct(x.alias("l"), y.alias("r")),
-            )
-            best = (
-                vocab.select("c", F.explode(prs).alias("p"))
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("c").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.encode("l", "UTF-8"),
-                         F.encode("r", "UTF-8"))
-                .limit(1)
-                .collect()
-            )
-            left, right = best[0]["l"], best[0]["r"]
-            merges.append((left, right))
-            vocab = vocab.withColumn(
-                "toks",
-                F.replace(
-                    F.col("toks"),
-                    F.lit(d + left + d + d + right + d),
-                    F.lit(d + left + right + d),
-                ),
-            ).localCheckpoint(eager=True)
-        return merges
-
-    want, n_eager = jobs_in("probe_bpe_eager", lambda: eager_recipe(4))
-    got, n_lazy = jobs_in("probe_bpe_lazy", lambda: bpe_train(docs, num_merges=4))
-    assert got == want
-    assert n_lazy < n_eager
 
 
 def test_bpe_encode_flat_offsets_and_consistency(spark):
@@ -5556,39 +5454,39 @@ def test_bpe_train_tiebreak_utf8_bytes_and_non_ascii_corpus(spark):
     assert got[0] == ("b", "a")
 
 
-def test_bpe_train_collect_vocab_equivalent(spark, sf_dir):
-    """The production-merge-count path (collect_vocab=True: one corpus
-    scan, pruned vocabulary collected, incremental in-memory merge
-    loop) must elect the IDENTICAL merge table as the distributed
-    per-merge loop on the real corpus — and must scale to merge
-    counts the distributed loop can't (256 merges in one driver
-    loop, cross-checked against the pure-Python Sennrich reference)."""
-    from aces_nifi_processors_bundle_spark.pipeline.text import bpe_train
+def test_bpe_train_full_inventory_and_min_count_match_reference(
+    spark, sf_dir
+):
+    """bpe_train against the pure-Python Sennrich reference on the
+    real corpus: at the corpus's FULL merge inventory (every word
+    collapses to one symbol — the incremental pair statistics must not
+    drift as merged symbols become multi-char and pair churn
+    compounds), and under min_count pruning — including a min_count
+    just above the rarest piece's count, so pruning really drops a
+    word. Running past the inventory and min_count < 1 stay loud
+    errors."""
+    from aces_nifi_processors_bundle_spark.pipeline.text import (
+        bpe_train,
+        bpe_train_collected,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    slow = bpe_train(docs, num_merges=12)
-    fast = bpe_train(docs, num_merges=12, collect_vocab=True)
-    assert fast == slow
-    # min_count pruning applies identically to both paths
-    slow_p = bpe_train(docs, num_merges=8, min_count=3)
-    fast_p = bpe_train(docs, num_merges=8, min_count=3, collect_vocab=True)
-    assert fast_p == slow_p
-    # production envelope: run the loop to the corpus's FULL merge
-    # inventory (89 on this fixture — every word collapses to one
-    # symbol), validated against the naive reference loop at every
-    # rank (the incremental statistics must not drift as merged
-    # symbols become multi-char and pair churn compounds), and the
-    # exhaustion beyond it must stay a loud error, not a short table
     texts = [r["text"] for r in docs.collect()]
     want_all, _ = _reference_bpe_train(texts, 10_000)
     n_all = len(want_all)
     assert n_all >= 80  # the fixture sustains a deep merge chain
-    got_all = bpe_train(docs, num_merges=n_all, collect_vocab=True)
-    assert got_all == want_all
+    assert bpe_train(docs, num_merges=n_all) == want_all
     with pytest.raises(ValueError, match="exhausted"):
-        bpe_train(docs, num_merges=n_all + 1, collect_vocab=True)
+        bpe_train(docs, num_merges=n_all + 1)
     with pytest.raises(ValueError, match="min_count"):
         bpe_train(docs, num_merges=2, min_count=0)
+    want_3, _ = _reference_bpe_train(texts, 8, min_count=3)
+    assert bpe_train(docs, num_merges=8, min_count=3) == want_3
+    _, vocab = bpe_train_collected(docs, num_merges=1)
+    mc = min(c for _, c in vocab) + 1
+    want_p, state_p = _reference_bpe_train(texts, 10_000, min_count=mc)
+    assert len(state_p) < len(vocab)
+    assert bpe_train(docs, num_merges=len(want_p), min_count=mc) == want_p
 
 
 def test_bpe_roundtrip_exact_and_oov_fallback(spark):
