@@ -88,6 +88,14 @@ failure flows into a keyed store, all in one JSON document:
   {"op": "store_init", "path": ..., "keys": [...]}
   {"op": "union", "right": "ok_result"}
 
+Stages that only hand their config to one function are table stages
+(``_TABLE_STAGES``, ``_TWO_INPUT_TABLE_STAGES``): a table stage takes
+exactly its function's keyword parameters, with the function's
+defaults, and a two-input one also takes ``right``, the tagged frame
+passed as the function's second argument. The other stages are
+written out because they rename keys, set flow-specific defaults,
+expose only some of a function's parameters, or do work of their own.
+
 Transform stages stay lazy — the whole chain folds into one Catalyst
 plan. Store/sink stages are ACTIONS (the NiFi terminal-processor
 analog): they execute their write when the flow is built, then hand
@@ -99,6 +107,7 @@ merge batch 2) is expressed as one flow document.
 
 from __future__ import annotations
 
+import importlib
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -158,6 +167,63 @@ def stage(name: str) -> Callable[[StageFn], StageFn]:
             )
         return fn
     return register
+
+
+# Table stages (see the module docstring) as "module:function" under
+# this package. A function resolves when its stage runs, so importing
+# this module loads no pipeline module.
+_TABLE_STAGES: dict[str, str] = {
+    "dedup_exact": "pipeline.dedup:dedup_exact",
+    "hash_split": "pipeline.splits:hash_split",
+    "chunk": "pipeline.text:chunk_documents",
+    "sessionize": "pipeline.reports:sessionize",
+    "frequent_keys": "pipeline.reports:frequent_keys",
+    "funnel": "pipeline.reports:funnel",
+    "active_users": "pipeline.reports:rolling_active_users",
+    "corr_matrix": "pipeline.stats:correlation_matrix",
+    "calibration": "pipeline.classify:calibration_report",
+    "kappa": "pipeline.classify:cohens_kappa",
+    "chi2_terms": "pipeline.classify:chi2_terms",
+    "editdist_join": "pipeline.strings:edit_distance_join",
+    "bm25": "pipeline.text:bm25_topk",
+    "ngram_novelty": "pipeline.text:ngram_novelty",
+    "quantile_digest": "pipeline.sketches:cluster_digest",
+    "intra_repeats": "pipeline.dedup:intra_doc_repeats",
+}
+_TWO_INPUT_TABLE_STAGES: dict[str, str] = {
+    "asof_join": "operators.joins:asof_join",
+    "range_join": "operators.joins:range_join",
+    # corpus = mainline, queries = `right`
+    "hard_negatives": "pipeline.similarity:hard_negatives",
+    # snapshot A = mainline, snapshot B = `right`
+    "embedding_drift": "pipeline.similarity:embedding_drift",
+}
+
+
+def _table_fn(ref: str) -> Callable[..., DataFrame]:
+    module, name = ref.split(":")
+    return getattr(importlib.import_module(f".{module}", __package__), name)
+
+
+def _table_stage(ref: str) -> StageFn:
+    def run(spark: SparkSession, df: DataFrame, **spec: Any) -> DataFrame:
+        return _table_fn(ref)(df, **spec)
+    return run
+
+
+def _two_input_table_stage(ref: str) -> StageFn:
+    def run(
+        spark: SparkSession, df: DataFrame, *, right: str,
+        _named: dict[str, DataFrame], **spec: Any,
+    ) -> DataFrame:
+        return _table_fn(ref)(df, _named[right], **spec)
+    return run
+
+
+for _op, _ref in _TABLE_STAGES.items():
+    stage(_op)(_table_stage(_ref))
+for _op, _ref in _TWO_INPUT_TABLE_STAGES.items():
+    stage(_op)(_two_input_table_stage(_ref))
 
 
 @stage("load")
@@ -369,16 +435,6 @@ def _socketio(
     return df
 
 
-@stage("dedup_exact")
-def _dedup_exact(
-    spark: SparkSession, df: DataFrame, *, text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    from .pipeline.dedup import dedup_exact
-
-    return dedup_exact(df, text_col, id_col)
-
-
 @stage("redact_pii")
 def _redact(
     spark: SparkSession, df: DataFrame, *, text_col: str = "text"
@@ -425,22 +481,12 @@ def _weighted_sample_quality(
     return weighted_sample(df, quality_score(F.col(text_col)), id_col, seed)
 
 
-@stage("hash_split")
-def _hash_split(
-    spark: SparkSession, df: DataFrame, *, weights: dict[str, float] | None = None,
-    id_col: str = "doc_id", seed: str = "split",
-) -> DataFrame:
-    from .pipeline.splits import hash_split
-
-    return hash_split(df, id_col, weights, seed)
-
-
 @stage("hash_sample")
 def _hash_sample(
     spark: SparkSession, df: DataFrame, *, denom: int,
     id_col: str = "doc_id", seed: str = "sample",
 ) -> DataFrame:
-    """Deterministic 1/denom sample on the canvas (round 12) —
+    """Deterministic 1/denom sample on the canvas —
     pipeline/splits.py::hash_mod_sample: membership is a pure
     function of the id, so the sampled branch is stable across
     corpus growth and re-runs (the front door for sampled report
@@ -455,7 +501,7 @@ def _hash_topn_sample(
     spark: SparkSession, df: DataFrame, *, n: int,
     id_col: str = "doc_id", seed: str = "sample",
 ) -> DataFrame:
-    """Deterministic ABSOLUTE-BUDGET sample on the canvas (round 13)
+    """Deterministic ABSOLUTE-BUDGET sample on the canvas
     — pipeline/splits.py::hash_topn_sample: the first n rows of the
     md5-hash order, so a sampled report's ground-truth cost is pinned
     by construction at any corpus size (hash_sample's 1/denom
@@ -517,7 +563,7 @@ def _pack_materialize(
     pos_col: str = "pos",
     value_col: str = "token_id",
 ) -> DataFrame:
-    """MATERIALIZE a packing plan on the canvas (round 13): the
+    """MATERIALIZE a packing plan on the canvas: the
     incoming branch is the tokenizer's (id, pos, token_id) stream (a
     bpe_encode/encode-ids stage), `plan` names the tagged branch
     holding pack_sequences' layout — output is the chopped
@@ -545,58 +591,6 @@ def _write_dataset(
         df, path, partition_cols, files_per_partition, n_partition_values
     )
     return spark.read.parquet(path)
-
-
-@stage("chunk")
-def _chunk(
-    spark: SparkSession, df: DataFrame, *, chunk_tokens: int = 256,
-    overlap: int = 32, text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    from .pipeline.text import chunk_documents
-
-    return chunk_documents(df, text_col, id_col, chunk_tokens, overlap)
-
-
-@stage("asof_join")
-def _asof_join(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    right: str,
-    _named: dict[str, DataFrame],
-    on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str | None = None,
-    values: list[str] | None = None,
-    tolerance_sec: float | None = None,
-    suffix: str = "_matched",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Two-input stage: as-of-enrich the current frame with the named
-    frame (see `tag`). The canvas analog of a two-input processor."""
-    from .operators.joins import asof_join
-
-    return asof_join(
-        df, _named[right], on, left_ts, right_ts, values, tolerance_sec,
-        suffix, tiebreak,
-    )
-
-
-@stage("range_join")
-def _range_join(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    right: str,
-    _named: dict[str, DataFrame],
-    on: str | list[str],
-    left_val: str,
-    right_val: str,
-    band: float,
-) -> DataFrame:
-    from .operators.joins import range_join
-
-    return range_join(df, _named[right], on, left_val, right_val, band)
 
 
 @stage("join")
@@ -699,57 +693,6 @@ def _salted_join(
     from .operators.joins import salted_join
 
     return salted_join(df, _named[right], on, hot_keys, n_salts, how)
-
-
-@stage("sessionize")
-def _sessionize(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_sec: int = 1800,
-    tie_col: str | None = None,
-    chunk_sec: int | None = None,
-) -> DataFrame:
-    from .pipeline.reports import sessionize
-
-    return sessionize(df, user_col, ts_col, gap_sec, tie_col, chunk_sec)
-
-
-@stage("frequent_keys")
-def _frequent_keys(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    cols: str | list[str],
-    min_count: int | None = None,
-    min_share: float | None = None,
-    sample_fraction: float | None = None,
-) -> DataFrame:
-    from .pipeline.reports import frequent_keys
-
-    return frequent_keys(df, cols, min_count, min_share, sample_fraction)
-
-
-@stage("funnel")
-def _funnel(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    window_sec: int | None = None,
-    method: str = "auto",
-    restart: bool = False,
-) -> DataFrame:
-    from .pipeline.reports import funnel
-
-    return funnel(
-        df, steps, user_col, type_col, ts_col, window_sec, method, restart
-    )
 
 
 @stage("union")
@@ -864,19 +807,6 @@ def _ewma(
     from .pipeline.timeseries import ewma_last
 
     return ewma_last(df, key, ts_col, value_col, alpha, tie_col, chunk_sec)
-
-
-@stage("corr_matrix")
-def _corr_matrix(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    cols: list[str],
-    scale: int = 100,
-) -> DataFrame:
-    from .pipeline.stats import correlation_matrix
-
-    return correlation_matrix(df, cols, scale)
 
 
 @stage("communities")
@@ -1049,20 +979,6 @@ def _anomaly_mad(
     )
 
 
-@stage("active_users")
-def _active_users(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-) -> DataFrame:
-    from .pipeline.reports import rolling_active_users
-
-    return rolling_active_users(df, user_col, ts_col, window_days)
-
-
 @stage("classify")
 def _classify(
     spark: SparkSession,
@@ -1136,40 +1052,6 @@ def _classify(
     )
 
 
-@stage("calibration")
-def _calibration(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    prob_col: str = "prob",
-    label_col: str = "actual",
-    n_bins: int = 10,
-) -> DataFrame:
-    """Classifier calibration table on the canvas (round 13) —
-    pipeline/classify.py::calibration_report over the incoming scored
-    frame (a classify stage joined to a reference label upstream)."""
-    from .pipeline.classify import calibration_report
-
-    return calibration_report(df, prob_col, label_col, n_bins)
-
-
-@stage("kappa")
-def _kappa(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    col_a: str,
-    col_b: str,
-) -> DataFrame:
-    """Cohen's kappa on the canvas (round 13) —
-    pipeline/classify.py::cohens_kappa between two boolean label
-    columns of the incoming frame (trained filter vs rule filter vs
-    prior model)."""
-    from .pipeline.classify import cohens_kappa
-
-    return cohens_kappa(df, col_a, col_b)
-
-
 @stage("transitions")
 def _transitions(
     spark: SparkSession,
@@ -1184,21 +1066,6 @@ def _transitions(
     from .pipeline.reports import event_transitions
 
     return event_transitions(df, key, ts_col, type_col, tie_col, start_label)
-
-
-@stage("editdist_join")
-def _editdist_join(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    id_col: str,
-    str_col: str,
-    k: int = 1,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    from .pipeline.strings import edit_distance_join
-
-    return edit_distance_join(df, id_col, str_col, k, max_bucket)
 
 
 @stage("pagerank")
@@ -1344,24 +1211,6 @@ def _topk(
     )
 
 
-@stage("bm25")
-def _bm25(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """BM25 lexical retrieval over the incoming corpus (round 8)."""
-    from .pipeline.text import bm25_topk
-
-    return bm25_topk(df, query_terms, k, k1, b, text_col, id_col)
-
-
 @stage("seasonal_anomaly")
 def _seasonal_anomaly(
     spark: SparkSession,
@@ -1373,7 +1222,7 @@ def _seasonal_anomaly(
     k: int = 3,
     id_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Slot-relative (group x dow x hour) anomaly flags (round 8)."""
+    """Slot-relative (group x dow x hour) anomaly flags."""
     from .pipeline.timeseries import seasonal_anomalies
 
     return seasonal_anomalies(
@@ -1391,7 +1240,7 @@ def _trend(
     group: str = "event_type",
     bucket: str = "day",
 ) -> DataFrame:
-    """Per-group OLS trend of bucketed totals (round 8)."""
+    """Per-group OLS trend of bucketed totals."""
     from .pipeline.timeseries import linear_trend
 
     return linear_trend(df, ts_col, value_col, group, bucket)
@@ -1406,7 +1255,7 @@ def _kmv_distinct(
     groups: list[str] | None = None,
     k: int = 64,
 ) -> DataFrame:
-    """KMV bottom-k distinct estimate per group (round 8)."""
+    """KMV bottom-k distinct estimate per group."""
     from .pipeline.sketches import kmv_estimate, kmv_sketch
 
     return kmv_estimate(kmv_sketch(df, key, groups, k), groups, k)
@@ -1423,25 +1272,10 @@ def _winsorize(
     p_lo: float = 0.01,
     p_hi: float = 0.99,
 ) -> DataFrame:
-    """Per-group quantile clipping (round 8)."""
+    """Per-group quantile clipping."""
     from .pipeline.stats import winsorize
 
     return winsorize(df, group, value_col, id_col, p_lo, p_hi)
-
-
-@stage("ngram_novelty")
-def _ngram_novelty(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
-    """Per-doc corpus-contribution novelty score (round 8)."""
-    from .pipeline.text import ngram_novelty
-
-    return ngram_novelty(df, text_col, id_col, k)
 
 
 @stage("boilerplate_rate")
@@ -1454,47 +1288,10 @@ def _boilerplate_rate(
     group_col: str = "source",
     pct: int = 50,
 ) -> DataFrame:
-    """Per-doc group-relative boilerplate-line rate (round 8)."""
+    """Per-doc group-relative boilerplate-line rate."""
     from .pipeline.dedup import boilerplate_rate
 
     return boilerplate_rate(df, text_col, id_col, group_col, pct)
-
-
-@stage("hard_negatives")
-def _hard_negatives(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    right: str,
-    _named: dict[str, DataFrame],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Contrastive hard negatives: corpus = mainline frame, queries =
-    tagged `right` branch (round 8)."""
-    from .pipeline.similarity import hard_negatives
-
-    return hard_negatives(df, _named[right], k, id_col, vec_col, label_col)
-
-
-@stage("embedding_drift")
-def _embedding_drift(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    right: str,
-    _named: dict[str, DataFrame],
-    dim: int,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cell-share drift: snapshot A = mainline, snapshot B = tagged
-    `right` branch (round 8)."""
-    from .pipeline.similarity import embedding_drift
-
-    return embedding_drift(df, _named[right], dim, n_centroids, vec_col)
 
 
 @stage("ppjoin_dedup")
@@ -1507,34 +1304,10 @@ def _ppjoin_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact-recall near-dup pairs via prefix filtering (round 8)."""
+    """Exact-recall near-dup pairs via prefix filtering."""
     from .pipeline.dedup import near_dup_pairs_ppjoin
 
     return near_dup_pairs_ppjoin(df, text_col, id_col, k, threshold)
-
-
-@stage("quantile_digest")
-def _quantile_digest(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    value_col: str,
-    groups: list[str] | None = None,
-    m: int = 32,
-    tie_col: str | None = None,
-    allow_global_sort: bool = False,
-) -> DataFrame:
-    """Build per-group mergeable quantile-digest state (round 9):
-    m equal-weight clusters per group — include the chunk key (day,
-    source) in `groups` so the rank sort stays chunk-bounded; fold
-    chunks downstream with `digest_fold`. groups omitted/empty needs
-    an explicit "allow_global_sort": true in the stage config (round
-    10 guard: an ungrouped build sorts every fact row in one task —
-    acknowledge a known-small input, or chunk + digest_fold)."""
-    from .pipeline.sketches import cluster_digest
-
-    return cluster_digest(df, value_col, groups, m, tie_col,
-                          allow_global_sort=allow_global_sort)
 
 
 @stage("digest_fold")
@@ -1548,9 +1321,9 @@ def _digest_fold(
     qs: list[float] | None = None,
 ) -> DataFrame:
     """Fold sub-digests into one m-cluster digest per group and, when
-    `qs` is given, read the quantile estimates off the merged state
-    (round 9). order_cols = the sub-digest key columns (['day', 'c'])
-    for deterministic tie-breaks."""
+    `qs` is given, read the quantile estimates off the merged state.
+    order_cols = the sub-digest key columns (['day', 'c']) for
+    deterministic tie-breaks."""
     from .pipeline.sketches import digest_merge, digest_quantiles
 
     merged = digest_merge(df, groups, m, order_cols)
@@ -1572,7 +1345,7 @@ def _cap_duplicates(
     k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Soft dedup (round 9): near-dup clusters via the minhash chain,
+    """Soft dedup: near-dup clusters via the minhash chain,
     capped at max_copies survivors per cluster; singletons pass."""
     from .pipeline.dedup import (
         cap_duplicates,
@@ -1599,7 +1372,7 @@ def _temperature_mix(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Temperature mixture sampling (round 9): source rates ∝
+    """Temperature mixture sampling: source rates ∝
     mass^alpha under a token budget. token_col names a precomputed
     count column; default counts whitespace tokens of text_col. The
     kept rows carry every input column plus (n_tokens, keep_prob),
@@ -1631,8 +1404,7 @@ def _incremental_near_dedup(
 ) -> DataFrame:
     """ACTION: route the incoming batch against the persisted SimHash
     signature store at `path` (created on first use), appending unique
-    survivors' signatures; hands the routed frame downstream
-    (round 8)."""
+    survivors' signatures; hands the routed frame downstream."""
     from .pipeline.dedup import incremental_near_dedup, simhash_fingerprints
     from .stores import KeyedParquetStore
     from .stores.keyed_table import StoreNotInitializedError
@@ -1665,7 +1437,7 @@ def _substring_dedup(
     min_tokens: int | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Cross-document exact duplicated substrings (round 10): maximal
+    """Cross-document exact duplicated substrings: maximal
     aligned spans of >= min_tokens shared words via positional k-gram
     anchors + diagonal runs — the Lee et al. ExactSubstr modality.
     Emits the (id_a, id_b, pos_a, pos_b, match_tokens) span report;
@@ -1684,7 +1456,7 @@ def _trim_repetitions(
     id_col: str = "doc_id",
     delim: str = "\n",
 ) -> DataFrame:
-    """Intra-doc repetition REPAIR (round 10): keep the first
+    """Intra-doc repetition REPAIR: keep the first
     occurrence of each repeated line, REWRITE text_col in place and
     pass every other column through — so quality/token stages chain
     after the repair (the flow-canvas contract temperature_mix also
@@ -1711,7 +1483,7 @@ def _containment_dedup(
     max_df: int | None = None,
     max_df_quantile: float | None = None,
 ) -> DataFrame:
-    """Asymmetric containment near-dup pairs (round 10): the
+    """Asymmetric containment near-dup pairs: the
     doc-inside-doc detector — emits (id_a, id_b, containment,
     jaccard) for downstream keep/drop policy."""
     from .pipeline.dedup import containment_pairs
@@ -1732,7 +1504,7 @@ def _repair_substrings(
     min_tokens: int | None = None,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Cross-document substring REPAIR (round 10): cut every shared
+    """Cross-document substring REPAIR: cut every shared
     >= min_tokens span from all but its lowest-id owner
     (remove_duplicate_spans), rewrite text_col in place, pass every
     other column through, and add (n_tokens, removed_tokens) as
@@ -1814,7 +1586,7 @@ def _nfc_normalize(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Unicode NFC normalization (round 10): rewrite text_col to its
+    """Unicode NFC normalization: rewrite text_col to its
     composed form in place, keep every other column, add `changed` as
     the denormalization-rate signal — run this IN FRONT of exact/
     canonical dedup so normalization variants hash identically."""
@@ -1822,23 +1594,6 @@ def _nfc_normalize(
 
     out = nfc_normalize(df, text_col, id_col)
     return _rewrite_text_in_place(df, out, text_col, id_col, ["changed"])
-
-
-@stage("intra_repeats")
-def _intra_repeats(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    min_tokens: int | None = None,
-) -> DataFrame:
-    """Within-doc repeated-span REPORT (round 10): (id, pos_first,
-    pos_repeat, match_tokens) per maximal self-repeat."""
-    from .pipeline.dedup import intra_doc_repeats
-
-    return intra_doc_repeats(df, text_col, id_col, k, min_tokens)
 
 
 @stage("trim_intra_repeats")
@@ -1851,7 +1606,7 @@ def _trim_intra_repeats(
     k: int = 8,
     min_tokens: int | None = None,
 ) -> DataFrame:
-    """Within-doc repeated-span REPAIR (round 10): cut later
+    """Within-doc repeated-span REPAIR: cut later
     occurrences, rewrite text_col in place, keep every other column —
     the repair_substrings contract turned inward."""
     from .pipeline.dedup import trim_intra_doc_repeats
@@ -1871,7 +1626,7 @@ def _source_overlap(
     group_col: str = "source",
     k: int = 64,
 ) -> DataFrame:
-    """Cross-source contamination matrix (round 10): per-source KMV
+    """Cross-source contamination matrix: per-source KMV
     bottom-k sketch → pairwise overlap/Jaccard estimates, everything
     sketch-sized. The mixture-planning observability pass."""
     from .pipeline.sketches import kmv_overlap_matrix, kmv_sketch
@@ -1891,7 +1646,7 @@ def _incremental_substring_dedup(
     min_tokens: int = 12,
     n_buckets: int = 64,
 ) -> DataFrame:
-    """ACTION (round 10): route the incoming batch against the
+    """ACTION: route the incoming batch against the
     persisted positional-anchor store at `path` (created on first
     use — the incremental_near_dedup store-level probe), appending
     unique survivors' anchors; hands the routed frame downstream."""
@@ -1920,8 +1675,8 @@ def _source_divergence(
     group_col: str = "source",
 ) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between source unigram
-    distributions (round 10) — the lexical counterpart of
-    source_overlap on the corpus-card canvas."""
+    distributions — the lexical counterpart of source_overlap on the
+    corpus-card canvas."""
     from .pipeline.reports import source_divergence_matrix
 
     return source_divergence_matrix(df, text_col, group_col)
@@ -1937,7 +1692,7 @@ def _dsir_weights(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """DSIR importance weights on the canvas (round 11): score every
+    """DSIR importance weights on the canvas: score every
     incoming doc by target-likeness (hashed uni+bigram log-ratios
     against the rows matching `target_condition`) and join
     (n_features, importance) onto every input column — feed the
@@ -1963,7 +1718,7 @@ def _dsir_select(
     temperature: float = 1.0,
     keep_only: bool = True,
 ) -> DataFrame:
-    """DSIR selection END-TO-END on the canvas (round 12): the
+    """DSIR selection END-TO-END on the canvas: the
     dsir_weights scores squashed to keep probabilities and resolved
     to deterministic membership (pipeline/splits.py::dsir_select) in
     one stage — by default only the KEPT rows flow downstream (the
@@ -1998,7 +1753,7 @@ def _dsir_fit(
     n_buckets: int = 1024,
     store_buckets: int = 1,
 ) -> DataFrame:
-    """ACTION (round 12): fit the DSIR log-ratio table on the
+    """ACTION: fit the DSIR log-ratio table on the
     incoming corpus (target = rows matching `target_condition`) and
     PERSIST it as store state at `path` keyed by bucket — the
     registered-selection-model lifecycle, the same shape as the
@@ -2019,8 +1774,8 @@ def _dsir_fit(
         F.col("_b").alias("bucket"),
         F.col("_lam").alias("log_ratio"),
         # fitted raw bucket distribution — the dsir_drift stage's
-        # reference side (round 13), persisted so drift never
-        # re-scans the fit-time pool
+        # reference side, persisted so drift never re-scans the
+        # fit-time pool
         F.col("_cr").alias("raw_count"),
         # The bucket hash is a function of n_buckets, so the model is
         # only meaningful WITH it: persist it on every row (constant
@@ -2047,17 +1802,16 @@ def _dsir_score(
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Score the incoming frame against the REGISTERED DSIR table at
-    `path` (round 12) — the serving half of dsir_fit: broadcast the
+    `path` — the serving half of dsir_fit: broadcast the
     n_buckets-row table, join (n_features, importance) onto every
     input column, featureless docs read (0, 0.0) like the batch
     dsir_weights contract. `n_buckets` must EQUAL the fit's (the
     bucket hash is a function of it — a mismatch scores against the
     wrong buckets): the fit persists `fit_n_buckets` on every model
-    row and this stage validates equality loudly (round 13; the old
-    row-count check only caught n_stored > n_buckets and let a
-    fit-512/score-1024 mismatch through silently). Legacy stores
-    written before the column existed fall back to the row-count
-    check."""
+    row and this stage validates equality loudly (a row-count check
+    alone catches only n_stored > n_buckets and lets a
+    fit-512/score-1024 mismatch through silently). Stores written
+    without the column fall back to that row-count check."""
     from pyspark.sql import functions as F
 
     from .pipeline.splits import dsir_score
@@ -2078,7 +1832,7 @@ def _dsir_score(
                 "match the fit; pass the n_buckets the table was "
                 "fitted with"
             )
-    else:  # pre-round-13 store: best-effort row-count check
+    else:  # store without fit_n_buckets: best-effort row-count check
         n_stored = model.count()
         if n_stored > n_buckets:
             raise ValueError(
@@ -2112,14 +1866,14 @@ def _dsir_drift(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """DSIR model-DRIFT row on the canvas (round 13): compare the
+    """DSIR model-DRIFT row on the canvas: compare the
     incoming frame's feature-bucket distribution against the FITTED
     raw distribution persisted with the model at `path` (dsir_fit's
     raw_count column) — one jsd_bits row per invocation, so "the
     lambda table has aged, refit" is an observable number on the same
     canvas that serves the scores. Same fit/serve n_buckets equality
-    contract as dsir_score. Requires a round-13 store (raw_count
-    persisted at fit time); refit older models to enable drift."""
+    contract as dsir_score. Requires a store whose fit persisted
+    raw_count; refit a model without it to enable drift."""
     from pyspark.sql import functions as F
 
     from .pipeline.splits import dsir_drift
@@ -2130,8 +1884,8 @@ def _dsir_drift(
     if "raw_count" not in model.columns:
         raise ValueError(
             f"dsir_drift: store at {path} has no raw_count column — "
-            "it was fitted before round 13; re-run dsir_fit to persist "
-            "the raw bucket distribution"
+            "it was fitted without the raw bucket distribution; re-run "
+            "dsir_fit to persist it"
         )
     if "fit_n_buckets" in model.columns:
         fitted = [
@@ -2251,7 +2005,7 @@ def _corpus_card(
     containment_threshold: float = 0.8,
     max_df_quantile: float | None = 0.99,
 ) -> DataFrame:
-    """The one-row multi-modality corpus card (round 11): document
+    """The one-row multi-modality corpus card: document
     near-dup families (minhash chain), substring shared-span volume,
     and quantile-pruned containment, folded into one hygiene row —
     the terminal dashboard stage of a curation canvas."""
@@ -2287,7 +2041,7 @@ def _weighted_median(
     value_col: str,
     weight_col: str,
 ) -> DataFrame:
-    """Exact per-group weighted median (round 8)."""
+    """Exact per-group weighted median."""
     from .pipeline.stats import weighted_median
 
     return weighted_median(df, group, value_col, weight_col)
@@ -2302,27 +2056,10 @@ def _rank_normalize(
     value_col: str = "value",
     id_col: str = "event_id",
 ) -> DataFrame:
-    """Exact per-group percent-rank transform (round 8)."""
+    """Exact per-group percent-rank transform."""
     from .pipeline.stats import rank_normalize
 
     return rank_normalize(df, group, value_col, id_col)
-
-
-@stage("chi2_terms")
-def _chi2_terms(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    label_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 20,
-    min_df: int = 2,
-) -> DataFrame:
-    """Chi-squared term-label feature selection (round 8)."""
-    from .pipeline.classify import chi2_terms
-
-    return chi2_terms(df, label_col, text_col, id_col, k, min_df)
 
 
 def build_flow(

@@ -239,7 +239,8 @@ def calibration_report(
     abs_gap derives from the ROUNDED values — the DuckDB oracle
     replays every step bit-for-bit. Scale shape: one
     map-side-combined aggregate over the scored frame; output is
-    ≤ n_bins rows."""
+    ≤ n_bins rows. On a flow canvas the scored frame is a classify
+    stage joined to a reference label upstream."""
     if n_bins < 1:
         raise ValueError(
             f"calibration_report: n_bins must be >= 1, got {n_bins}"

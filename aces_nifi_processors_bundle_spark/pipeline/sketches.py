@@ -661,6 +661,11 @@ def cluster_digest(
     point of mergeability. Rank error after one merge level is at most
     n/m per boundary (each input cluster's rows are contiguous in the
     value order up to overlap between input digests' value ranges).
+    Omitted or empty `groups` raises unless allow_global_sort=True:
+    an ungrouped build sorts every fact row in one task, so pass it
+    only for a known-small input. On a flow canvas the same holds for
+    the quantile_digest stage: put the chunk key in "groups" and fold
+    with a digest_fold stage, or set "allow_global_sort": true.
 
     No counterpart in the reference; extends the sketch register
     family (HLL distincts / CMS frequencies / KMV set relations) with

@@ -177,6 +177,12 @@ def assert_matches_oracle(spark_df, duck_con, oracle_sql: str):
         assert a == b, f"row {i} differs:\n  spark : {a}\n  oracle: {b}"
 
 
+def plan_of(df, mode: str = "formatted") -> str:
+    jvm = df.sparkSession._jvm
+    em = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
+    return df._jdf.queryExecution().explainString(em)
+
+
 def pytest_collection_modifyitems(session, config, items):
     """Run the oracle gate (test_queries_vs_oracle.py) first, keeping
     the relative order of everything else, so a suite-level timeout on

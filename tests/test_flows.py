@@ -10,9 +10,22 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from aces_nifi_processors_bundle_spark import flows
 from aces_nifi_processors_bundle_spark.flows import build_flow
 from aces_nifi_processors_bundle_spark.plans.queries import FLAGSHIP_BINNERS
+from aces_nifi_processors_bundle_spark.operators import joins
 from aces_nifi_processors_bundle_spark.operators.binning import bin_count
+from aces_nifi_processors_bundle_spark.pipeline import (
+    classify,
+    dedup,
+    reports,
+    similarity,
+    sketches,
+    splits,
+    stats,
+    strings,
+    text,
+)
 from aces_nifi_processors_bundle_spark.sources.registry import load_table
 
 FLAGSHIP_FLOW = [
@@ -1412,3 +1425,127 @@ def test_hash_topn_sample_stage_matches_direct_call(spark, sf_dir):
             hash_topn_sample(docs, "doc_id", 9, "sample").collect()}
     got = {r["doc_id"] for r in out.collect()}
     assert got == want and len(got) == 9
+
+
+_DOCS = [{"op": "load", "table": "documents"}]
+_EVENTS = [{"op": "load", "table": "events"}]
+_EMB = [{"op": "load", "table": "embeddings"}]
+
+
+def _events_of(kind: str) -> list[dict]:
+    return [
+        *_EVENTS,
+        {"op": "filter", "condition": f"event_type = '{kind}'"},
+        {"op": "select", "columns": ["event_id", "user_id", "ts", "value"]},
+    ]
+
+
+def _events_as(suffix: str) -> list[dict]:
+    return [*_EVENTS, {"op": "select", "columns": [
+        "user_id", f"event_id AS id_{suffix}",
+        f"unix_micros(ts) AS us_{suffix}",
+    ]}]
+
+
+# op -> (function called directly, mainline stages, stage config,
+# stages of the tagged `right` branch or None)
+_TABLE_STAGE_CASES = {
+    "dedup_exact": (dedup.dedup_exact, _DOCS, {}, None),
+    "hash_split": (splits.hash_split, _DOCS,
+                   {"weights": {"train": 0.8, "test": 0.2}}, None),
+    "chunk": (text.chunk_documents, _DOCS,
+              {"chunk_tokens": 30, "overlap": 5}, None),
+    "sessionize": (reports.sessionize, _EVENTS,
+                   {"gap_sec": 600, "tie_col": "event_id"}, None),
+    "frequent_keys": (reports.frequent_keys, _EVENTS,
+                      {"cols": ["event_type"], "min_count": 1}, None),
+    "funnel": (reports.funnel, _EVENTS,
+               {"steps": ["view", "click", "purchase"],
+                "window_sec": 86400}, None),
+    "active_users": (reports.rolling_active_users, _EVENTS,
+                     {"window_days": 3}, None),
+    "corr_matrix": (stats.correlation_matrix,
+                    [{"op": "load", "table": "lineitem"}],
+                    {"cols": ["l_quantity", "l_extendedprice",
+                              "l_discount"]}, None),
+    "calibration": (classify.calibration_report, [
+        *_DOCS, {"op": "select", "columns": [
+            "doc_id", "CAST(n_chars % 100 AS DOUBLE) / 100 AS p",
+            "lang = 'en' AS y",
+        ]},
+    ], {"prob_col": "p", "label_col": "y", "n_bins": 5}, None),
+    "kappa": (classify.cohens_kappa, [
+        *_DOCS, {"op": "select", "columns": [
+            "lang = 'en' AS a", "n_chars % 2 = 0 AS b",
+        ]},
+    ], {"col_a": "a", "col_b": "b"}, None),
+    "chi2_terms": (classify.chi2_terms, [
+        *_DOCS, {"op": "select", "columns": [
+            "doc_id", "text", "lang = 'en' AS is_en",
+        ]},
+    ], {"label_col": "is_en", "k": 10}, None),
+    "editdist_join": (strings.edit_distance_join,
+                      [{"op": "load", "table": "nation"}],
+                      {"id_col": "n_nationkey", "str_col": "n_name"},
+                      None),
+    "bm25": (text.bm25_topk, _DOCS,
+             {"query_terms": ["spark", "join"], "k": 5}, None),
+    "ngram_novelty": (text.ngram_novelty, _DOCS, {"k": 2}, None),
+    "quantile_digest": (sketches.cluster_digest, _EVENTS,
+                        {"value_col": "value", "groups": ["event_type"],
+                         "m": 8, "tie_col": "event_id"}, None),
+    "intra_repeats": (dedup.intra_doc_repeats, _DOCS,
+                      {"k": 3, "min_tokens": 4}, None),
+    "asof_join": (joins.asof_join, _events_of("purchase"),
+                  {"on": ["user_id"], "values": ["event_id", "value"],
+                   "tolerance_sec": 21600, "tiebreak": "event_id"},
+                  _events_of("view")),
+    "range_join": (joins.range_join, _events_as("a"),
+                   {"on": ["user_id"], "left_val": "us_a",
+                    "right_val": "us_b", "band": 600e6},
+                   _events_as("b")),
+    "hard_negatives": (similarity.hard_negatives, _EMB, {"k": 3}, [
+        *_EMB, {"op": "filter", "condition": "vec_id < 4"},
+    ]),
+    "embedding_drift": (similarity.embedding_drift, _EMB,
+                        {"dim": 64, "n_centroids": 8}, [
+        *_EMB, {"op": "filter", "condition": "vec_id % 2 = 0"},
+    ]),
+}
+
+
+@pytest.mark.parametrize("op", sorted(
+    {**flows._TABLE_STAGES, **flows._TWO_INPUT_TABLE_STAGES}
+))
+def test_table_stage_equals_direct_call(spark, sf_dir, op):
+    """Every table stage is wiring only: the flow's rows equal the
+    direct call of the function with the same config."""
+    fn, head, spec, right_head = _TABLE_STAGE_CASES[op]
+    args = [build_flow(spark, head, sf_dir)]
+    flow = [*head, {"op": op, **spec}]
+    if right_head is not None:
+        args.append(build_flow(spark, right_head, sf_dir))
+        flow = [*right_head, {"op": "tag", "name": "r"},
+                *head, {"op": op, "right": "r", **spec}]
+    got = build_flow(spark, json.loads(json.dumps(flow)), sf_dir).collect()
+    want = fn(*args, **spec).collect()
+    assert want, f"{op}: no rows on the fixtures, so the case checks nothing"
+    assert sorted(map(tuple, got), key=repr) == sorted(
+        map(tuple, want), key=repr
+    )
+
+
+def test_table_stage_config_errors(spark, sf_dir):
+    """A key the function lacks is a TypeError naming it; a two-input
+    table stage without `right` fails with the stage index."""
+    with pytest.raises(TypeError, match="bogus"):
+        build_flow(spark, [*_DOCS, {"op": "dedup_exact", "bogus": 1}], sf_dir)
+    with pytest.raises(TypeError, match="bogus"):
+        build_flow(spark, [
+            *_EMB, {"op": "tag", "name": "q"}, *_EMB,
+            {"op": "hard_negatives", "right": "q", "bogus": 1},
+        ], sf_dir)
+    with pytest.raises(KeyError, match="stage 1: asof_join references "
+                                       "untagged frame None"):
+        build_flow(spark, [*_EVENTS, {"op": "asof_join", "on": ["user_id"]}],
+                   sf_dir)

@@ -18,11 +18,7 @@ from pyspark.sql import functions as F
 
 from aces_nifi_processors_bundle_spark.sources.registry import load_table
 
-
-def plan_of(df, mode: str = "formatted") -> str:
-    jvm = df.sparkSession._jvm
-    em = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-    return df._jdf.queryExecution().explainString(em)
+from .conftest import plan_of
 
 
 def _scan_lines(plan: str, token: str) -> list[str]:
@@ -85,25 +81,6 @@ def test_embedding_near_dups_reuses_sketch_exchange(spark, sf_dir):
     plan = plan_of(df)
     assert "isFinalPlan=true" in plan
     assert "ReusedExchange" in plan or "ReusedQueryStage" in plan
-
-
-def test_no_rowwise_python_udfs_or_cartesian_products_anywhere(spark, sf_dir):
-    """Sweep every registered query plan: Python only ever appears as
-    ArrowEvalPython (vectorized), never BatchEvalPython (row-at-a-time
-    pickling); no CartesianProduct between unbounded sides. The store/
-    stream queries execute jobs at construction, so the sweep covers
-    the lazy (plan-carrying) queries."""
-    from aces_nifi_processors_bundle_spark.plans.registry import QUERIES
-
-    checked = 0
-    for name, fn in QUERIES.items():
-        if name.startswith(("q_store_", "q_stream_")):
-            continue
-        plan = plan_of(fn(spark, sf_dir))
-        assert "BatchEvalPython" not in plan, f"{name}: row-wise Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-        checked += 1
-    assert checked >= 25
 
 
 def test_partial_update_broadcasts_small_source(spark, sf_dir):

@@ -1,12 +1,11 @@
 """Driver-contract simulator: runs every __spark_entry__ query at
 sf0.01 under a default (ANSI, host-TZ) session and compares against
-the DuckDB oracle with the conftest type-strict normalizer.
+the DuckDB oracle with tests/conftest.py's type-strict comparison
+(values and column type classes).
 Usage: TZ=America/New_York python tools/driversim.py [only_prefix...|@firstN]"""
-import datetime
-import decimal
-import math
 import os
 import sys
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -17,39 +16,14 @@ spark.sparkContext.setLogLevel("ERROR")
 import duckdb
 
 import __spark_entry__ as e
+from aces_nifi_processors_bundle_spark.sources.registry import TABLES
+from tests.conftest import assert_matches_oracle
 
 con = duckdb.connect()
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
+for t in TABLES:
     p = f"/root/testdata/sf0.01/{t}.parquet"
     if os.path.exists(p):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-
-
-def _norm(v):
-    if v is None:
-        return ("none", "")
-    if isinstance(v, bool):
-        return ("bool", str(v))
-    if isinstance(v, int):
-        return ("int", str(v))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return ("float", "NaN")
-        return ("float", repr(v))
-    if isinstance(v, decimal.Decimal):
-        return ("decimal", str(v))
-    if isinstance(v, (list, tuple)):
-        return ("list", tuple(_norm(x) for x in v))
-    if isinstance(v, dict):
-        return ("map", tuple(sorted((k, _norm(x)) for k, x in v.items())))
-    if isinstance(v, datetime.datetime):
-        return ("timestamp", v.isoformat())
-    if isinstance(v, datetime.date):
-        return ("date", v.isoformat())
-    if isinstance(v, (bytes, bytearray)):
-        return ("binary", bytes(v).hex())
-    return (type(v).__name__, str(v))
 
 
 qs, osql = e.queries(), e.oracle_sql()
@@ -66,29 +40,21 @@ bad = 0
 for name in names:
     try:
         sdf = qs[name](spark, "/root/testdata/sf0.01")
-        cols = sorted(sdf.columns)
-        srows = sorted(
-            tuple(_norm(r[c]) for c in cols) for r in sdf.collect()
-        )
+        rows = sdf.collect()
         if name not in osql:
-            print(name, "rows-only:", len(srows), flush=True)
+            print(name, "rows-only:", len(rows), flush=True)
             continue
-        cur = con.execute(osql[name])
-        dcols = [d[0] for d in cur.description]
-        idx = [dcols.index(c) for c in cols]
-        drows = sorted(
-            tuple(_norm(row[i]) for i in idx) for row in cur.fetchall()
+        # collect once: the compare reads the rows through this stand-in
+        collected = SimpleNamespace(
+            schema=sdf.schema, columns=sdf.columns, collect=lambda: rows
         )
-        ok = srows == drows
-        if not ok:
+        try:
+            assert_matches_oracle(collected, con, osql[name])
+        except AssertionError as mismatch:
             bad += 1
-            only_s = [r for r in srows if r not in drows][:2]
-            only_d = [r for r in drows if r not in srows][:2]
-            print(name, "rows", len(srows), "oracle", len(drows),
-                  "MISMATCH\n  spark-only:", only_s,
-                  "\n  duck-only:", only_d, flush=True)
+            print(name, "rows", len(rows), "MISMATCH\n ", mismatch, flush=True)
         else:
-            print(name, "rows", len(srows), "match: True", flush=True)
+            print(name, "rows", len(rows), "match: True", flush=True)
     except Exception as ex:  # noqa: BLE001
         bad += 1
         print(name, "ERROR", f"{type(ex).__name__}: {ex}"[:300], flush=True)

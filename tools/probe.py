@@ -1,7 +1,7 @@
 """Paired per-query probe for optimization work (round 14).
 
 Runs the named registry queries N times each in ONE warmed session
-(the bench's warmup jobs first), interleaved round-robin so container
+(bench.py's warm_up jobs first), interleaved round-robin so container
 drift hits every query equally, and reports per-query min — the
 SCALE.md paired-probe protocol. Optionally dumps `explain("formatted")`
 for each query to a directory (the plans/r14 evidence files).
@@ -22,12 +22,11 @@ import os
 import sys
 import time
 
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aces_nifi_processors_bundle_spark.plans.registry import QUERIES
 from aces_nifi_processors_bundle_spark.session import get_spark
+from bench import warm_up
 
 
 def main() -> None:
@@ -50,40 +49,7 @@ def main() -> None:
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark(app_name="aces-probe", extra_conf=extra or None)
-    # Same warmup as bench.py: executor pool, codegen JIT, Arrow worker,
-    # broadcast/ObjectHashAggregate machinery, stream staging dirs.
-    from pyspark.sql import functions as F  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    @pandas_udf("double")
-    def _warm_udf(v: pd.Series) -> pd.Series:
-        return v * 1.0
-
-    (
-        spark.range(100_000)
-        .select((F.col("id") * 1.0).alias("x"))
-        .repartition(32)
-        .select(_warm_udf(F.col("x")).alias("y"))
-        .groupBy((F.col("y") % 7).cast("long"))
-        .count()
-        .write.format("noop").mode("overwrite").save()
-    )
-    small = spark.range(100).select(F.col("id").alias("k"))
-    (
-        spark.range(100_000)
-        .select((F.col("id") % 100).alias("k"), F.col("id").alias("v"))
-        .join(F.broadcast(small), "k")
-        .groupBy("k")
-        .agg(F.slice(F.array_sort(F.collect_list(F.struct("v"))), 1, 5).alias("t"))
-        .write.format("noop").mode("overwrite").save()
-    )
-    from aces_nifi_processors_bundle_spark.plans.queries import (  # noqa: PLC0415
-        _table_stream,
-    )
-
-    if any(n.startswith("q_stream_") for n in args.names):
-        for _tbl in ("events", "documents", "embeddings"):
-            _table_stream(spark, sf_dir, _tbl)
+    warm_up(spark, sf_dir, args.names)
 
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)
