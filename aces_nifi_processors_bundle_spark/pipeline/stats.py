@@ -35,6 +35,12 @@ def correlation_matrix(
     correlation but keeps the moment sums exact. Rows where ANY of
     the k columns is null are excluded (listwise deletion), so every
     pair shares one n and the matrix is positive semi-definite.
+
+    Every moment sum (n, and per column Σx and Σx², plus Σxy per
+    pair) rides ONE map-side-combined aggregate over one scan, where
+    df.stat.corr runs a job per pair. corr is three IEEE ops on those
+    exact decimal moments, so it compares against the oracle
+    unrounded.
     """
     if len(cols) < 2:
         raise ValueError(f"need >= 2 columns, got {cols}")

@@ -7,9 +7,17 @@ name and hashes values):
 - float aggregates are computed in DECIMAL where exact, else rounded
 - arrays are sorted and joined to strings
 - timestamps are rendered as formatted strings
+
+A query that is one flow (flows.py) is written as a flow document,
+``q_name = _flow(stage, ...)``: its ordering is a trailing ``sql``
+stage, its column expressions a ``select`` stage, and a second input
+a ``filter`` + ``tag`` branch. A query that needs more than the
+existing stages and keys stays a Python function.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,7 +28,6 @@ from ..operators.binning import (
     GeoTileBinner,
     LiteralBinner,
     MergedBinner,
-    NumericBinner,
     bin_count,
     bin_records,
 )
@@ -51,6 +58,16 @@ def _scratch(prefix: str) -> str:
         _atexit.register(_shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
     return _tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
+
+def _flow(*stages: dict) -> Callable[[SparkSession, str], DataFrame]:
+    """A registry query that runs `stages` as one flow document."""
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        # imported per call so a wrapped flows.build_flow (perfbench's
+        # tracer) is the one that runs
+        from ..flows import build_flow
+
+        return build_flow(spark, list(stages), sf_dir)
+    return query
 
 
 def _trained_tokenizer(
@@ -170,12 +187,14 @@ def q_attrs_failure_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- O3: numeric / geotile / multiple-mode binning ---------------------
 
-def q_bin_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NumericBinner: hierarchical decimal bins, maxLevel=3."""
-    events = load_table(spark, sf_dir, "events")
-    return bin_count(
-        events, [NumericBinner(bin_name="byValue", data_field="value", max_level=3)]
-    ).orderBy("name")
+q_bin_numeric = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "bin_count", "binners": [
+        {"kind": "numeric", "bin_name": "byValue", "data_field": "value",
+         "max_level": 3},
+    ]},
+    {"op": "sql", "query": "SELECT * FROM __this__ ORDER BY name"},
+)
 
 
 GEO_MAX_LEVEL = 6
@@ -198,14 +217,20 @@ def q_bin_geotile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("name")
 
 
-def q_bin_multiple_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The "mulitple" (sic) output mode: one record carrying all bins."""
-    events = load_table(spark, sf_dir, "events")
-    recs = bin_records(events, FLAGSHIP_BINNERS, output_mode="mulitple",
-                       keep=["event_id"])
-    return recs.select(
-        "event_id", F.array_join("bins", ";").alias("bins")
-    )
+# "mulitple" (sic) is the reference's spelling of the all-bins-in-one-
+# record output mode.
+q_bin_multiple_mode = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "bin", "output_mode": "mulitple", "keep": ["event_id"],
+     "binners": [
+         {"kind": "date", "bin_name": "byDay", "data_field": "ts",
+          "granularity": "DAY"},
+         {"kind": "literal", "bin_name": "byType", "data_field": "event_type"},
+         {"kind": "merged", "bin_name": "dayType",
+          "components": ["byDay", "byType"]},
+     ]},
+    {"op": "select", "columns": ["event_id", "array_join(bins, ';') AS bins"]},
+)
 
 
 def q_bin_failure_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,19 +784,24 @@ def q_put_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bin_date_granularities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O3 DateBinner: every granularity format in one pass, plus the
-    invalid-granularity → MIN fallback (DataBinningProcessor.java:151-164)."""
-    events = load_table(spark, sf_dir, "events")
-    binners = [
-        DateBinner(bin_name="byYear", data_field="ts", granularity="YEAR"),
-        DateBinner(bin_name="byMonth", data_field="ts", granularity="MONTH"),
-        DateBinner(bin_name="byHour", data_field="ts", granularity="HOUR"),
-        DateBinner(bin_name="bySec", data_field="ts", granularity="SEC"),
-        # invalid granularity falls back to MIN like DateGranularity.valueOf
-        DateBinner(bin_name="byMin", data_field="ts", granularity="BOGUS"),
-    ]
-    return bin_count(events, binners).orderBy("name")
+q_bin_date_granularities = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "bin_count", "binners": [
+        {"kind": "date", "bin_name": "byYear", "data_field": "ts",
+         "granularity": "YEAR"},
+        {"kind": "date", "bin_name": "byMonth", "data_field": "ts",
+         "granularity": "MONTH"},
+        {"kind": "date", "bin_name": "byHour", "data_field": "ts",
+         "granularity": "HOUR"},
+        {"kind": "date", "bin_name": "bySec", "data_field": "ts",
+         "granularity": "SEC"},
+        # an invalid granularity falls back to MIN like
+        # DateGranularity.valueOf (DataBinningProcessor.java:151-164)
+        {"kind": "date", "bin_name": "byMin", "data_field": "ts",
+         "granularity": "BOGUS"},
+    ]},
+    {"op": "sql", "query": "SELECT * FROM __this__ ORDER BY name"},
+)
 
 
 def q_attrs_json_body(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -903,8 +933,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_token_count_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token counts under the TRAINED merges table
-    (round 11): bpe_train's 20 corpus-learned merges replayed by
+    """Per-document token counts under the TRAINED merges table:
+    bpe_train's 20 corpus-learned merges replayed by
     bpe_token_counts over the distinct vocabulary — the counts that
     token-budget mixing (q_mix_token_budget, q_mix_temperature) should
     allocate by once a real tokenizer is trained. The oracle trains
@@ -923,7 +953,7 @@ def q_token_count_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained tokenizer ENCODING documents (pipeline/text.py::
-    bpe_encode, round 11): every 10th doc emitted as (doc_id, pos,
+    bpe_encode): every 10th doc emitted as (doc_id, pos,
     token) rows under the 20 corpus-trained merges — the actual
     tokenizer output a sequence-packing stage consumes, not just
     counts. The replace fold runs over the distinct vocabulary; the
@@ -943,7 +973,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained tokenizer's id VOCABULARY (pipeline/text.py::
-    bpe_vocab, round 12): base alphabet in UTF-8 byte order, then the
+    bpe_vocab): base alphabet in UTF-8 byte order, then the
     20 merged symbols at alphabet_size + rank — (token_id, token,
     is_merged), duplicate surfaces resolved to the smaller id. The
     oracle re-derives the alphabet from the training chain's w0
@@ -956,8 +986,8 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The id-level token stream (pipeline/text.py::bpe_encode_ids,
-    round 12) — what a training pipeline actually consumes: every
+    """The id-level token stream (pipeline/text.py::bpe_encode_ids)
+    — what a training pipeline actually consumes: every
     10th doc as (doc_id, pos, token_id) under the corpus-trained
     table and the corpus-wide registered vocabulary (ids from the
     corpus, not the subset's own alphabet). The oracle chains the
@@ -974,8 +1004,8 @@ def q_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pack_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATERIALIZED packing (pipeline/splits.py::pack_materialize,
-    round 13) — the last step of the training-data path: the pack
+    """MATERIALIZED packing (pipeline/splits.py::pack_materialize)
+    — the last step of the training-data path: the pack
     PLAN (q_pack_trained's shard/prefix-sum/chop layout) applied to
     the actual id-level token stream (q_bpe_encode_ids' sample, the
     registered corpus vocabulary), yielding the fixed-length
@@ -1019,8 +1049,8 @@ def q_pack_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenizer's DECODE contract under the oracle gate
-    (round 12): decode(encode(doc)) must reproduce the pre-tokenizer's
+    """The tokenizer's DECODE contract under the oracle gate:
+    decode(encode(doc)) must reproduce the pre-tokenizer's
     canonical form (lowercased pieces, whitespace removed) exactly —
     BPE merges are purely concatenative, so the invariant is a graded
     equality, not a claim, and it covers the no-OOV contract too
@@ -1093,8 +1123,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash near-dup with the hot-bucket guard UNDER THE ORACLE
-    GATE (the simhash treatment from round 5): planted suffix edits
-    (doc_id+200000) must pair, while a 2-template exact-duplicate
+    GATE (q_dedup_simhash grades the same guard for simhash): planted
+    suffix edits (doc_id+200000) must pair, while a 2-template exact-duplicate
     flood (doc_id+300000, 5% of docs) collapses into band buckets
     bigger than max_bucket=20 and is dropped BEFORE pairing — the
     oracle mirrors the cap with a HAVING count(*) <= 20 on the band
@@ -1165,7 +1195,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     media = synth_media_from_documents(docs)
     feats = extract_features(media, dim=8)
-    # round 5: every md5-byte/255 value rounds identically as float32
+    # every md5-byte/255 value rounds identically as float32
     # and as float64 at 5 decimals (3 of 256 differ at 6)
     feat_cols = [
         F.round(F.get(F.col("feat"), i).cast("double"), 5).cast("string")
@@ -1646,7 +1676,7 @@ def q_ivf_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN recall report under the oracle gate (pipeline/similarity.py
-    ::ann_recall_report, round 11): grades q_ivf_topk's index answers
+    ::ann_recall_report): grades q_ivf_topk's index answers
     (md5-seeded 16-cell IVF, 4 probes) against q_sim_topk's
     brute-force ground truth over the same 8 query vectors — one row
     of (recall@5, mean rank displacement). The recall claims for the
@@ -1667,7 +1697,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ANN recall report's PRODUCTION shape (round 12 — the same
+    """The ANN recall report's PRODUCTION shape (the same
     move as q_dedup_recall_sampled): ann_recall_report's own docstring
     says "run it on a SAMPLED query set — brute-force ground truth is
     the quadratic part"; this grades that shape. Queries are the
@@ -1694,8 +1724,8 @@ def q_ann_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_recall_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sampled ANN recall report under an ABSOLUTE query budget
-    (round 13): q_ann_recall_sampled's fixed-denom fraction lets the
+    """The sampled ANN recall report under an ABSOLUTE query budget:
+    q_ann_recall_sampled's fixed-denom fraction lets the
     query count — and with it the brute-force ground-truth cost,
     which grows with BOTH the query count and the corpus — scale with
     the data (32 → 312 queries at sf0.1 → sf1; SCALE.md). Here the
@@ -1772,25 +1802,18 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", "jaccard")
 
 
-def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment by id hash
-    (pipeline/splits.py::hash_split): layout-independent and stable
-    under corpus growth — each doc's split reads only its own id."""
-    from ..pipeline.splits import hash_split
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return hash_split(docs, weights={"train": 0.9, "val": 0.05, "test": 0.05})
+q_hash_split = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select", "columns": ["doc_id", "lang"]},
+    {"op": "hash_split", "weights": {"train": 0.9, "val": 0.05, "test": 0.05}},
+)
 
 
-def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 30-docs-per-language stratified sample via the
-    salted two-phase hash-order top-n (pipeline/splits.py::
-    stratified_sample). The salted phases return exactly the flat
-    window's answer; the oracle IS the flat window."""
-    from ..pipeline.splits import stratified_sample
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stratified_sample(docs, ["lang"], 30)
+q_sample_stratified = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select", "columns": ["doc_id", "lang"]},
+    {"op": "stratified_sample", "strata": ["lang"], "n": 30},
+)
 
 
 def q_mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1808,8 +1831,8 @@ def q_mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mix_trained_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget mixing allocated by the TRAINED tokenizer
-    (round 11): the q_mix_token_budget greedy hash-order prefix walk,
+    """Token-budget mixing allocated by the TRAINED tokenizer:
+    the q_mix_token_budget greedy hash-order prefix walk,
     with each doc's cost the real bpe_train-table token count instead
     of the whitespace heuristic — the integration the trained
     tokenizer exists for (a budget in 'tokens' should mean tokens the
@@ -1833,19 +1856,16 @@ def q_mix_trained_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "n_tokens", "tokens_before")
 
 
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping word-window chunking (pipeline/text.py::
-    chunk_documents): chunk 40 / overlap 10 over documents — pure
-    codegen fan-out, no shuffle, no UDF."""
-    from ..pipeline.text import chunk_documents
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return chunk_documents(docs, chunk_tokens=40, overlap=10)
+q_chunk_documents = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select", "columns": ["doc_id", "text"]},
+    {"op": "chunk", "chunk_tokens": 40, "overlap": 10},
+)
 
 
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (pipeline/splits.py::dsir_weights,
-    round 11 — Xie et al. 2023): every 50th doc plays the target
+    Xie et al. 2023): every 50th doc plays the target
     distribution (the decontaminate convention), every doc scored by
     sum of hashed uni+bigram hits times the smoothed per-bucket
     log-ratio ln(p_target/p_raw). The oracle mirrors the md5 bucket
@@ -1859,8 +1879,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR selection END-TO-END (pipeline/splits.py::dsir_select,
-    round 12): the importance weights actually driving membership —
+    """DSIR selection END-TO-END (pipeline/splits.py::dsir_select):
+    the importance weights actually driving membership —
     the method's whole point (Xie et al. 2023). keep_prob =
     logistic(importance), rounded to 6 dp; kept = the established
     hash-walk membership rule (md5-bucket(id)/1e6 < keep_prob). The
@@ -1876,7 +1896,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR sampling WITHOUT replacement (pipeline/splits.py::
-    dsir_resample, round 12) — the paper's actual resampling scheme
+    dsir_resample) — the paper's actual resampling scheme
     via the Gumbel top-k identity: per-doc Gumbel noise drawn from
     the doc's own hash, ranked by importance + noise, top 100 kept
     through the salted two-phase top-k (no flat global sort). The
@@ -1890,8 +1910,8 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dsir_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR model-DRIFT row (pipeline/splits.py::dsir_drift, round
-    13): the dsir_fit/dsir_score lifecycle serves a lambda table that
+    """DSIR model-DRIFT row (pipeline/splits.py::dsir_drift): the
+    dsir_fit/dsir_score lifecycle serves a lambda table that
     ages as the raw pool drifts — this one-row report compares a
     scored batch's feature-bucket distribution (here the doc_id % 3
     slice, a deterministic stand-in for "this week's batch") against
@@ -1908,7 +1928,7 @@ def q_dsir_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR scoring on a documents STREAM (round 12) — the serving
+    """DSIR scoring on a documents STREAM — the serving
     shape the dsir_lambda/dsir_score split exists for: the log-ratio
     table is fitted batch-side on the static corpus (reference
     distributions update on a slow cadence), pinned once
@@ -2009,22 +2029,14 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id")
 
 
-def q_flow_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A complete training-data pipeline as ONE JSON flow document
-    (flows.py): exact dedup → train split → overlapping chunking.
-    Folds into one Catalyst plan; the oracle recomputes the identical
-    three stages in SQL."""
-    from ..flows import build_flow
-
-    flow = [
-        {"op": "load", "table": "documents"},
-        {"op": "select", "columns": ["doc_id", "text"]},
-        {"op": "dedup_exact"},
-        {"op": "hash_split"},
-        {"op": "filter", "condition": "split = 'train'"},
-        {"op": "chunk", "chunk_tokens": 40, "overlap": 10},
-    ]
-    return build_flow(spark, flow, sf_dir)
+q_flow_llm_pipeline = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select", "columns": ["doc_id", "text"]},
+    {"op": "dedup_exact"},
+    {"op": "hash_split"},
+    {"op": "filter", "condition": "split = 'train'"},
+    {"op": "chunk", "chunk_tokens": 40, "overlap": 10},
+)
 
 
 def q_stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2091,7 +2103,7 @@ def q_stream_token_count_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Token counting under the TRAINED merges table on a documents
-    STREAM (round 12) — the tokenizer register's serving half in
+    STREAM — the tokenizer register's serving half in
     streaming mode, completing the q_stream_dsir symmetry: the merge
     table is trained batch-side (the registered artifact), and each
     micro-batch's docs are counted batch-mode inside foreachBatch
@@ -2318,7 +2330,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pack_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing under the TRAINED tokenizer (round 12): the
+    """Sequence packing under the TRAINED tokenizer: the
     q_pack_sequences shard/prefix-sum plan with each document's cost
     the real bpe_train-table token count instead of the whitespace
     heuristic — closing the same loop q_mix_trained_budget closed for
@@ -2345,7 +2357,7 @@ def q_pack_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pack_chunked_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION packing composition (round 13): chunk →
+    """The PRODUCTION packing composition: chunk →
     trained-encode-count → pack, end-to-end. q_pack_trained packs
     whole documents; a real pipeline chunks first (chunk_documents,
     the q_chunk_documents 40/10 window), costs each CHUNK by the
@@ -2694,44 +2706,37 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(qname)
 
 
-def q_flow_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The as-of enrichment assembled as a declarative JSON flow —
-    exercises the DAG flow shape (tag a branch, load a second branch,
-    two-input asof_join stage) and must hash-match q_asof_enrich's
-    oracle exactly: the flow layer adds no semantics, only wiring."""
-    from ..flows import build_flow
-
-    flow = [
-        {"op": "load", "table": "events"},
-        {"op": "filter", "condition": "event_type = 'view'"},
-        {"op": "select", "columns": ["event_id", "user_id", "ts", "value"]},
-        {"op": "tag", "name": "views"},
-        {"op": "load", "table": "events"},
-        {"op": "filter", "condition": "event_type = 'purchase'"},
-        {"op": "select", "columns": ["event_id", "user_id", "ts", "value"]},
-        {
-            "op": "asof_join",
-            "right": "views",
-            "on": ["user_id"],
-            "left_ts": "ts",
-            "values": ["event_id", "value"],
-            "tolerance_sec": 21600,
-            "tiebreak": "event_id",
-        },
-        {
-            "op": "select",
-            "columns": [
-                "event_id",
-                "user_id",
-                "unix_micros(ts) AS ts_us",
-                "round(value, 6) AS value",
-                "event_id_matched AS view_event_id",
-                "unix_micros(ts_matched) AS view_ts_us",
-                "round(value_matched, 6) AS view_value",
-            ],
-        },
-    ]
-    return build_flow(spark, flow, sf_dir)
+# q_asof_enrich as a two-branch flow; it shares q_asof_enrich's oracle
+q_flow_asof = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "filter", "condition": "event_type = 'view'"},
+    {"op": "select", "columns": ["event_id", "user_id", "ts", "value"]},
+    {"op": "tag", "name": "views"},
+    {"op": "load", "table": "events"},
+    {"op": "filter", "condition": "event_type = 'purchase'"},
+    {"op": "select", "columns": ["event_id", "user_id", "ts", "value"]},
+    {
+        "op": "asof_join",
+        "right": "views",
+        "on": ["user_id"],
+        "left_ts": "ts",
+        "values": ["event_id", "value"],
+        "tolerance_sec": 21600,
+        "tiebreak": "event_id",
+    },
+    {
+        "op": "select",
+        "columns": [
+            "event_id",
+            "user_id",
+            "unix_micros(ts) AS ts_us",
+            "round(value, 6) AS value",
+            "event_id_matched AS view_event_id",
+            "unix_micros(ts_matched) AS view_ts_us",
+            "round(value_matched, 6) AS view_value",
+        ],
+    },
+)
 
 
 def q_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3030,65 +3035,34 @@ def q_store_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.filter(F.col("n_rows") > 0)
 
 
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel view→click→purchase over events
-    (pipeline/reports.py::funnel): per-step users-reaching counts and
-    step-to-step conversion, each step's clock starting at the
-    previous step's CHAINED completion time (not its global first
-    occurrence). Pinned to the single-shuffle ARRAY path (per-user
-    sorted event array + one fold — one hashpartitioning(user)
-    exchange, plan-asserted); the k-pass chained path is the
-    cross-check (pytest asserts both agree; method='auto' picks
-    per step count — see the funnel docstring and SCALE.md §skew
-    for the measured trade)."""
-    from ..pipeline.reports import funnel
-
-    events = load_table(spark, sf_dir, "events")
-    return funnel(events, ["view", "click", "purchase"], method="array")
+# Pinned to the single-shuffle array path (one hashpartitioning(user)
+# exchange, plan-asserted in tests/test_plans.py); pytest checks the
+# chained path against it.
+q_funnel = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "funnel", "steps": ["view", "click", "purchase"],
+     "method": "array"},
+)
 
 
-def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The conversion-window funnel: each step must follow the
-    previous CHAINED step within 1 hour — the "converted within X"
-    reporting shape. Later occurrences outside the window do not
-    count and stop that user's chain. Array path, like q_funnel."""
-    from ..pipeline.reports import funnel
-
-    events = load_table(spark, sf_dir, "events")
-    return funnel(
-        events, ["view", "click", "purchase"], window_sec=3600, method="array"
-    )
+q_funnel_windowed = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "funnel", "steps": ["view", "click", "purchase"],
+     "window_sec": 3600, "method": "array"},
+)
 
 
-def q_funnel_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RESTART-capable windowed funnel (Amplitude-style): a user
-    reaches step i iff ANY event subsequence completes steps[0..i]
-    with every gap inside the 1-hour window — the chain re-anchors on
-    later occurrences, so counts >= q_funnel_windowed's first-touch
-    numbers by construction (pytest-pinned). Same single-shuffle
-    sorted-array fold, latest-completion-dominates update rule
-    (pipeline/reports.py::_funnel_times_restart, greedy proven exact
-    against an interval-DP reference). The oracle replays the exact
-    per-user event fold as a DuckDB RECURSIVE CTE carrying the k-slot
-    state list."""
-    from ..pipeline.reports import funnel
-
-    events = load_table(spark, sf_dir, "events")
-    return funnel(
-        events, ["view", "click", "purchase"], window_sec=3600, restart=True
-    )
+q_funnel_restart = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "funnel", "steps": ["view", "click", "purchase"],
+     "window_sec": 3600, "restart": True},
+)
 
 
-def q_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key detection (pipeline/reports.py::frequent_keys): the
-    exact frequency pass that feeds salted_join's hot_keys broadcast
-    (CLUSTER.md) — one map-side-combined hash-groupBy plus a one-row
-    total broadcast back onto the distinct-key-sized count frame.
-    Returns keys above 1.5x the uniform share with count and share."""
-    from ..pipeline.reports import frequent_keys
-
-    events = load_table(spark, sf_dir, "events")
-    return frequent_keys(events, "user_id", min_share=0.0015)
+q_hot_keys = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "frequent_keys", "cols": "user_id", "min_share": 0.0015},
+)
 
 
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3546,94 +3520,53 @@ def q_validate_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- time-series operators (pipeline/timeseries.py) ---------------------
 
-def q_rolling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event trailing-hour aggregates over each user's event
-    stream: one exchange on user_id + one sort, all four aggregates
-    sharing a single running RANGE frame. Values ride as integer
-    cents, so every column is exact under the hash gate."""
-    from ..pipeline.timeseries import rolling_aggregates
-
-    events = load_table(spark, sf_dir, "events")
-    return rolling_aggregates(events, "user_id", "ts", "value", 3600)
+q_rolling_hourly = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "rolling", "key": "user_id", "ts_col": "ts", "value_col": "value",
+     "window_sec": 3600},
+)
 
 
-def q_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final EWMA (alpha=0.25, pandas adjust=False recurrence) of each
-    user's value series. The per-key fold's operand order matches the
-    DuckDB list_reduce oracle exactly, so the doubles compare equal
-    UNROUNDED — the strictest float gate in the registry."""
-    from ..pipeline.timeseries import ewma_last
-
-    events = load_table(spark, sf_dir, "events")
-    return ewma_last(events, "user_id", "ts", "value", 0.25, "event_id")
+q_ewma_value = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "ewma", "key": "user_id", "ts_col": "ts", "value_col": "value",
+     "alpha": 0.25, "tie_col": "event_id"},
+)
 
 
-def q_resample_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled 6-hour resample per user with forward-filled last
-    value: grid rows come from sequence()+explode (no extra shuffle),
-    gaps report n_events=0/sum_cents=0, and last_cents carries the
-    most recent observation across gaps."""
-    from ..pipeline.timeseries import resample_gapfill
-
-    events = load_table(spark, sf_dir, "events")
-    return resample_gapfill(
-        events, "user_id", "ts", "value", 21600, how="ffill"
-    )
+q_resample_6h = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "resample", "key": "user_id", "ts_col": "ts", "value_col": "value",
+     "bucket_sec": 21600, "how": "ffill"},
+)
 
 
-def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type winsorization (pipeline/stats.py::winsorize):
-    clamp every event value to its type's exact discrete [p01, p99]
-    quantiles — heavy-tail defense before feature extraction. The
-    thresholds ride the value-histogram rank walk (bounded by value
-    cardinality per group, no whole-group percentile buffer) and
-    broadcast back; the oracle derives them independently with
-    DuckDB's native quantile_disc."""
-    from ..pipeline.stats import winsorize
-
-    events = load_table(spark, sf_dir, "events")
-    return winsorize(events, "event_type", "value", "event_id",
-                     p_lo=0.01, p_hi=0.99)
+q_winsorize = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "winsorize", "group": "event_type", "value_col": "value",
+     "id_col": "event_id", "p_lo": 0.01, "p_hi": 0.99},
+)
 
 
-def q_anomaly_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events whose value sits more than 3 sample standard deviations
-    from their event_type mean, decided in exact decimal arithmetic
-    (no sqrt/division/floats — see pipeline/timeseries.py). Stats are
-    one map-side-combined groupBy broadcast back onto the rows: no
-    window over whole-type partitions, which at 100 TB would be one
-    task per event_type."""
-    from ..pipeline.timeseries import anomaly_flags
-
-    events = load_table(spark, sf_dir, "events")
-    return anomaly_flags(events, "event_type", "value", k=3)
+q_anomaly_values = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "anomaly", "group": "event_type", "value_col": "value", "k": 3},
+)
 
 
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over each user's event
-    sequence (pipeline/reports.py::event_transitions): (prev, next)
-    counts from a lag window on one user_id exchange, probabilities
-    as one exact-bigint IEEE division — hash-comparable unrounded."""
-    from ..pipeline.reports import event_transitions
-
-    events = load_table(spark, sf_dir, "events")
-    return event_transitions(events, "user_id", "ts", "event_type",
-                             "event_id")
+q_event_transitions = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "transitions", "key": "user_id", "ts_col": "ts",
+     "type_col": "event_type", "tie_col": "event_id"},
+)
 
 
-def q_editdist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All document pairs whose lowercased 24-char text prefix is
-    within Levenshtein distance 1 (pipeline/strings.py::
-    edit_distance_join): SymSpell deletion-variant equi-join blocking
-    + thresholded JVM levenshtein verify — no all-pairs compare. The
-    DuckDB oracle IS the banded O(n^2) ground truth, so it also
-    proves the blocking has no false negatives."""
-    from ..pipeline.strings import edit_distance_join
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.lower(F.substring("text", 1, 24)).alias("prefix")
-    )
-    return edit_distance_join(docs, "doc_id", "prefix", k=1)
+q_editdist_join = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select",
+     "columns": ["doc_id", "lower(substring(text, 1, 24)) AS prefix"]},
+    {"op": "editdist_join", "id_col": "doc_id", "str_col": "prefix", "k": 1},
+)
 
 
 def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3704,54 +3637,35 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count(_cosupply_edges(li))
 
 
-def q_rolling_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HOT-KEY rolling path under the full value-hash gate:
-    chunk_sec=21600 bounds each window task by events-per-user-per-6h
-    (the monster-key defense — 12.9 s -> ~2 s on the 530k-event
-    sf1-skew user, SCALE.md) and stitches boundary frames exactly via
-    replicated context rows. Output is BYTE-IDENTICAL to
-    q_rolling_hourly, so it shares that oracle verbatim."""
-    from ..pipeline.timeseries import rolling_aggregates
-
-    events = load_table(spark, sf_dir, "events")
-    return rolling_aggregates(
-        events, "user_id", "ts", "value", 3600, chunk_sec=21600
-    )
+# chunk_sec=21600 bounds each window task by events per user per 6 h,
+# the hot-key defense (12.9 s -> ~2 s on the 530k-event sf1-skew user,
+# SCALE.md). The output is byte-identical to q_rolling_hourly's, so
+# the two share one oracle.
+q_rolling_chunked = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "rolling", "key": "user_id", "ts_col": "ts", "value_col": "value",
+     "window_sec": 3600, "chunk_sec": 21600},
+)
 
 
-def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlations over four lineitem measures in
-    ONE scan (pipeline/stats.py::correlation_matrix — 15 decimal
-    moment sums in a single map-side-combined aggregate; contrast
-    df.stat.corr's job-per-pair). corr is exactly three IEEE ops on
-    exact-decimal moments, so the oracle compares unrounded."""
-    from ..pipeline.stats import correlation_matrix
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return correlation_matrix(
-        li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-    )
+q_corr_matrix = _flow(
+    {"op": "load", "table": "lineitem"},
+    {"op": "corr_matrix",
+     "cols": ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]},
+)
 
 
-def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-linear-model quality scoring over documents
-    (pipeline/classify.py::linear_text_classifier): unigram+bigram
-    features hashed into 4096 buckets, broadcast integer-milli weight
-    vector, exact bigint logit + boolean label (the fastText-style
-    corpus-filter inference step). The deterministic hash_weights
-    fixture stands in for an offline-trained model; both engines build
-    it from the same md5 construction, so logits compare exactly."""
-    from ..pipeline.classify import hash_weights, linear_text_classifier
-
-    docs = load_table(spark, sf_dir, "documents")
-    return linear_text_classifier(
-        docs, hash_weights(spark, 4096), n_buckets=4096
-    )
+# Without a weights_path the stage uses the hash_weights fixture, which
+# the oracle rebuilds from the same md5 construction.
+q_quality_classifier = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "classify", "n_buckets": 4096},
+)
 
 
 def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier calibration report (pipeline/classify.py::
-    calibration_report, round 13): the hashed-linear quality model's
+    calibration_report): the hashed-linear quality model's
     probabilities binned into deciles against a deterministic
     reference label (lang = 'en' — the label SOURCE is fixture
     detail; the graded machinery is the binning, the order-proof
@@ -3778,7 +3692,7 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa (pipeline/classify.py::cohens_kappa, round 13):
+    """Cohen's kappa (pipeline/classify.py::cohens_kappa):
     chance-corrected agreement between the hashed-linear model's
     boolean label and the lang = 'en' reference — the one-row QA
     number for "does the trained filter agree beyond base rates".
@@ -3804,7 +3718,7 @@ def q_classifier_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected calibration error (pipeline/classify.py::
-    expected_calibration_error, round 13): q_calibration's table
+    expected_calibration_error): q_calibration's table
     folded to the one dashboard row — the bin-mass-weighted mean
     |mean_prob − frac_actual|, order-proof via an exact decimal
     weighted sum. Oracle = the calibration oracle wrapped in the
@@ -3828,68 +3742,37 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     return expected_calibration_error(j)
 
 
-def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day active users per calendar day
-    (pipeline/reports.py::rolling_active_users). The trailing distinct
-    count is computed by fanning DISTINCT (user, day) pairs out to the
-    7 report days each covers — shuffled volume is 7x the user-day
-    pairs, never a range self-join over raw events. Oracle = the
-    correlated BETWEEN definition, so the fan-out reformulation is
-    value-checked against first principles."""
-    from ..pipeline.reports import rolling_active_users
-
-    events = load_table(spark, sf_dir, "events")
-    return rolling_active_users(events, "user_id", "ts", 7)
+q_rolling_active_users = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "active_users", "user_col": "user_id", "ts_col": "ts",
+     "window_days": 7},
+)
 
 
-def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-type outliers: |value - median| > 3 * MAD
-    (pipeline/timeseries.py::mad_flags) — the median/MAD twin of
-    q_anomaly_values, immune to the outliers inflating the scale
-    estimate. Medians are exact integer order statistics from the
-    value-histogram rank walk (never a per-group percentile buffer);
-    the oracle states the same test with DuckDB's native median()."""
-    from ..pipeline.timeseries import mad_flags
-
-    events = load_table(spark, sf_dir, "events")
-    return mad_flags(events, "event_type", "value", k=3)
+q_anomaly_mad = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "anomaly_mad", "group": "event_type", "value_col": "value", "k": 3},
+)
 
 
-def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page CUSUM mean-shift monitoring per event_type
-    (pipeline/timeseries.py::cusum_flags): baseline mean trained on
-    the first nine days, the remainder scored with the classic
-    sigma-scaled parameters (slack ~ sigma/2 = 2500 cents, decision
-    band h ~ 5 sigma = 25000 cents). The sequential max(0, .)
-    recurrence runs as its prefix-scan closed form — two window
-    functions on ONE key exchange — with division-free n_t-scaled
-    integer arithmetic in decimal(38,0)/HUGEINT, so the flag set is
-    exact on both engines."""
-    from ..pipeline.timeseries import cusum_flags
-
-    events = load_table(spark, sf_dir, "events")
-    return cusum_flags(
-        events, "event_type", "ts", "value", "2024-01-10",
-        h_cents=25000, slack_cents=2500,
-    )
+# Baseline = the first nine days; slack ~ sigma/2 (2500 cents) and
+# h ~ 5 sigma (25000 cents) are the classic Page CUSUM parameters.
+q_changepoint_cusum = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "cusum", "key": "event_type", "ts_col": "ts", "value_col": "value",
+     "train_end_ts": "2024-01-10", "h_cents": 25000, "slack_cents": 2500},
+)
 
 
-def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (pipeline/similarity.py::pq_topk):
-    8 subspaces x 16 codes trained with two Lloyd's iterations from a
-    data-derived deterministic init, corpus encoded to 8 small ints
-    per vector (32x compression vs float32), queries (vec_id < 8)
-    ranked by ADC lookup-table sums. The oracle re-derives the ENTIRE
-    train -> encode -> search pipeline in DuckDB — codebooks, code
-    assignments, distance tables, and ranking all tie out exactly
-    (decimal component sums, dim-sequential folds)."""
-    from ..pipeline.similarity import pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return pq_topk(
-        emb, emb.filter(F.col("vec_id") < 8), dim=64, m=8, ksub=16, k=5,
-        n_iter=2,
-    )
+q_pq_topk = _flow(
+    {"op": "load", "table": "embeddings"},
+    {"op": "tag", "name": "corpus"},
+    {"op": "filter", "condition": "vec_id < 8"},
+    {"op": "tag", "name": "queries"},
+    {"op": "use", "tag": "corpus"},
+    {"op": "pq_topk", "right": "queries", "dim": 64, "m": 8, "ksub": 16,
+     "k": 5, "n_iter": 2},
+)
 
 
 def q_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3922,53 +3805,33 @@ def q_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(qname)
 
 
-def q_cusum_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HOT-KEY CUSUM path under the full value-hash gate:
-    chunk_sec=86400 bounds each window task by rows-per-key-per-day;
-    per-chunk (total, min-prefix) summaries compose on a summary-row
-    window. Decimal addition is exactly associative, so the output is
-    BIT-IDENTICAL to q_changepoint_cusum and shares its oracle
-    verbatim."""
-    from ..pipeline.timeseries import cusum_flags
-
-    events = load_table(spark, sf_dir, "events")
-    return cusum_flags(
-        events, "event_type", "ts", "value", "2024-01-10",
-        h_cents=25000, slack_cents=2500, chunk_sec=86400,
-    )
+# chunk_sec=86400 bounds each window task by rows per key per day.
+# Decimal addition is associative, so the output is bit-identical to
+# q_changepoint_cusum's and the two share one oracle.
+q_cusum_chunked = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "cusum", "key": "event_type", "ts_col": "ts", "value_col": "value",
+     "train_end_ts": "2024-01-10", "h_cents": 25000, "slack_cents": 2500,
+     "chunk_sec": 86400},
+)
 
 
-def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF + PQ composed (pipeline/similarity.py::ivfpq_topk): coarse
-    md5-centroid probe pruning (4 of 16 cells per query) + PQ ADC
-    scoring over the survivors — the FAISS-style serving shape where
-    pruning cuts WHICH vectors are scored and 32x code compression
-    cuts the bytes per scored vector. The oracle composes the
-    untrained-IVF assignment CTEs with the full PQ train/encode/table
-    chain, so the ENTIRE composition is value-checked."""
-    from ..pipeline.similarity import ivfpq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivfpq_topk(
-        emb, emb.filter(F.col("vec_id") < 8), dim=64,
-        n_centroids=16, n_probe=4, m=8, ksub=16, k=5, n_iter=2,
-    )
+q_ivfpq_topk = _flow(
+    {"op": "load", "table": "embeddings"},
+    {"op": "tag", "name": "corpus"},
+    {"op": "filter", "condition": "vec_id < 8"},
+    {"op": "tag", "name": "queries"},
+    {"op": "use", "tag": "corpus"},
+    {"op": "ivfpq_topk", "right": "queries", "dim": 64, "n_centroids": 16,
+     "n_probe": 4, "m": 8, "ksub": 16, "k": 5, "n_iter": 2},
+)
 
 
-def q_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact p25/p50/p75/p95/p99 of event value per event_type
-    (pipeline/stats.py::group_quantiles) — discrete order statistics
-    from the value-histogram rank walk: window work bounded by value
-    CARDINALITY per group, never a whole-group percentile buffer, all
-    five quantiles on one histogram pass with integer-exact
-    ceil(n*p) ranks. Oracle = DuckDB's native quantile_disc, an
-    independent implementation of the same statistic."""
-    from ..pipeline.stats import group_quantiles
-
-    events = load_table(spark, sf_dir, "events")
-    return group_quantiles(
-        events, "event_type", "value", ps=(0.25, 0.5, 0.75, 0.95, 0.99)
-    )
+q_group_quantiles = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "quantiles", "group": "event_type", "value_col": "value",
+     "ps": [0.25, 0.5, 0.75, 0.95, 0.99]},
+)
 
 
 def q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3985,19 +3848,12 @@ def q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_propagation(_cosupply_edges(li), n_iter=3)
 
 
-# --- round 7: mergeable sketches ----------------------------------------
+# --- mergeable sketches ------------------------------------------------
 
-def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group distinct-count HLL sketch (pipeline/sketches.py):
-    64-register state from the cross-engine md5 hash, estimated with
-    integer-exact harmonic sums — the approximate algorithm whose
-    every output bit the DuckDB oracle reproduces. The state is what
-    scales: one (group, reg) shuffle of <= 64 rows per group replaces
-    an exact count(distinct) shuffle of every distinct key."""
-    from ..pipeline.sketches import hll_distinct
-
-    events = load_table(spark, sf_dir, "events")
-    return hll_distinct(events, "user_id", ["event_type"])
+q_hll_distinct = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "hll_distinct", "key": "user_id", "groups": ["event_type"]},
+)
 
 
 def q_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4033,7 +3889,7 @@ def q_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round 7: corpus line dedup + Gopher quality rules -------------------
+# --- corpus line dedup + Gopher quality rules ---------------------------
 
 def _lined_documents(docs: DataFrame) -> DataFrame:
     """documents.text re-chunked into 12-word pseudo-lines joined by
@@ -4061,17 +3917,10 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_dedup(_lined_documents(docs), min_count=2)
 
 
-def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document trigram-shingle novelty
-    (pipeline/text.py::ngram_novelty): fraction of each doc's distinct
-    shingles first owned (min doc_id) by that doc — the
-    corpus-contribution ranking signal for data curation. Shuffles
-    carry only md5 hashes; per-doc novel counts come from the owners
-    frame alone, never a join back on the shingle axis."""
-    from ..pipeline.text import ngram_novelty
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_novelty(docs)
+q_ngram_novelty = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "ngram_novelty"},
+)
 
 
 def q_boilerplate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4106,24 +3955,19 @@ def q_boilerplate_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return boilerplate_rate(planted, pct=50)
 
 
-def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher quality-rule sweep (pipeline/text.py::gopher_quality)
-    with per-doc keep verdicts and fail-reason strings — the
-    drop-reason histogram for a 100 TB filter pass is one groupBy over
-    this zero-shuffle frame. min_words=30 fits the synthetic corpus'
-    30-120-word docs and min_stop_hits=1 its SQL-token vocabulary
-    (only 'the' from the stop list occurs; the paper's 50/2 would
-    fail every doc identically — thresholds are config, the RULES are
-    the operator); every other threshold is the paper's."""
-    from ..pipeline.text import gopher_quality
-
-    docs = load_table(spark, sf_dir, "documents")
-    return gopher_quality(docs, min_words=30, min_stop_hits=1)
+# min_words=30 fits the corpus' 30-120-word docs and min_stop_hits=1
+# its SQL-token vocabulary (only 'the' from the stop list occurs); the
+# paper's 50/2 would fail every doc the same way. Every other
+# threshold is the paper's.
+q_gopher_rules = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "gopher_quality", "min_words": 30, "min_stop_hits": 1},
+)
 
 
 def q_drop_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drop-reason histogram (pipeline/text.py::
-    drop_reason_histogram, round 13) — q_gopher_rules' per-doc
+    drop_reason_histogram) — q_gopher_rules' per-doc
     verdicts folded to the per-rule disposition a 100 TB filter sweep
     reports: (reason, n_docs, n_words) per firing rule plus the
     '<kept>' mass row. Oracle wraps the gopher oracle in the
@@ -4163,15 +4007,11 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hll_estimate(spark.table(qname), ["event_type"])
 
 
-def q_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group z-score normalization (pipeline/stats.py::
-    zscore_normalize): scale-cancelling integer-moment math makes the
-    float output oracle-exact; the stats frame broadcasts so the fact
-    table never shuffles."""
-    from ..pipeline.stats import zscore_normalize
-
-    events = load_table(spark, sf_dir, "events")
-    return zscore_normalize(events, "event_type", "value", "event_id")
+q_zscore = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "zscore", "group": "event_type", "value_col": "value",
+     "id_col": "event_id"},
+)
 
 
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4469,13 +4309,13 @@ def q_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style head/middle/tail quality bucketing by trigram-LM
     score within each language — the corpus curation split that feeds
     quality-weighted sampling. NOT ntile over a per-language window
-    (one task sorting a whole language's corpus at 100 TB — the round-7
-    verdict's scale defect): pipeline/stats.py::threshold_buckets
-    derives the two ntile-boundary order statistics per language from
-    the value-HISTOGRAM rank walk (window work bounded by distinct
-    micro-scores, not docs), broadcasts them back, and buckets by
-    comparison. Boundary-score ties all take the better bucket —
-    deterministic with no per-doc tie ordering. The 6-decimal lm_score
+    (one task sorting a whole language's corpus at 100 TB):
+    pipeline/stats.py::threshold_buckets derives the two ntile-boundary
+    order statistics per language from the value-HISTOGRAM rank walk
+    (window work bounded by distinct micro-scores, not docs),
+    broadcasts them back, and buckets by comparison. Boundary-score
+    ties all take the better bucket — deterministic with no per-doc
+    tie ordering. The 6-decimal lm_score
     rides as an exact bigint micro-score; the oracle re-derives the
     thresholds with an independent sort-based formulation, so the
     entire train->score->threshold->bucket chain is value-checked."""
@@ -4488,10 +4328,10 @@ def q_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sm = F.round(F.col("lm_score") * 1_000_000).cast("bigint")
     # threshold_buckets consumes its input twice (histogram walk +
     # bucket join); without a cut the whole train->score subtree (two
-    # corpus explodes + the lang join) replays per consumer — round
-    # 14, guide §2.4 / §5: one narrow (id, lang, score) row per doc
-    # is materialized once and both consumers read the blocks. Same
-    # per-invocation computation, no cross-run state.
+    # corpus explodes + the lang join) replays per consumer, so one
+    # narrow (id, lang, score) row per doc is materialized once and
+    # both consumers read the blocks. Same per-invocation computation,
+    # no cross-run state.
     scored = (
         lm_score(docs, model)
         .join(docs.select("doc_id", "lang"), "doc_id")
@@ -4612,7 +4452,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- TPC-H decision-support shapes, round 8 ----------------------------
+# --- TPC-H decision-support shapes --------------------------------------
 # Q4/Q7/Q9/Q13/Q14/Q15/Q17/Q19/Q21/Q22 analogs adapted to the fixture
 # schema (no partsupp / commitdate / receiptdate / phone columns — each
 # docstring states the substitution). Together with the existing
@@ -4980,39 +4820,25 @@ def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seasonal_profile(events, "ts", "value", "event_type")
 
 
-def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonality-aware outliers: events more than 3 sigma from their
-    OWN (event_type, dow, hour) slot rather than the global type mean
-    — the same exact division/sqrt-free decimal inequality as
-    q_anomaly_values, slot stats broadcast
-    (pipeline/timeseries.py::seasonal_anomalies)."""
-    from ..pipeline.timeseries import seasonal_anomalies
-
-    events = load_table(spark, sf_dir, "events")
-    return seasonal_anomalies(events, "ts", "value", "event_type", k=3)
+q_seasonal_anomaly = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "seasonal_anomaly", "ts_col": "ts", "value_col": "value",
+     "group": "event_type", "k": 3},
+)
 
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-10 for a three-term query over the documents corpus:
-    lexical retrieval with broadcast df/avgdl stats, decimal
-    order-independent score sums, exact-key ranking
-    (pipeline/text.py::bm25_topk)."""
-    from ..pipeline.text import bm25_topk
-
-    docs = load_table(spark, sf_dir, "documents")
-    return bm25_topk(docs, ["spark", "join", "stream"], k=10)
+q_bm25_topk = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "bm25", "query_terms": ["spark", "join", "stream"], "k": 10},
+)
 
 
-def q_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type OLS trend of daily totals: five decimal-exact
-    regression sums per group, closed-form slope/intercept with the
-    only divisions in double at the boundary — no window, no sort,
-    bucket totals are the largest thing shuffled
-    (pipeline/timeseries.py::linear_trend)."""
-    from ..pipeline.timeseries import linear_trend
-
-    events = load_table(spark, sf_dir, "events")
-    return linear_trend(events, "ts", "value", "event_type").orderBy("event_type")
+q_linear_trend = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "trend", "ts_col": "ts", "value_col": "value",
+     "group": "event_type"},
+    {"op": "sql", "query": "SELECT * FROM __this__ ORDER BY event_type"},
+)
 
 
 def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5190,21 +5016,16 @@ def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus drift between two embedding snapshots (even vs odd
-    vec_ids as stand-ins for consecutive crawls): both sides assigned
-    to the SAME md5-centroid cell space, per-cell share deltas from
-    two map-side-combined aggregates + a cells-sized join
-    (pipeline/similarity.py::embedding_drift)."""
-    from ..pipeline.similarity import embedding_drift
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_drift(
-        emb.where(F.col("vec_id") % 2 == 0),
-        emb.where(F.col("vec_id") % 2 == 1),
-        dim=64,
-        n_centroids=16,
-    )
+# even vs odd vec_ids stand in for two consecutive crawls
+q_embedding_drift = _flow(
+    {"op": "load", "table": "embeddings"},
+    {"op": "tag", "name": "snapshots"},
+    {"op": "filter", "condition": "vec_id % 2 = 1"},
+    {"op": "tag", "name": "odd"},
+    {"op": "use", "tag": "snapshots"},
+    {"op": "filter", "condition": "vec_id % 2 = 0"},
+    {"op": "embedding_drift", "right": "odd", "dim": 64, "n_centroids": 16},
+)
 
 
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5222,15 +5043,11 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type quantile-rank transform of event values: the exact
-    percent rank via the value-histogram discipline — no window ever
-    sees fact rows; the oracle is DuckDB's native percent_rank, an
-    independent implementation (pipeline/stats.py::rank_normalize)."""
-    from ..pipeline.stats import rank_normalize
-
-    events = load_table(spark, sf_dir, "events")
-    return rank_normalize(events, "event_type", "value", "event_id")
+q_rank_normalize = _flow(
+    {"op": "load", "table": "events"},
+    {"op": "rank_normalize", "group": "event_type", "value_col": "value",
+     "id_col": "event_id"},
+)
 
 
 def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5329,18 +5146,12 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both_all.unionByName(only97_all).unionByName(both_distinct)
 
 
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact weighted median unit price per return flag, weighted by
-    shipped quantity — 'the price half the QUANTITY sits below'. The
-    histogram discipline keeps window work value-cardinality-bounded
-    and the 2*cum >= W cut is pure integer comparison
-    (pipeline/stats.py::weighted_median)."""
-    from ..pipeline.stats import weighted_median
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return weighted_median(
-        li, "l_returnflag", "l_extendedprice", "l_quantity"
-    ).orderBy("l_returnflag")
+q_weighted_median = _flow(
+    {"op": "load", "table": "lineitem"},
+    {"op": "weighted_median", "group": "l_returnflag",
+     "value_col": "l_extendedprice", "weight_col": "l_quantity"},
+    {"op": "sql", "query": "SELECT * FROM __this__ ORDER BY l_returnflag"},
+)
 
 
 def q_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5778,7 +5589,7 @@ def q_dedup_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-digest register maintained from a STREAM — the
-    q_stream_hll symmetry for the round-9 digest family: events land
+    q_stream_hll symmetry for the digest family: events land
     idempotently in an epoch-partitioned history (foreachBatch is
     at-least-once; a replayed epoch OVERWRITES its own dir — the
     q_stream_cusum pattern), and at stream end the daily digests are
@@ -5824,7 +5635,7 @@ def q_stream_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return digest_quantiles(merged, ["event_type"], qs=(0.5, 0.9, 0.99))
 
 
-# --- round 10 ------------------------------------------------------------
+# --- scale-stable pruning, substring and containment dedup -------------
 
 
 def q_dedup_ngram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5850,19 +5661,13 @@ def q_dedup_ngram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", "jaccard")
 
 
-def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document EXACT substring spans (pipeline/dedup.py::
-    substring_matches — the Lee et al. 2022 ExactSubstr modality,
-    set-oriented): maximal aligned runs of >= 12 consecutive shared
-    words, found via positional 8-gram anchors + diagonal
-    islands-and-gaps — no suffix array, no all-pairs, cost bounded by
-    Sigma df(anchor)^2 and the true shared-span volume. The engine
-    joins anchors as xxhash64; the oracle joins RAW gram strings, so
-    a 64-bit collision at graded scale surfaces as a mismatch."""
-    from ..pipeline.dedup import substring_matches
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return substring_matches(docs, k=8, min_tokens=12)
+# The engine joins anchors as xxhash64 and the oracle joins raw gram
+# strings, so a 64-bit collision at graded scale shows as a mismatch.
+q_substring_dedup = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select", "columns": ["doc_id", "text"]},
+    {"op": "substring_dedup", "k": 8, "min_tokens": 12},
+)
 
 
 def q_repetition_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5946,7 +5751,7 @@ def q_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_substring_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchor-store lifecycle under the oracle gate (pipeline/dedup.py
-    ::compact_anchor_store + stores/keyed_table.py::delete, round 11):
+    ::compact_anchor_store + stores/keyed_table.py::delete):
     the persisted anchor store is built in three epochs (init + two
     put_if_absent appends — real fragmentation), then a later EXACT
     dedup pass drops the corpus's byte-identical losers and the store
@@ -6026,7 +5831,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_containment_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The containment detector under the PRODUCTION prune (round 11):
+    """The containment detector under the PRODUCTION prune:
     q_dedup_containment's planted-excerpt corpus with the index pruned
     at max_df_quantile=0.99 — the same scale-stable rank-walk cutoff
     q_dedup_ngram_quantile grades for the Jaccard path, here pinned on
@@ -6058,19 +5863,13 @@ def q_containment_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between source unigram
-    distributions (pipeline/reports.py::source_divergence_matrix) —
-    the lexical complement to q_source_overlap_matrix: KMV estimates
-    exact-document overlap, JSD measures how differently two sources
-    use language even with zero shared documents. Shared-term-only
-    join (private mass folds into a closed form); order-proof
-    rounded-decimal sums make an information-theoretic quantity
-    value-hash gradeable."""
-    from ..pipeline.reports import source_divergence_matrix
-
-    docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    return source_divergence_matrix(docs).orderBy("source_a", "source_b")
+q_source_divergence = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "select", "columns": ["source", "text"]},
+    {"op": "source_divergence"},
+    {"op": "sql",
+     "query": "SELECT * FROM __this__ ORDER BY source_a, source_b"},
+)
 
 
 def _replanted_documents(docs: DataFrame) -> DataFrame:
@@ -6248,8 +6047,8 @@ def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multi-modality corpus card (pipeline/dedup.py::corpus_card,
-    round 11): ONE row per corpus folding all three dedup modalities —
+    """The multi-modality corpus card (pipeline/dedup.py::corpus_card):
+    ONE row per corpus folding all three dedup modalities —
     document-level near-dup families (minhash -> verify -> connected
     components: the seven q_dedup_report columns), substring-level
     shared-span volume (substring_matches k=8/min 12: pair count +
@@ -6281,7 +6080,7 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minhash-LSH candidate recall under the oracle gate
-    (pipeline/dedup.py::dedup_recall_report, round 11): the standard
+    (pipeline/dedup.py::dedup_recall_report): the standard
     8-hash/4-band funnel graded against the UNPRUNED exact n-gram
     Jaccard pair set at the same 0.5 threshold — one row of
     (n_exact, n_approx, n_hits, recall, precision). Both funnels end
@@ -6307,7 +6106,7 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recall report's PRODUCTION shape (pipeline/dedup.py::
-    dedup_recall_sampled, round 12): exact ground truth over a pinned
+    dedup_recall_sampled): exact ground truth over a pinned
     deterministic half of the corpus (md5-mod membership — the
     100 TB contract q_dedup_recall's docstring only stated in prose).
     Banding recall is a per-pair property, so the sampled figure is
@@ -6324,7 +6123,7 @@ def q_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dup_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source x source duplicate-mass matrix (pipeline/dedup.py::
-    dup_attribution, round 11): the oracle-proven minhash -> verify ->
+    dup_attribution): the oracle-proven minhash -> verify ->
     connected-components labels joined back to source tags — each
     non-keeper family member charged to (keeper's source, own source)
     with its token mass. The full 20x20 grid (400 rows, zeros

@@ -401,19 +401,11 @@ def test_sessionize_and_funnel_flow_stages(spark, sf_dir):
 
 
 def test_flow_round6_stages_match_direct_calls(spark, sf_dir):
-    """validate (with a tagged FK parent), rolling, anomaly, and
-    transitions as flow stages must equal the direct module calls."""
+    """validate with a tagged FK parent: every check passes on the
+    fixtures. (rolling, anomaly and transitions are oracle-graded as
+    flow stages by q_rolling_hourly, q_anomaly_values and
+    q_event_transitions.)"""
     from aces_nifi_processors_bundle_spark.flows import build_flow
-    from aces_nifi_processors_bundle_spark.pipeline.reports import (
-        event_transitions,
-    )
-    from aces_nifi_processors_bundle_spark.pipeline.timeseries import (
-        anomaly_flags,
-        rolling_aggregates,
-    )
-    from aces_nifi_processors_bundle_spark.sources.registry import load_table
-
-    events = load_table(spark, sf_dir, "events")
 
     got = build_flow(spark, [
         {"op": "load", "table": "customer"},
@@ -427,27 +419,6 @@ def test_flow_round6_stages_match_direct_calls(spark, sf_dir):
         ]},
     ], sf_dir).collect()
     assert len(got) == 3 and all(r["passed"] for r in got)
-
-    got = build_flow(spark, [
-        {"op": "load", "table": "events"},
-        {"op": "rolling", "window_sec": 3600},
-    ], sf_dir)
-    want = rolling_aggregates(events, "user_id", "ts", "value", 3600)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    got = build_flow(spark, [
-        {"op": "load", "table": "events"},
-        {"op": "anomaly", "group": "event_type", "k": 3},
-    ], sf_dir)
-    want = anomaly_flags(events, "event_type", "value", k=3)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    got = build_flow(spark, [
-        {"op": "load", "table": "events"},
-        {"op": "transitions"},
-    ], sf_dir)
-    want = event_transitions(events, "user_id", "ts", "event_type", "event_id")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_flow_validate_errors_are_actionable(spark, sf_dir):
@@ -493,18 +464,10 @@ def test_flow_corr_and_triangle_stages(spark, sf_dir):
 
 
 def test_flow_round7_stages_match_direct_calls(spark, sf_dir):
+    """gopher_quality emits its verdict columns; shortest_paths runs
+    BFS from a tagged seed frame. (hll_distinct is oracle-graded as a
+    flow stage by q_hll_distinct.)"""
     from aces_nifi_processors_bundle_spark.flows import build_flow
-    from aces_nifi_processors_bundle_spark.pipeline.sketches import hll_distinct
-    from aces_nifi_processors_bundle_spark.sources.registry import load_table
-
-    got = build_flow(spark, [
-        {"op": "load", "table": "events"},
-        {"op": "hll_distinct", "key": "user_id", "groups": ["event_type"]},
-    ], sf_dir).collect()
-    want = hll_distinct(
-        load_table(spark, sf_dir, "events"), "user_id", ["event_type"]
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     got = build_flow(spark, [
         {"op": "load", "table": "documents"},
@@ -770,14 +733,12 @@ def test_flow_digest_register_two_run_lifecycle(spark, sf_dir, tmp_path):
 
 
 def test_flow_round10_stages_match_direct_calls(spark, sf_dir):
-    """round 10: substring_dedup, trim_repetitions, and source_overlap
-    through the flow canvas equal the direct pipeline calls; the
-    repair stage must REWRITE text in place and keep every other
-    column so downstream text consumers still work."""
+    """trim_repetitions and source_overlap through the flow canvas
+    equal the direct pipeline calls; the repair stage must REWRITE
+    text in place and keep every other column so downstream text
+    consumers still work. (substring_dedup is oracle-graded as a flow
+    stage by q_substring_dedup.)"""
     from aces_nifi_processors_bundle_spark.flows import build_flow
-    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
-        substring_matches,
-    )
     from aces_nifi_processors_bundle_spark.pipeline.sketches import (
         kmv_overlap_matrix,
         kmv_sketch,
@@ -788,13 +749,6 @@ def test_flow_round10_stages_match_direct_calls(spark, sf_dir):
     from aces_nifi_processors_bundle_spark.sources.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-
-    got = build_flow(spark, [
-        {"op": "load", "table": "documents"},
-        {"op": "substring_dedup", "k": 8, "min_tokens": 12},
-    ], sf_dir).collect()
-    want = substring_matches(docs, k=8, min_tokens=12).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     got = build_flow(spark, [
         {"op": "load", "table": "documents"},

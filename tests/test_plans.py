@@ -441,6 +441,11 @@ def test_bucketed_join_has_no_join_side_exchange(spark, sf_dir):
         assert "Exchange" not in plan, plan
         # bucket pruning metadata actually reached the scan
         assert "Bucketed: true" in plan or "SelectedBucketsCount" in plan or "bucket" in plan.lower()
+        # the same join on the unbucketed frames does shuffle
+        unbucketed = li.join(o, li.l_orderkey == o.o_orderkey).select(
+            "o_orderstatus", "l_extendedprice"
+        )
+        assert "Exchange" in plan_of(unbucketed)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS bjt_o_{sfx}")

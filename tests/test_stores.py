@@ -401,40 +401,6 @@ def test_write_concern_accepted_but_inert(spark, tmp_path):
     assert all(r == (1, 9.0) for r in results.values())
 
 
-def test_bucketed_tables_join_without_exchange(spark):
-    """Two tables bucketed+sorted on the join key by the same bucket
-    count must SortMergeJoin with NO Exchange on either side (and no
-    per-task Sort either) — the co-located join that turns the
-    dominant pipeline shuffle into a local merge per bucket."""
-    from aces_nifi_processors_bundle_spark.stores.bucketed import (
-        co_located_join,
-        write_bucketed,
-    )
-
-    left = spark.range(10_000).selectExpr("id AS k", "id * 2 AS a")
-    right = spark.range(5_000).selectExpr("id AS k", "id * 3 AS b")
-    write_bucketed(left, "t_bleft", ["k"], n_buckets=8)
-    write_bucketed(right, "t_bright", ["k"], n_buckets=8)
-    # force the join strategy question: no broadcast shortcut for the
-    # tiny test tables (at real scale neither side broadcasts anyway)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = co_located_join(spark, "t_bleft", "t_bright", ["k"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # neither side shuffles
-        assert joined.count() == 5_000
-        # sanity: the same join on unbucketed frames DOES shuffle
-        shuffled = left.join(right, "k")
-        plan2 = shuffled._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")
-
-
 def test_time_travel_read_history_restore(spark, tmp_path):
     """Every retained manifest version is readable (versionAsOf),
     history lists the commit log, restore republishes an old snapshot
