@@ -26,10 +26,15 @@ Lake's, which this environment ships without):
 - Commit atomicity: the manifest is written to a dot-temp file and
   `rename`d to its final versioned name — one atomic metadata op. A
   reader therefore sees the table fully pre-commit or fully
-  post-commit, never mid-swap (this replaces the round-3 per-bucket
-  rename dance, which left a window where a bucket dir was absent).
-  A writer crash before publish leaves only an unreferenced segment —
-  invisible to every reader, garbage-collected by the next writer.
+  post-commit, never mid-swap (no bucket dir is ever renamed, so none
+  is ever absent). A writer crash before publish leaves only an
+  unreferenced segment — invisible to every reader, garbage-collected
+  by the next writer.
+- One commit path: every writer (init, merge, put_if_absent, delete,
+  compact, restore) commits through `_commit` — lock, GC, manifest
+  resolve, txn skip, provenance, touched-bucket guard, bucket-map
+  update, version + 1 publish, auto-compaction. A writer only builds
+  its segment and says which buckets it replaces or appends to.
 - merge(batch): the incremental path. Only the buckets containing the
   batch's keys are READ (the manifest prunes the listing driver-side —
   untouched buckets' files are never even listed) and only those
@@ -78,7 +83,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -114,6 +119,21 @@ class MergeMetrics:
 
 
 @dataclass
+class _Change:
+    """One writer's part of a commit; `KeyedParquetStore._commit` does
+    the rest."""
+
+    result: object = None  # what the writer returns to its caller
+    n_rows: int = 0  # rows its provenance SEND reports
+    fields: dict = field(default_factory=dict)  # manifest fields it sets
+    seg: str | None = None  # the segment it wrote, if any
+    present: set[int] = field(default_factory=set)  # buckets `seg` holds
+    touched: list[int] = field(default_factory=list)  # buckets `seg` may hold
+    append: bool = False  # present buckets gain `seg` (else touched ones hold only it)
+    base: dict | None = None  # manifest carried over (None: the latest)
+
+
+@dataclass
 class KeyedParquetStore:
     spark: SparkSession
     path: str
@@ -124,12 +144,6 @@ class KeyedParquetStore:
     # may break locks older than this (seconds). Doubles as the GC
     # retention window for superseded segments/manifests (see module doc).
     lock_stale_sec: float = 3600.0
-    # Reference parity: PartialUpdateMongo.java:89-95 exposes a Mongo
-    # write-concern property (ACKNOWLEDGED/W1/.../MAJORITY, applied at
-    # :499-528). A filesystem manifest commit has exactly one durability
-    # level — the rename either lands or it doesn't — so this knob is
-    # accepted for config compatibility and deliberately changes nothing.
-    write_concern: str = "ACKNOWLEDGED"
     # Auto-compaction policy: when set, merge()/put_if_absent() run
     # compact_if(auto_compact_files) after their commit, so long-running
     # merge loops (foreachBatch ingest above all) keep every bucket's
@@ -144,8 +158,8 @@ class KeyedParquetStore:
     # so only every Nth commit pays the sweep — retention semantics
     # are unchanged, deletion is merely deferred <= N commits.
     gc_every_commits: int = 1
-    # Test seam: called after a commit's segment write but before its
-    # manifest publish — the window concurrent-reader tests probe.
+    # Test seam: called after every commit's segment write but before
+    # its manifest publish — the window concurrent-reader tests probe.
     _pre_publish_hook: Callable[[], None] | None = field(
         default=None, repr=False, compare=False
     )
@@ -209,8 +223,8 @@ class KeyedParquetStore:
     # transition a compare-and-swap — of N racing writers exactly one
     # rename succeeds, and because the acquisition TIMESTAMP IS IN THE
     # NAME, a freshly taken lock is never stale-looking for even an
-    # instant (the round-3/round-4 displace-a-fresh-lock races needed
-    # that window). Release = rename(held-me -> baton); a crashed
+    # instant, so no racing breaker can displace a fresh lock.
+    # Release = rename(held-me -> baton); a crashed
     # holder's token simply ages past lock_stale_sec and becomes
     # breakable. S3-style stores without atomic rename need a real lock
     # service instead (same caveat as the manifest commit).
@@ -420,6 +434,29 @@ class KeyedParquetStore:
     def _schema(self, man: dict) -> StructType:
         return StructType.fromJson(json.loads(man["schema"]))
 
+    @staticmethod
+    def _dirs(man: dict, buckets=None) -> list[str]:
+        """Segment dirs `man` lists for `buckets` (ids, default all)."""
+        ids = man["buckets"] if buckets is None else buckets
+        return [d for b in ids for d in man["buckets"].get(str(b), [])]
+
+    @staticmethod
+    def _conform(df: DataFrame, schema: StructType) -> DataFrame:
+        """`df` as `schema`: present fields cast (plan-level casts
+        bridge what a parquet scan can't, decimal→double etc.), absent
+        ones typed NULLs (old files lack a column added since)."""
+        cols = set(df.columns)
+        return df.select(
+            *[
+                (
+                    F.col(f.name).cast(f.dataType)
+                    if f.name in cols
+                    else F.lit(None).cast(f.dataType)
+                ).alias(f.name)
+                for f in schema.fields
+            ]
+        )
+
     # Promotions the parquet scan performs on OLD files read under the
     # NEW manifest schema (verified on this Spark: int32→int64 and
     # float→double widen at scan time; decimal↔double and anything
@@ -430,45 +467,40 @@ class KeyedParquetStore:
         ("integer", "long"), ("float", "double"),
     }
 
-    def _widening_scan_safe(self, old: StructType, new: StructType) -> bool:
-        """True iff every OLD field keeps its type or widens in a way
-        the parquet reader handles at scan time (so existing files
-        stay readable under `new` without rewriting). Added fields are
-        safe (absent columns read as NULL); any other change —
-        decimal/double flips, nested type changes, dropped fields —
-        is not."""
-        newf = {f.name: f.dataType for f in new.fields}
-        for f in old.fields:
-            nt = newf.get(f.name)
-            if nt is None:
-                return False
-            if nt == f.dataType:
-                continue
-            if (f.dataType.typeName(), nt.typeName()) not in self._SCAN_SAFE_WIDENINGS:
-                return False
-        return True
+    def _evolve(self, man: dict, written: DataFrame) -> tuple[StructType, bool]:
+        """(manifest schema after writing `written`, whether existing
+        files need a rewrite to stay readable under it).
 
-    def _evolved_schema(self, man: dict, written: DataFrame) -> str:
-        """Manifest schema after a write: operators may widen a column
-        (`$inc` promotes int→long), so the new manifest carries the
-        UNION-promoted type per field — Spark's own coercion rules via
-        an empty unionByName (analysis only, no job). Old narrower
-        files stay readable when the promotion is scan-safe
-        (`_widening_scan_safe`); writers check that and fall back to a
-        full-table rewrite for promotions the scan can't bridge (e.g.
-        a decimal column `$set` with doubles)."""
+        Operators may widen a column (`$inc` promotes int→long), so the
+        new manifest carries the UNION-promoted type per field — Spark's
+        own coercion rules via an empty unionByName (analysis only, no
+        job). Added fields are scan-safe (absent columns read as NULL),
+        and so are the widenings above; any other change to an old
+        field — decimal/double flips, nested type changes, dropped
+        fields — makes the writer rewrite the whole table in this
+        commit (rare, costs one rewrite, keeps every reader correct)."""
         old = self._schema(man)
         new = written.drop(BUCKET_COL).schema
         if new == old:
-            return man["schema"]
-        merged = (
+            return old, False
+        evolved = (
             self.spark.createDataFrame([], old)
             .unionByName(
                 self.spark.createDataFrame([], new), allowMissingColumns=True
             )
             .schema
         )
-        return merged.json()
+        newf = {f.name: f.dataType for f in evolved.fields}
+        rewrite = any(
+            f.name not in newf
+            or (
+                newf[f.name] != f.dataType
+                and (f.dataType.typeName(), newf[f.name].typeName())
+                not in self._SCAN_SAFE_WIDENINGS
+            )
+            for f in old.fields
+        )
+        return evolved, rewrite
 
     def _read_dirs(self, man: dict, dirs: list[str]) -> DataFrame:
         """Read exactly the named bucket dirs (no discovery, no
@@ -482,23 +514,35 @@ class KeyedParquetStore:
         )
 
     @staticmethod
-    def _observed_or_recompute(obs: Observation, src: DataFrame, aggs) -> dict:
-        """An Observation's metrics, tolerating Spark's empty-write
-        metrics loss: under AQE, a segment write whose post-route
-        output is EMPTY (an all-duplicate put_if_absent batch, an
-        all-drop merge) propagates the empty relation over the
-        CollectMetrics node — the node vanishes from the final
-        executed plan, the observed row arrives schemaless, and
-        Observation.get dies in PythonSQLUtils.toPyRow's
-        GenericRowWithSchema assertion. The fallback reruns the SAME
-        aggregate expressions as one extra (tiny) job; it can only
-        disagree with what the write saw for a nondeterministic
-        source, and both commit paths already abort on those (the
-        touched-bucket guard). The happy path stays one job."""
-        try:
-            return obs.get
-        except Exception:
-            return src.agg(*aggs).collect()[0].asDict()
+    def _counted(routed: DataFrame, **tags: str):
+        """(`routed` counting its rows per `name=route tag`, a function
+        returning those counts once the frame's write has run). The
+        counters fill DURING the segment-write job — no second pass.
+
+        Under AQE a segment write whose post-route output is EMPTY (an
+        all-duplicate put_if_absent batch, an all-drop merge) propagates
+        the empty relation over the CollectMetrics node — the node
+        vanishes from the executed plan, the observed row arrives
+        schemaless, and Observation.get dies in PythonSQLUtils.toPyRow's
+        GenericRowWithSchema assertion. The counts then rerun the SAME
+        aggregates as one extra (tiny) job; that can only disagree with
+        what the write saw for a nondeterministic source, and the
+        commit aborts on those (the touched-bucket guard in _commit)."""
+        obs = Observation()
+        route = F.col(ROUTE_COL)
+        aggs = [
+            F.sum(F.when(route == tag, 1).otherwise(0)).alias(name)
+            for name, tag in tags.items()
+        ]
+
+        def counts() -> dict[str, int]:
+            try:
+                row = obs.get
+            except Exception:
+                row = routed.agg(*aggs).collect()[0].asDict()
+            return {name: int(row[name] or 0) for name in tags}
+
+        return routed.observe(obs, *aggs), counts
 
     def _write_segment(self, out: DataFrame) -> tuple[str, set[int]]:
         """Write a new immutable segment; returns (rel dir, bucket ids
@@ -591,9 +635,7 @@ class KeyedParquetStore:
                     continue
                 if not droppable.get(name, True):
                     m = json.loads(self._read_text(fs, entry.getPath()))
-                    referenced.update(
-                        d for dirs in m["buckets"].values() for d in dirs
-                    )
+                    referenced.update(self._dirs(m))
         sdir = Path(f"{self.path}/{SEGMENTS}")
         if fs.exists(sdir):
             for seg in fs.listStatus(sdir):
@@ -632,6 +674,95 @@ class KeyedParquetStore:
                 ):
                     fs.delete(entry.getPath(), False)
 
+    # --- the commit protocol -------------------------------------------
+
+    def _commit(
+        self,
+        op: str,
+        stage: Callable[..., _Change | None],
+        *,
+        send: bool = False,
+        txn: tuple[str, int] | None = None,
+        ingest: bool = False,
+    ):
+        """The one commit path every writer takes, returning the
+        writer's result (None when nothing was published).
+
+        Under the writer lock: GC, resolve the latest manifest (init
+        alone may find none — it creates the table), skip an
+        already-applied `txn`, then `stage(fs, Path, man)` builds the
+        writer's _Change (None: nothing to commit). A commit that wrote
+        a segment passes the pre-publish hook and the touched-bucket
+        guard, then its buckets are repointed at (or, `append`, gain)
+        the segment, and manifest version + 1 is published under `op`.
+        `send` wraps all of it in a provenance SEND whose detail is
+        `op` (a skipped commit sends 0 rows); `ingest` writers (merge,
+        put_if_absent) also advance the txn watermark and run the
+        best-effort auto-compaction after the lock is released."""
+        scope = self.provenance.send(self.path, detail=op) if send else nullcontext({})
+        with scope as ctx, self._write_lock():
+            fs, Path = self._fs()
+            self._gc(fs, Path)
+            if op == "init":  # may create the table; keeps its own n_buckets
+                man = self._latest_manifest(fs, Path)
+            else:
+                man = self._require_manifest(fs, Path)
+            if self._txn_applied(man, txn):
+                return None
+            change = stage(fs, Path, man)
+            if change is None:
+                return None
+            base = man if change.base is None else change.base
+            buckets = dict(base.get("buckets", {}))
+            if change.seg is not None:
+                if self._pre_publish_hook is not None:
+                    self._pre_publish_hook()
+                # The touched-bucket list and the segment write execute
+                # the source plan independently; a NONDETERMINISTIC
+                # source can produce rows in buckets the first pass
+                # never saw. Those rows were merged / duplicate-checked
+                # against an unread (hence empty-looking) target, so
+                # committing them would drop existing rows or insert
+                # duplicate keys. Abort before publish instead —
+                # pre-state intact, the orphan segment is GC'd by a
+                # later writer.
+                extra = sorted(change.present - set(change.touched))
+                if extra:
+                    raise RuntimeError(
+                        f"store {self.path}: {op} source wrote rows into "
+                        f"buckets {extra} missing from its own touched-"
+                        "bucket scan — the source DataFrame is "
+                        "nondeterministic across executions. "
+                        "persist()/checkpoint it and retry (commit "
+                        "aborted; table unchanged)."
+                    )
+                for b in sorted(change.present) if change.append else change.touched:
+                    kept = buckets.get(str(b), []) if change.append else []
+                    new = [f"{change.seg}/{BUCKET_COL}={b}"] if b in change.present else []
+                    buckets[str(b)] = kept + new
+            published = {
+                **base,
+                "version": (man["version"] if man else 0) + 1,
+                **change.fields,
+                "buckets": buckets,
+            }
+            if ingest:
+                published["txns"] = self._txn_advance(man, txn)
+            self._publish(fs, Path, published, op=op)
+            ctx["n_rows"] = change.n_rows
+        if ingest and self.auto_compact_files is not None:
+            # Best-effort maintenance AFTER the published commit: a
+            # concurrent writer grabbing the lock here must not make a
+            # SUCCESSFUL merge look failed — a foreachBatch caller
+            # would replay the batch (and without a txn id, double-
+            # apply $inc). The skipped compaction happens on a later
+            # commit.
+            try:
+                self.compact_if(self.auto_compact_files)
+            except ConcurrentWriterError:
+                pass
+        return change.result
+
     # --- public API ----------------------------------------------------
 
     def init(self, df: DataFrame) -> None:
@@ -640,26 +771,20 @@ class KeyedParquetStore:
         table adopted a different layout into this handle."""
         self._reject_reserved(df, "init")
         self.n_buckets = self._requested_n_buckets
-        with self._write_lock():
-            fs, Path = self._fs()
-            self._gc(fs, Path)
-            prev = self._latest_manifest(fs, Path)
-            out = df.withColumn(BUCKET_COL, self._bucket_of())
-            seg, present = self._write_segment(out)
-            self._publish(
-                fs,
-                Path,
-                {
-                    "version": (prev["version"] + 1) if prev else 1,
-                    "schema": df.schema.json(),
-                    "n_buckets": self.n_buckets,
-                    "buckets": {
-                        str(b): ([f"{seg}/{BUCKET_COL}={b}"] if b in present else [])
-                        for b in range(self.n_buckets)
-                    },
-                },
-                op="init",
+
+        def stage(fs, Path, prev):
+            seg, present = self._write_segment(
+                df.withColumn(BUCKET_COL, self._bucket_of())
             )
+            return _Change(
+                fields={"schema": df.schema.json(), "n_buckets": self.n_buckets},
+                seg=seg,
+                present=present,
+                touched=list(range(self.n_buckets)),
+                base={},
+            )
+
+        self._commit("init", stage)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Lock-free snapshot read: resolve the latest manifest (or a
@@ -673,9 +798,7 @@ class KeyedParquetStore:
             man = self._require_manifest(fs, Path)
         else:
             man = self._manifest_at(fs, Path, version)
-        return self._read_dirs(
-            man, [d for dirs in man["buckets"].values() for d in dirs]
-        )
+        return self._read_dirs(man, self._dirs(man))
 
     def history(self) -> list[dict]:
         """Retained commit log, newest first: one dict per manifest
@@ -712,12 +835,12 @@ class KeyedParquetStore:
         Work scales with CHANGE, not table size: buckets whose
         manifest entries are identical in both versions are pruned
         driver-side from the manifests alone — their files are never
-        listed or read. Both sides read under the newer version's
-        schema (parquet widens old files at scan time, added columns
-        read as NULL). Rows are compared with exceptAll (NULL-safe,
-        multiset), so stores holding multiple rows per key
-        (match-many ingest) diff correctly row-wise; the change-type
-        tag is key-granular."""
+        listed or read. Each side reads under ITS OWN manifest schema
+        (old files may predate a type-changing rewrite); the old side
+        is then conformed to the newer schema. Rows are compared with
+        exceptAll (NULL-safe, multiset), so stores holding multiple
+        rows per key (match-many ingest) diff correctly row-wise; the
+        change-type tag is key-granular."""
         fs, Path = self._fs()
         man_old = self._manifest_at(fs, Path, v_old)
         man_new = (
@@ -730,28 +853,11 @@ class KeyedParquetStore:
             for b in set(man_old["buckets"]) | set(man_new["buckets"])
             if man_old["buckets"].get(b, []) != man_new["buckets"].get(b, [])
         ]
-        # Each side reads under ITS OWN manifest schema (old files may
-        # predate a type-changing rewrite); the old side then casts to
-        # the new schema — plan-level casts bridge what a parquet scan
-        # can't (decimal→double etc.), and columns added since v_old
-        # read as typed NULLs.
-        schema_new = StructType.fromJson(json.loads(man_new["schema"]))
-        old_raw = self._read_dirs(
-            man_old, [d for b in changed for d in man_old["buckets"].get(b, [])]
+        old_df = self._conform(
+            self._read_dirs(man_old, self._dirs(man_old, changed)),
+            self._schema(man_new),
         )
-        old_df = old_raw.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in old_raw.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in schema_new.fields
-            ]
-        )
-        new_df = self._read_dirs(
-            man_new, [d for b in changed for d in man_new["buckets"].get(b, [])]
-        )
+        new_df = self._read_dirs(man_new, self._dirs(man_new, changed))
         changed_new = new_df.exceptAll(old_df)
         changed_old = old_df.exceptAll(new_df)
         old_keys = old_df.select(*self.keys).distinct()
@@ -781,20 +887,10 @@ class KeyedParquetStore:
         analog): history moves forward, nothing is rewritten, and the
         restored snapshot's segments are re-pinned as latest (so GC
         keeps them)."""
-        with self._write_lock():
-            fs, Path = self._fs()
-            self._gc(fs, Path)
-            target = self._manifest_at(fs, Path, version)
-            latest = self._require_manifest(fs, Path)
-            self._publish(
-                fs,
-                Path,
-                {
-                    **target,
-                    "version": latest["version"] + 1,
-                },
-                op=f"restore(v{version})",
-            )
+        self._commit(
+            f"restore(v{version})",
+            lambda fs, Path, man: _Change(base=self._manifest_at(fs, Path, version)),
+        )
 
     def _touched(self, man: dict, source: DataFrame) -> tuple[list[int], DataFrame]:
         """Bucket ids containing any source key (small driver-side list
@@ -805,8 +901,7 @@ class KeyedParquetStore:
             r[0]
             for r in source.select(self._bucket_of().alias("b")).distinct().collect()
         ]
-        dirs = [d for b in buckets for d in man["buckets"].get(str(b), [])]
-        return buckets, self._read_dirs(man, dirs)
+        return buckets, self._read_dirs(man, self._dirs(man, buckets))
 
     def merge(
         self,
@@ -835,128 +930,44 @@ class KeyedParquetStore:
                 "keys; a mismatched merge would read the wrong buckets)"
             )
         self._reject_reserved(source, "merge")
-        with self.provenance.send(self.path, detail="merge") as ctx, self._write_lock():
-            fs, Path = self._fs()
-            self._gc(fs, Path)
-            man = self._require_manifest(fs, Path)
-            if self._txn_applied(man, txn):
-                ctx["n_rows"] = 0
-                ctx["skipped_txn"] = list(txn)
-                return MergeMetrics(updated=0, unmodified=0, inserted=0)
+
+        def stage(fs, Path, man):
             buckets, target = self._touched(man, source)
             res = partial_update(target, source, cfg)
-            # Schema-evolution check BEFORE writing: if the merge
-            # promotes a column in a way the parquet scan can't bridge
-            # for untouched buckets' old files (decimal→double etc.),
-            # escalate to a full-table rewrite in this commit — every
-            # bucket's rows pass through the merge and land in the new
-            # segment under the promoted type. Rare (a type-changing
-            # batch), costs one table rewrite, keeps every reader
-            # correct. Scan-safe widenings keep the incremental path.
-            evolved = StructType.fromJson(
-                json.loads(self._evolved_schema(man, res.merged.drop(ROUTE_COL)))
-            )
-            if not self._widening_scan_safe(self._schema(man), evolved):
+            evolved, rewrite = self._evolve(man, res.merged.drop(ROUTE_COL))
+            if rewrite:  # every bucket's rows pass through the merge
                 buckets = [int(b) for b in man["buckets"]]
-                # Cast the full target to the PROMOTED schema before
+                # Conform the full target to the PROMOTED schema before
                 # merging: the operator casts upsert-inserts to the
                 # target's types, so merging against the old types
                 # would round inserted values (e.g. 7.25 → decimal(_,1)
                 # → 7.3) on their way to the promoted column.
-                raw = self._read_dirs(
-                    man, [d for dirs in man["buckets"].values() for d in dirs]
-                )
-                # Same guard as put_if_absent's rewrite path: a batch
-                # can simultaneously ADD a column and force the
-                # rewrite — old files lack the added field, so
-                # F.col() would be unresolvable; it reads as NULL.
-                target = raw.select(
-                    *[
-                        (
-                            F.col(f.name).cast(f.dataType)
-                            if f.name in raw.columns
-                            else F.lit(None).cast(f.dataType)
-                        ).alias(f.name)
-                        for f in evolved.fields
-                    ]
-                )
-                res = partial_update(target, source, cfg)
-            obs = Observation()
-            route = F.col(ROUTE_COL)
-            merge_aggs = [
-                F.sum(F.when(route == "success", 1).otherwise(0)).alias("updated"),
-                F.sum(F.when(route == "success-unmodified", 1).otherwise(0)).alias(
-                    "unmodified"
-                ),
-                F.sum(F.when(route == "insert", 1).otherwise(0)).alias("inserted"),
-            ]
-            observed = res.merged.observe(obs, *merge_aggs)
-            out = (
-                observed.filter(route != "drop")
+                full = self._read_dirs(man, self._dirs(man))
+                res = partial_update(self._conform(full, evolved), source, cfg)
+            observed, counts = self._counted(
+                res.merged,
+                updated="success",
+                unmodified="success-unmodified",
+                inserted="insert",
+            )
+            seg, present = self._write_segment(
+                observed.filter(F.col(ROUTE_COL) != "drop")
                 .drop(ROUTE_COL)
                 .withColumn(BUCKET_COL, self._bucket_of())
             )
-            seg, present = self._write_segment(out)
-            # metrics fired by the segment-write job (recomputed only
-            # on the empty-write AQE edge — see _observed_or_recompute)
-            m = self._observed_or_recompute(obs, res.merged, merge_aggs)
-            if self._pre_publish_hook is not None:
-                self._pre_publish_hook()
-            # The touched-bucket list and the segment write execute the
-            # source plan independently; a NONDETERMINISTIC source can
-            # produce rows in buckets the first pass never saw. Those
-            # rows were merged against an unread (hence empty-looking)
-            # target, so repointing their buckets would drop existing
-            # rows and ignoring them would drop the new ones. Abort
-            # before publish instead — pre-state intact, the orphan
-            # segment is GC'd by a later writer.
-            extra = sorted(set(present) - set(buckets))
-            if extra:
-                raise RuntimeError(
-                    f"store {self.path}: merge source wrote rows into "
-                    f"buckets {extra} missing from its own touched-bucket "
-                    "scan — the source DataFrame is nondeterministic "
-                    "across executions. persist()/checkpoint it and retry "
-                    "(commit aborted; table unchanged)."
-                )
-            new_buckets = dict(man["buckets"])
-            for b in buckets:  # touched buckets point ONLY at the new segment
-                new_buckets[str(b)] = (
-                    [f"{seg}/{BUCKET_COL}={b}"] if b in present else []
-                )
-            self._publish(
-                fs,
-                Path,
-                {
-                    **man,
-                    "version": man["version"] + 1,
-                    # `evolved` was already computed for the widening
-                    # check from the same frame (out minus the bucket
-                    # col) — recomputing _evolved_schema here would be
-                    # duplicate JVM work and a drift risk.
-                    "schema": evolved.json(),
-                    "buckets": new_buckets,
-                    "txns": self._txn_advance(man, txn),
-                },
-                op="merge",
+            m = MergeMetrics(**counts())
+            return _Change(
+                result=m,
+                n_rows=m.updated + m.inserted,
+                fields={"schema": evolved.json()},
+                seg=seg,
+                present=present,
+                touched=buckets,
             )
-            ctx["n_rows"] = int(m["updated"] or 0) + int(m["inserted"] or 0)
-        if self.auto_compact_files is not None:
-            # Best-effort maintenance AFTER the published commit: a
-            # concurrent writer grabbing the lock here must not make a
-            # SUCCESSFUL merge look failed — a foreachBatch caller
-            # would replay the batch (and without a txn id, double-
-            # apply $inc). The skipped compaction happens on a later
-            # commit.
-            try:
-                self.compact_if(self.auto_compact_files)
-            except ConcurrentWriterError:
-                pass
-        return MergeMetrics(
-            updated=int(m["updated"] or 0),
-            unmodified=int(m["unmodified"] or 0),
-            inserted=int(m["inserted"] or 0),
-        )
+
+        return self._commit(
+            "merge", stage, send=True, txn=txn, ingest=True
+        ) or MergeMetrics(updated=0, unmodified=0, inserted=0)
 
     def put_if_absent(
         self,
@@ -976,33 +987,21 @@ class KeyedParquetStore:
         same keys; the txn guard makes it safe unconditionally and
         skips the duplicate-check read entirely on replay)."""
         self._reject_reserved(source, "put_if_absent")
-        with self.provenance.send(self.path, detail="put-if-absent") as ctx, self._write_lock():
-            fs, Path = self._fs()
-            self._gc(fs, Path)
-            man = self._require_manifest(fs, Path)
-            if self._txn_applied(man, txn):
-                ctx["n_rows"] = 0
-                ctx["skipped_txn"] = list(txn)
-                return MergeMetrics(updated=0, unmodified=0, inserted=0)
+
+        def stage(fs, Path, man):
             buckets, target = self._touched(man, source)
-            tagged = tag_put_if_absent(target, source, self.keys, order_col)
-            obs = Observation()
-            route = F.col(ROUTE_COL)
-            pia_aggs = [
-                F.sum(F.when(route == "success", 1).otherwise(0)).alias("inserted"),
-                F.sum(F.when(route == "already-exists", 1).otherwise(0)).alias("dupes"),
-            ]
-            observed = tagged.observe(obs, *pia_aggs)
+            observed, counts = self._counted(
+                tag_put_if_absent(target, source, self.keys, order_col),
+                inserted="success",
+                unmodified="already-exists",
+            )
             # Keep source columns BEYOND the manifest schema: dropping
             # them silently would lose data, and an added column is a
-            # scan-safe evolution (old files read it as NULL). The
-            # evolved-schema union below picks the new fields up.
+            # scan-safe evolution (old files read it as NULL).
             base = self._schema(man)
             base_fields = base.fieldNames()
             extra_fields = [
-                c
-                for c in source.columns
-                if c not in base_fields and c != ROUTE_COL
+                c for c in source.columns if c not in base_fields and c != ROUTE_COL
             ]
             # Partial documents are legal inserts (the reference's
             # insertOne accepts any document shape): base columns the
@@ -1012,7 +1011,7 @@ class KeyedParquetStore:
             # are always present (the dedup anti-join resolved them).
             src_cols = set(source.columns)
             inserted_rows = (
-                observed.filter(route == "success")
+                observed.filter(F.col(ROUTE_COL) == "success")
                 .drop(ROUTE_COL)
                 .select(
                     *[
@@ -1024,93 +1023,33 @@ class KeyedParquetStore:
                     *extra_fields,
                 )
             )
-            evolved = StructType.fromJson(
-                json.loads(self._evolved_schema(man, inserted_rows))
-            )
-            # Same escalation as merge(): if the batch promotes a
-            # column in a way the parquet scan can't bridge for
-            # existing files, this commit rewrites the WHOLE table
-            # (existing rows cast to the promoted type + the inserts)
-            # instead of appending — rare, costs one rewrite, keeps
-            # every reader correct.
-            full_rewrite = not self._widening_scan_safe(self._schema(man), evolved)
-            if full_rewrite:
-                raw = self._read_dirs(
-                    man, [d for dirs in man["buckets"].values() for d in dirs]
-                )
-                existing = raw.select(
-                    *[
-                        (
-                            F.col(f.name).cast(f.dataType)
-                            if f.name in raw.columns
-                            else F.lit(None).cast(f.dataType)
-                        ).alias(f.name)
-                        for f in evolved.fields
-                    ]
-                )
-                body = existing.unionByName(
-                    inserted_rows.select(
-                        *[F.col(f.name).cast(f.dataType) for f in evolved.fields]
-                    )
-                )
+            evolved, rewrite = self._evolve(man, inserted_rows)
+            if rewrite:  # existing rows join the inserts in one segment
                 buckets = [int(b) for b in man["buckets"]]
-            else:
-                body = inserted_rows
-            out = body.withColumn(BUCKET_COL, self._bucket_of())
-            seg, present = self._write_segment(out)
-            m = self._observed_or_recompute(obs, tagged, pia_aggs)
-            if self._pre_publish_hook is not None:
-                self._pre_publish_hook()
-            # Same nondeterministic-source hazard as merge(): a row
-            # landing in a bucket the touched scan never saw had its
-            # duplicate check run against an unread target — committing
-            # it could insert a duplicate key. Abort before publish.
-            extra = sorted(set(present) - set(buckets))
-            if extra:
-                raise RuntimeError(
-                    f"store {self.path}: put_if_absent source wrote rows "
-                    f"into buckets {extra} missing from its own touched-"
-                    "bucket scan — the source DataFrame is nondeterministic "
-                    "across executions. persist()/checkpoint it and retry "
-                    "(commit aborted; table unchanged)."
+                full = self._read_dirs(man, self._dirs(man))
+                inserted_rows = self._conform(full, evolved).unionByName(
+                    self._conform(inserted_rows, evolved)
                 )
-            new_buckets = dict(man["buckets"])
-            if full_rewrite:  # every bucket points ONLY at the new segment
-                for b in buckets:
-                    new_buckets[str(b)] = (
-                        [f"{seg}/{BUCKET_COL}={b}"] if b in present else []
-                    )
-            else:
-                for b in sorted(present):  # appended buckets GAIN a dir
-                    new_buckets[str(b)] = new_buckets.get(str(b), []) + [
-                        f"{seg}/{BUCKET_COL}={b}"
-                    ]
-            self._publish(
-                fs,
-                Path,
-                {
-                    **man,
-                    "version": man["version"] + 1,
-                    "schema": evolved.json(),
-                    "buckets": new_buckets,
-                    "txns": self._txn_advance(man, txn),
-                },
-                op="put-if-absent",
+            seg, present = self._write_segment(
+                inserted_rows.withColumn(BUCKET_COL, self._bucket_of())
             )
-            ctx["n_rows"] = int(m["inserted"] or 0)
-        if self.auto_compact_files is not None:
-            try:  # best-effort post-commit maintenance (see merge())
-                self.compact_if(self.auto_compact_files)
-            except ConcurrentWriterError:
-                pass
-        return MergeMetrics(
-            updated=0,
-            unmodified=int(m["dupes"] or 0),
-            inserted=int(m["inserted"] or 0),
-        )
+            m = MergeMetrics(updated=0, **counts())
+            return _Change(
+                result=m,
+                n_rows=m.inserted,
+                fields={"schema": evolved.json()},
+                seg=seg,
+                present=present,
+                touched=buckets,
+                append=not rewrite,
+            )
+
+        return self._commit(
+            "put-if-absent", stage, send=True, txn=txn, ingest=True
+        ) or MergeMetrics(updated=0, unmodified=0, inserted=0)
 
     def delete(self, matches: DataFrame) -> int:
-        """Delta-style DELETE (round 11): remove every table row that
+        """Delta-style DELETE: remove every table row that
         matches a row of `matches` on ALL of matches' columns (any
         subset of the table's columns — pass just (doc_id) to drop a
         document's whole key family). Rewrites only the buckets that
@@ -1128,10 +1067,8 @@ class KeyedParquetStore:
         rewrite would race its own input — localCheckpoint first, as
         incremental_substring_dedup does for appends)."""
         self._reject_reserved(matches, "delete")
-        with self.provenance.send(self.path, detail="delete") as ctx, self._write_lock():
-            fs, Path = self._fs()
-            self._gc(fs, Path)
-            man = self._require_manifest(fs, Path)
+
+        def stage(fs, Path, man):
             fields = self._schema(man).fieldNames()
             unknown = [c for c in matches.columns if c not in fields]
             if unknown:
@@ -1142,23 +1079,21 @@ class KeyedParquetStore:
             m = matches.dropDuplicates(matches.columns)
             # NULL-keyed match rows would match NOTHING under the
             # equi semi/anti joins below — a silent partial delete.
-            # Mirror the loud unknown-column check instead (round-11
-            # advice): callers who mean "delete rows where k IS NULL"
-            # don't have that semantics here and should filter first.
+            # Mirror the loud unknown-column check instead: callers
+            # who mean "delete rows where k IS NULL" don't have that
+            # semantics here and should filter first.
             null_pred = None
             for c in m.columns:
                 p = F.col(c).isNull()
                 null_pred = p if null_pred is None else (null_pred | p)
-            all_dirs = [d for dirs in man["buckets"].values() for d in dirs]
-            full = self._read_dirs(man, all_dirs).withColumn(
+            full = self._read_dirs(man, self._dirs(man)).withColumn(
                 BUCKET_COL, self._bucket_of()
             )
-            # ONE census job answers both questions (round 13 — the
-            # NULL guard previously paid its own limit(1).count()
-            # job): which buckets hold matches + how many rows go,
-            # UNIONED with the NULL-row count under the impossible
-            # bucket id -1 (_bucket_of is a pmod, never negative).
-            # Driver result stays bounded by n_buckets + 1 rows.
+            # ONE census job answers both questions, so the NULL guard
+            # costs no job of its own: which buckets hold matches + how
+            # many rows go, UNIONED with the NULL-row count under the
+            # impossible bucket id -1 (_bucket_of is a pmod, never
+            # negative). Driver result stays bounded by n_buckets + 1.
             census_leg = (
                 full.join(m, matches.columns, "left_semi")
                 .groupBy(BUCKET_COL)
@@ -1179,39 +1114,29 @@ class KeyedParquetStore:
                     "nothing — drop or filter them explicitly"
                 )
             census = {int(r["_b"]): int(r["n"]) for r in rows}
-            n_deleted = sum(census.values())
-            if not n_deleted:
-                ctx["skipped_no_match"] = True
-                return 0
+            if not census:
+                return None
             touched = sorted(census)
             # rewrite reads ONLY the touched buckets' dirs (the census
             # already told us which) — a bucket-column filter over the
             # full scan cannot file-prune, since _bucket is recomputed
             # per row, not stored
-            keep = self._read_dirs(
-                man,
-                [d for b in touched for d in man["buckets"][str(b)]],
-            ).withColumn(BUCKET_COL, self._bucket_of()).join(
-                m, matches.columns, "left_anti"
+            keep = (
+                self._read_dirs(man, self._dirs(man, touched))
+                .withColumn(BUCKET_COL, self._bucket_of())
+                .join(m, matches.columns, "left_anti")
             )
             seg, present = self._write_segment(keep)
-            new_buckets = dict(man["buckets"])
-            for b in touched:
-                new_buckets[str(b)] = (
-                    [f"{seg}/{BUCKET_COL}={b}"] if b in present else []
-                )
-            self._publish(
-                fs,
-                Path,
-                {
-                    **man,
-                    "version": man["version"] + 1,
-                    "buckets": new_buckets,
-                },
-                op="delete",
+            n_deleted = sum(census.values())
+            return _Change(
+                result=n_deleted,
+                n_rows=n_deleted,
+                seg=seg,
+                present=present,
+                touched=touched,
             )
-            ctx["n_rows"] = n_deleted
-        return n_deleted
+
+        return self._commit("delete", stage, send=True) or 0
 
     def _bucket_file_counts(self, fs, Path, man: dict) -> dict[int, int]:
         """bucket id -> parquet part-file count for a manifest —
@@ -1259,34 +1184,22 @@ class KeyedParquetStore:
         fragmentation, not table size. Returns rewritten-bucket count.
         Readers racing a compact keep their manifest's files (retained
         for lock_stale_sec after being superseded)."""
-        with self._write_lock():
-            fs, Path = self._fs()
-            self._gc(fs, Path)
-            man = self._require_manifest(fs, Path)
+
+        def stage(fs, Path, man):
             frag = [
                 b
                 for b, n in self._bucket_file_counts(fs, Path, man).items()
                 if n >= min_files
             ]
             if not frag:
-                return 0
-            src = self._read_dirs(
-                man, [d for b in frag for d in man["buckets"][str(b)]]
-            )
+                return None
             # _bucket is not stored in the files; recompute it from the
             # keys — same deterministic hash, same assignment.
             seg, present = self._write_segment(
-                src.withColumn(BUCKET_COL, self._bucket_of())
-            )
-            new_buckets = dict(man["buckets"])
-            for b in frag:
-                new_buckets[str(b)] = (
-                    [f"{seg}/{BUCKET_COL}={b}"] if b in present else []
+                self._read_dirs(man, self._dirs(man, frag)).withColumn(
+                    BUCKET_COL, self._bucket_of()
                 )
-            self._publish(
-                fs,
-                Path,
-                {**man, "version": man["version"] + 1, "buckets": new_buckets},
-                op="compact",
             )
-        return len(frag)
+            return _Change(result=len(frag), seg=seg, present=present, touched=frag)
+
+        return self._commit("compact", stage) or 0

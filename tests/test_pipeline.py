@@ -1973,6 +1973,37 @@ def test_funnel_restart_matches_dp_reference(spark, sf_dir):
         funnel(events, ["view", "click", "view"], window_sec=60, restart=True)
 
 
+def test_frequent_keys_median_share_splits_hot_and_cold(spark, sf_dir, duck):
+    """q_hot_keys' fixed min_share=0.0015 keeps every user at sf0.001
+    and sf0.01 and none at sf0.1, so its oracle never grades a split.
+    Here the threshold is the fixture's own median per-user share: both
+    sides of the filter are non-empty, and the hot set equals DuckDB's."""
+    from aces_nifi_processors_bundle_spark.pipeline.reports import frequent_keys
+
+    shares = """
+        WITH c AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
+                   FROM events GROUP BY user_id),
+             t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c)
+        SELECT user_id, n, CAST(n AS DOUBLE) / CAST(tot AS DOUBLE) AS share
+        FROM c, t"""
+    min_share, n_users = duck.execute(
+        f"SELECT quantile_disc(share, 0.5), count(*) FROM ({shares})"
+    ).fetchone()
+    want = dict(
+        duck.execute(
+            f"SELECT user_id, n FROM ({shares}) WHERE share >= ?", [min_share]
+        ).fetchall()
+    )
+    got = {
+        r["user_id"]: r["n"]
+        for r in frequent_keys(
+            load_table(spark, sf_dir, "events"), "user_id", min_share=min_share
+        ).collect()
+    }
+    assert 0 < len(got) < n_users  # a hot set and a cold set
+    assert got == want
+
+
 def test_frequent_keys_exact_and_sampled(spark, sf_dir):
     """Exact path: thresholds against hand-computed counts; sampled
     path: hot keys far above the noise floor survive estimation."""

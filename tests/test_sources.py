@@ -162,3 +162,88 @@ def test_load_table_normalizes_both_timestamp_encodings(spark, tmp_path):
         got = [r["ms"] for r in df.select(
             F.unix_millis("ts").alias("ms")).orderBy("event_id").collect()]
         assert got == [m // 1000 for m in micros], sub
+
+
+def _write_region(path, extra=None):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "r_regionkey": pa.array([0, 1], pa.int32()),
+        "r_name": pa.array(["AFRICA", "AMERICA"]),
+        **(extra or {}),
+    }
+    pq.write_table(pa.table(cols), str(path))
+
+
+def _jobs_submitted(spark, fn):
+    """Run `fn` under a fresh job group; return how many Spark jobs it
+    submitted. A sentinel job run afterwards, and waited for, flushes
+    the status listener, which sees jobs in submission order."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, sentinel = f"g-{uuid.uuid4().hex}", f"s-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(sentinel, "sentinel")
+        spark.range(1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not sc.statusTracker().getJobIdsForGroup(sentinel):
+        assert time.time() < deadline, "status listener never saw the sentinel"
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_second_read_of_a_file_submits_no_job(spark, tmp_path):
+    """The first load resolves the file's parquet schema (a Spark job);
+    a second load of the unchanged file reuses it and submits none."""
+    from aces_nifi_processors_bundle_spark.sources.registry import load_table
+
+    _write_region(tmp_path / "region.parquet")
+    first = _jobs_submitted(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert first >= 1
+    again = []
+    assert _jobs_submitted(
+        spark, lambda: again.append(load_table(spark, str(tmp_path), "region"))
+    ) == 0
+    assert sorted(tuple(r) for r in again[0].collect()) == [(0, "AFRICA"), (1, "AMERICA")]
+
+
+def test_load_table_re_resolves_a_file_rewritten_in_place(spark, tmp_path):
+    """A cached schema never outlives its file: rewriting the table file
+    with an added column re-resolves the schema and exposes the column."""
+    import pyarrow as pa
+
+    from aces_nifi_processors_bundle_spark.sources.registry import load_table
+
+    path = tmp_path / "region.parquet"
+    _write_region(path)
+    assert "r_comment" not in load_table(spark, str(tmp_path), "region").columns
+    _write_region(path, {"r_comment": pa.array(["hot", "cold"])})
+    df = load_table(spark, str(tmp_path), "region")
+    assert "r_comment" in df.columns
+    assert sorted(r["r_comment"] for r in df.collect()) == ["cold", "hot"]
+
+
+def test_load_table_missing_file_fails_naming_the_path(spark, tmp_path):
+    """A missing table file fails loudly with its path, also after the
+    file's schema was cached by an earlier load."""
+    import re
+
+    import pytest
+
+    from aces_nifi_processors_bundle_spark.sources.registry import load_table
+
+    path = tmp_path / "region.parquet"
+    with pytest.raises(Exception, match=re.escape(str(path))):
+        load_table(spark, str(tmp_path), "region")
+    _write_region(path)
+    load_table(spark, str(tmp_path), "region")
+    path.unlink()
+    with pytest.raises(Exception, match=re.escape(str(path))):
+        load_table(spark, str(tmp_path), "region")

@@ -384,23 +384,6 @@ def test_schema_widening_across_segments(spark, tmp_path):
     assert got.filter("k = 1").collect()[0]["n"] == 101
 
 
-def test_write_concern_accepted_but_inert(spark, tmp_path):
-    """Reference parity knob (PartialUpdateMongo.java:89-95): accepted
-    for config compatibility, deliberately a no-op — a filesystem
-    rename has exactly one durability level."""
-    results = {}
-    for wc in ("ACKNOWLEDGED", "MAJORITY", "W1", "UNACKNOWLEDGED"):
-        store = KeyedParquetStore(
-            spark=spark, path=str(tmp_path / f"t_{wc}"), keys=["k"], n_buckets=2,
-            write_concern=wc,
-        )
-        store.init(spark.createDataFrame([Row(k=1, v=1.0)]))
-        cfg = PartialUpdateConfig(keys=["k"], operations={"v": "$set"}, upsert=False)
-        m = store.merge(spark.createDataFrame([Row(k=1, v=9.0)]), cfg)
-        results[wc] = (m.updated, store.read().collect()[0]["v"])
-    assert all(r == (1, 9.0) for r in results.values())
-
-
 def test_time_travel_read_history_restore(spark, tmp_path):
     """Every retained manifest version is readable (versionAsOf),
     history lists the commit log, restore republishes an old snapshot
@@ -1029,8 +1012,8 @@ def test_put_if_absent_all_duplicate_batch_without_txn(spark, tmp_path):
     the table untouched. Previously this DIED inside Observation.get:
     the empty post-route write let AQE propagate an empty relation
     over the CollectMetrics node, the metrics row arrived schemaless,
-    and toPyRow's assertion fired — the _observed_or_recompute
-    fallback now recomputes the counts as one extra job."""
+    and toPyRow's assertion fired — the store's route counts
+    (`_counted`) now recompute as one extra job."""
     store = KeyedParquetStore(
         spark=spark, path=str(tmp_path / "alldupe"), keys=["k"], n_buckets=4
     )
