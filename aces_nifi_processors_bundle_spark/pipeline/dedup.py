@@ -204,56 +204,55 @@ def _pairs_within_groups(
 
 
 def ngram_jaccard(
-    df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
+    sets: DataFrame,
     id_col: str = "doc_id",
-    k: int = 3,
-    persist_sets: bool = False,
-    hashed: bool = True,
-    sets_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard over word-k-gram shingle SETS for candidate pairs.
+    """Exact set ratios for candidate pairs — the one verify of the
+    exact near-dup family (minhash's verify step, n-gram, containment
+    and PPJoin all end here).
 
-    Join the (small) candidate pair set back to the docs — two hash
-    joins — then native array_intersect/array_union set arithmetic per
-    pair. Verification cost scales with candidates, not corpus.
-    persist_sets avoids recomputing the shingle sets for both join
-    sides at corpus scale.
+    `sets` holds one (id, sh) row per doc, sh its distinct shingle
+    array. The (small) candidate pair set joins to it twice — one hash
+    join per side — and one array_intersect size gives both ratios:
+    jaccard = |A∩B| / |A∪B| and containment = |A∩B| / min(|A|, |B|),
+    each 0.0 over empty sets. Verification cost scales with
+    candidates, not corpus. Output: (id_a, id_b, jaccard, containment).
 
-    hashed (default ON) verifies over xxhash64(shingle) arrays instead
-    of raw string arrays — the verify join is the dominant cost of
-    every exact near-dup path once candidates number in the millions
-    (measured 70.6 s → 31.0 s for the whole sf1 PPJoin, SCALE.md),
-    and the result differs from string-set Jaccard only on a 64-bit
-    collision inside one comparison (~n²/2^64, the engine's standard
-    sketch contract; the DuckDB oracles stay on raw strings
-    DELIBERATELY, so any collision at graded scale would surface as a
-    hash mismatch rather than hide).
-
-    sets_df (round 14, optimization): a precomputed (id, sh) frame —
-    callers that already materialized the shingle sets (the minhash
-    combined aggregate, the inverted index's persisted distinct rows)
-    pass it here so the verify join reuses those blocks instead of
-    re-scanning the corpus (guide §2.4: shared subtrees share one
-    exchange). Must be element-compatible with `hashed`.
+    The engine's callers pass xxhash64(shingle) arrays (shingle_sets
+    hashed=True, or `_hashed_sets` over the shingle index): the verify
+    join is the dominant cost of every exact near-dup path once
+    candidates number in the millions (measured 70.6 s → 31.0 s for
+    the whole sf1 PPJoin, SCALE.md), and the ratios differ from
+    string-set ratios only on a 64-bit collision inside one comparison
+    (~n²/2^64, the engine's standard sketch contract). The DuckDB
+    oracles stay on raw strings deliberately, so a collision at graded
+    scale would surface as a mismatch rather than hide.
     """
-    if sets_df is not None:
-        sh = sets_df
-    else:
-        sh = shingle_sets(df, text_col, id_col, k, hashed=hashed)
-        if persist_sets:
-            sh = sh.persist()
     out = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        pairs.join(sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
+    smaller = F.least(F.size("sh_a"), F.size("sh_b"))
     return out.select(
         "id_a",
         "id_b",
         F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0)).alias("jaccard"),
+        F.when(smaller > 0, inter.cast("double") / smaller)
+        .otherwise(F.lit(0.0))
+        .alias("containment"),
+    )
+
+
+def _hashed_sets(rows: DataFrame, id_col: str) -> DataFrame:
+    """(id, sh) verify sets from the shingle index's distinct
+    (id, shingle) rows: one (id, xxhash64) aggregate over rows the
+    caller already built, instead of a second corpus scan, regex and
+    explode."""
+    return rows.groupBy(id_col).agg(
+        F.collect_set(F.xxhash64("shingle")).alias("sh")
     )
 
 
@@ -281,20 +280,21 @@ def near_dup_pairs_minhash(
     spark.catalog.clearCache() between corpora. Lazy-exact for the
     oracle either way.
 
-    Round 14 note: a variant computing signatures + verify sets in
-    ONE groupBy(id) aggregate was tried and REVERTED — paired probes
-    read it perf-neutral at sf0.1 (the subtrees already share the
-    scan via ReuseExchange on the set sides), and carrying the
-    collect_set buffer through the banding consumer's aggregate
-    raised peak heap under the driver's 1g default session enough to
-    OOM q_corpus_card in a long correctness batch."""
+    Signatures and verify sets stay two aggregates on purpose: one
+    combined groupBy(id) read perf-neutral at sf0.1 (the set sides
+    already share the scan through exchange reuse), and carrying the
+    collect_set buffer through the banding aggregate raised peak heap
+    enough to OOM q_corpus_card under a 1g driver."""
     cands = minhash_lsh_candidates(
         df, text_col, id_col, num_hashes, band_size, k, max_bucket
     )
-    verified = ngram_jaccard(
-        df, cands, text_col, id_col, k, persist_sets=persist_intermediates
+    sets = shingle_sets(df, text_col, id_col, k, hashed=True)
+    if persist_intermediates:
+        sets = sets.persist()
+    verified = ngram_jaccard(cands, sets, id_col)
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    return verified.filter(F.col("jaccard") >= threshold)
 
 
 def ngram_prune_stats(
@@ -322,12 +322,7 @@ def ngram_prune_stats(
     caller was already going to scan. docs_affected counts documents
     that LOSE at least one indexed shingle — the population whose
     candidate recall the cap can touch."""
-    rows = shingle_rows(df, text_col, id_col, k).dropDuplicates(
-        [id_col, "shingle"]
-    )
-    dfreq = rows.groupBy("shingle").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_df")
-    )
+    rows, dfreq = _shingle_index(df, text_col, id_col, k, persist=False)
     cutoff = _df_cutoff(dfreq, max_df, max_df_quantile)
     marked = dfreq.crossJoin(F.broadcast(cutoff))
     dropped_rows = (
@@ -412,6 +407,29 @@ def _df_cutoff(
     )
 
 
+def _shingle_index(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    persist: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """The shingle inverted index every exact-family producer reads:
+    the distinct (id, shingle) rows — persisted when asked, because
+    candidate generation and the verify sets both consume them — and
+    each shingle's document frequency (shingle, _df bigint). The df
+    frame is lazy; callers that never prune or rank by df never run
+    it."""
+    rows = shingle_rows(df, text_col, id_col, k).dropDuplicates(
+        [id_col, "shingle"]
+    )
+    if persist:
+        rows = rows.persist()
+    dfreq = rows.groupBy("shingle").agg(
+        F.count(F.lit(1)).cast("bigint").alias("_df")
+    )
+    return rows, dfreq
+
 
 def _df_pruned_candidates(
     df: DataFrame,
@@ -421,57 +439,44 @@ def _df_pruned_candidates(
     max_df: int | None,
     max_df_quantile: float | None,
     persist_intermediates: bool,
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame]:
     """Shared candidate generation of the inverted-index dedup family
-    (near_dup_pairs_ngram, containment_pairs): distinct-shingle index,
+    (near_dup_pairs_ngram, containment_pairs): the shingle index, an
     optional absolute/quantile df prune, per-shingle pairing. ONE
-    definition so the prune arithmetic and the bounded-vs-join pair
-    strategy (only an absolute max_df proves posting lists short
-    enough for the in-task collect_list pairing; a quantile cutoff is
-    data-dependent) cannot drift between the Jaccard and containment
-    paths. Returns (distinct (id_a, id_b) candidates, the PERSISTED
-    distinct (id, shingle) rows frame when persist_intermediates else
-    None) — round 14: callers derive their verify shingle sets from
-    the persisted rows (one cheap 8-byte-hash shuffle) instead of
-    re-scanning + re-exploding the corpus a second time.
+    definition so the prune arithmetic and the pair strategy cannot
+    drift between the Jaccard and containment paths.
 
-    Changelog (round 10): extracting this helper CHANGED the physical
-    plan of near_dup_pairs_ngram's max_df_quantile path — it now uses
-    the self-JOIN pair strategy where it previously used the bounded
-    collect_list pairing. Results are identical; the rationale is that
-    a quantile cutoff is a data-dependent value the planner cannot use
-    to bound posting-list length, so the in-task collect_list could
-    OOM on a skewed shingle. The 9.7x sf0.1->sf1 wall-clock ratio
-    recorded for q_dedup_ngram_quantile in SCALE.md therefore reflects
-    this strategy switch as well as the replica-saturated corpus."""
+    Only an absolute max_df proves posting lists short enough for the
+    in-task collect_list pairing; a quantile cutoff is a
+    data-dependent value the planner cannot use to bound posting-list
+    length, so that path (like the unpruned one) uses the self-join,
+    which streams a skewed shingle instead of collecting it into one
+    row.
+
+    Returns (distinct (id_a, id_b) candidates, their verify sets):
+    verification is always over full shingle sets, so the sets come
+    from the UNPRUNED index rows."""
     if max_df is not None and max_df_quantile is not None:
         raise ValueError("set at most one of max_df / max_df_quantile")
-    rows = shingle_rows(df, text_col, id_col, k).dropDuplicates(
-        [id_col, "shingle"]
+    rows, dfreq = _shingle_index(
+        df, text_col, id_col, k, persist_intermediates
     )
-    if persist_intermediates:
-        rows = rows.persist()
-    # the UNPRUNED persisted rows — verification is always over FULL
-    # shingle sets, so set derivation must see pre-prune rows
-    unpruned_rows = rows
-    if max_df is not None or max_df_quantile is not None:
-        dfreq = rows.groupBy("shingle").agg(
-            F.count(F.lit(1)).cast("bigint").alias("_df")
+    indexed = rows
+    if max_df is not None:
+        keep = dfreq.filter(F.col("_df") <= max_df).select("shingle")
+        indexed = rows.join(keep, "shingle", "left_semi")
+    elif max_df_quantile is not None:
+        cutoff = _df_cutoff(dfreq, None, max_df_quantile)
+        keep = (
+            dfreq.crossJoin(F.broadcast(cutoff))
+            .filter(F.col("_df") <= F.col("df_cutoff"))
+            .select("shingle")
         )
-        if max_df is not None:
-            keep = dfreq.filter(F.col("_df") <= max_df).select("shingle")
-        else:
-            cutoff = _df_cutoff(dfreq, None, max_df_quantile)
-            keep = (
-                dfreq.crossJoin(F.broadcast(cutoff))
-                .filter(F.col("_df") <= F.col("df_cutoff"))
-                .select("shingle")
-            )
-        rows = rows.join(keep, "shingle", "left_semi")
+        indexed = rows.join(keep, "shingle", "left_semi")
     cands = _pairs_within_groups(
-        rows, "shingle", id_col, bounded=max_df is not None
+        indexed, "shingle", id_col, bounded=max_df is not None
     )
-    return cands, (unpruned_rows if persist_intermediates else None)
+    return cands, _hashed_sets(rows, id_col)
 
 
 def _diagonal_runs(
@@ -506,6 +511,7 @@ def _diagonal_runs(
         .where(F.col("match_tokens") >= min_tokens)
         .select(*keys, pa, pb, "match_tokens")
     )
+
 
 def near_dup_pairs_ngram(
     df: DataFrame,
@@ -549,29 +555,18 @@ def near_dup_pairs_ngram(
 
     Verification is exact Jaccard over the full (unpruned) shingle
     sets, so pruning affects candidate RECALL only, never precision.
+    The candidate frame is consumed once (see near_dup_pairs_minhash);
+    only the index rows, read by both the pairing and the verify sets,
+    earn their cache.
     """
-    cands, rows = _df_pruned_candidates(
+    cands, sets = _df_pruned_candidates(
         df, text_col, id_col, k, max_df, max_df_quantile,
         persist_intermediates,
     )
-    # cands is consumed once (see near_dup_pairs_minhash) — only the
-    # doubly-consumed rows/sets frames earn their cache.
-    # Round 14: with persisted rows available, the verify sets are one
-    # (id, xxhash64) shuffle over those cached blocks (collect_set over
-    # distinct rows == collect_set over the multiset) instead of a
-    # second corpus scan + regex + explode (guide §2.4).
-    sets_df = (
-        rows.groupBy(id_col).agg(
-            F.collect_set(F.xxhash64("shingle")).alias("sh")
-        )
-        if rows is not None
-        else None
+    verified = ngram_jaccard(cands, sets, id_col)
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    verified = ngram_jaccard(
-        df, cands, text_col, id_col, k,
-        persist_sets=persist_intermediates, sets_df=sets_df,
-    )
-    return verified.filter(F.col("jaccard") >= threshold)
 
 
 def containment_pairs(
@@ -597,60 +592,29 @@ def containment_pairs(
     Same candidate machinery as near_dup_pairs_ngram (a pair with
     C >= t > 0 shares a shingle, so the inverted index has exact
     recall unpruned; max_df / max_df_quantile are the same Σdf² skew
-    knobs with the same recall caveats), same hashed verify as
-    ngram_jaccard — only the final ratio differs: intersection over
+    knobs with the same recall caveats) and the same verify,
+    ngram_jaccard — only the kept ratio differs: intersection over
     the SMALLER set instead of the union. Output: (id_a, id_b,
     containment, jaccard) for pairs with containment >= threshold —
-    jaccard rides along for free (same intersect/union arithmetic)
-    so downstream policy can distinguish true near-dups from
-    subset relations."""
+    jaccard rides along for free (same intersect arithmetic) so
+    downstream policy can distinguish true near-dups from subset
+    relations."""
     if not 0 < threshold <= 1:
         raise ValueError(
             f"containment: threshold must be in (0, 1], got {threshold}"
         )
-    cands, rows = _df_pruned_candidates(
+    cands, sets = _df_pruned_candidates(
         df, text_col, id_col, k, max_df, max_df_quantile,
         persist_intermediates,
     )
-    # Round 14: same set-derivation reuse as near_dup_pairs_ngram —
-    # persisted distinct rows feed the verify sets with one cheap
-    # hash shuffle instead of a second corpus scan.
-    if rows is not None:
-        sh = rows.groupBy(id_col).agg(
-            F.collect_set(F.xxhash64("shingle")).alias("sh")
-        )
-    else:
-        sh = shingle_sets(df, text_col, id_col, k, hashed=True)
-        if persist_intermediates:
-            sh = sh.persist()
-    out = (
-        cands.join(
-            sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"),
-            "id_a",
-        ).join(
-            sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    smaller = F.least(F.size("sh_a"), F.size("sh_b"))
+    verified = ngram_jaccard(cands, sets, id_col)
     return (
-        out.select(
-            "id_a",
-            "id_b",
-            F.when(smaller > 0, inter.cast("double") / smaller)
-            .otherwise(F.lit(0.0))
-            .alias("containment"),
-            F.when(union > 0, inter.cast("double") / union)
-            .otherwise(F.lit(0.0))
-            .alias("jaccard"),
-        )
-        # plain >= like every verify threshold here (ngram_jaccard,
-        # minhash): the ratio is ONE IEEE division both engines
+        # plain >= like every verify threshold here (ngram, minhash,
+        # PPJoin): the ratio is ONE IEEE division both engines
         # compute identically, so the compare cannot drift — a slack
         # would instead DESYNC engine and oracle at the boundary
-        .filter(F.col("containment") >= threshold)
+        verified.filter(F.col("containment") >= threshold)
+        .select("id_a", "id_b", "containment", "jaccard")
     )
 
 
@@ -799,13 +763,11 @@ def dedup_report(
         )
         .select(F.col("node").alias(id_col))
     )
-    # ONE corpus scan for all three df-wide numbers (round 14,
-    # optimization): docs_total, tokens_total and tokens_removable
-    # previously ran three separate scans (count, sum, semi-join+sum),
-    # each re-tokenizing text. Loser ids are UNIQUE (clusters has one
-    # row per node), so a left join + conditional sum preserves the
-    # row count and fuses everything into one aggregate
-    # (guide §2.3: aggregate before you shuffle; fewer passes).
+    # ONE corpus scan, one tokenization, for all three df-wide numbers
+    # (docs_total, tokens_total, tokens_removable). Loser ids are
+    # UNIQUE (clusters has one row per node), so a left join +
+    # conditional sum preserves the row count and fuses everything
+    # into one aggregate.
     tok = df.select(
         F.col(id_col), word_count(F.col(text_col)).alias("_t")
     )
@@ -849,7 +811,7 @@ def dedup_recall_report(
     approx_pairs: DataFrame,
     exact_pairs: DataFrame,
 ) -> DataFrame:
-    """Candidate-generation QUALITY report (round 11) — ann_recall's
+    """Candidate-generation QUALITY report — ann_recall's
     discipline applied to the dedup funnel: one row grading an
     approximate pair generator (minhash bands, simhash segments, a
     df-pruned index) against exact ground truth over the same corpus
@@ -898,7 +860,7 @@ def dedup_recall_sampled(
     k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """dedup_recall_report's PRODUCTION shape (round 12): the 100 TB
+    """dedup_recall_report's PRODUCTION shape: the 100 TB
     contract in that function's docstring — "run it on a SAMPLE; the
     exact side is the unpruned part" — as a graded operator instead
     of prose. Membership is the engine's standard deterministic
@@ -916,7 +878,7 @@ def dedup_recall_sampled(
     cost — the whole point at 100 TB, where the unpruned exact funnel
     is affordable ONLY on a sample.
 
-    HOW TIGHT (round 13): at the production denoms (CLUSTER.md
+    HOW TIGHT: at the production denoms (CLUSTER.md
     recommends ~10³ at 100 TB) the miss count is the small number
     being estimated, so the report states its own precision:
     `n_missed` (= n_exact − n_hits, the banding misses observed) and
@@ -989,7 +951,7 @@ def corpus_card(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """The MULTI-MODALITY corpus card (round 11) — dedup_report's
+    """The MULTI-MODALITY corpus card — dedup_report's
     one-row dashboard extended with the other two dedup modalities so
     a run's hygiene is ONE row per corpus, not three reports:
 
@@ -1062,7 +1024,7 @@ def dup_attribution(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Per-source duplicate-mass ATTRIBUTION matrix (round 11) — which
+    """Per-source duplicate-mass ATTRIBUTION matrix — which
     sources copy which: near_dup_clusters' (node, cluster) labels
     joined back to each doc's source tag, then, for every multi-member
     family, each NON-keeper member (keeper = min-id node, the
@@ -1083,7 +1045,7 @@ def dup_attribution(
     aggregate is |sources|^2 rows of metadata — never a pair list."""
     from .text import word_count
 
-    # In-band-sentinel guard (round 13): a GENUINE source tag equal to
+    # In-band-sentinel guard: a GENUINE source tag equal to
     # the '<unresolved>' marker would merge its mass with
     # unresolved-node mass and duplicate a grid row — raise loudly at
     # action time instead (per-row raise_error keeps this a free
@@ -1110,9 +1072,9 @@ def dup_attribution(
     multi = sizes.where(F.col("_n") > 1).select("cluster", "_keeper")
     # LEFT joins with a sentinel, not inner: when clusters were
     # computed over a SUPERSET corpus, a keeper (or loser) node may be
-    # absent from df — an inner join here silently vanished that
-    # cluster's whole duplicate mass (round-11 advice). Unresolvable
-    # nodes now land in the visible '<unresolved>' row/column instead
+    # absent from df, and an inner join would silently drop that
+    # cluster's whole duplicate mass. Unresolvable nodes land in the
+    # visible '<unresolved>' row/column instead
     # (token mass unknown for absent losers, so dup_tokens counts 0
     # for them while n_dup_docs still counts the doc). A presence
     # flag — not coalesce on the source — keeps a GENUINE NULL source
@@ -1721,7 +1683,9 @@ def near_dup_pairs_ppjoin(
     only the prefix ranks and sizes already on the matched rows —
     before any full shingle set is shipped to the verify join.
     Verification is exact Jaccard over FULL sets via the shared
-    ngram_jaccard. Xiao's SUFFIX filter (§3.3) is deliberately NOT
+    ngram_jaccard, whose sets come from the same distinct (id,
+    shingle) rows the prefix index ranks — the corpus is shingled
+    once. Xiao's SUFFIX filter (§3.3) is deliberately NOT
     implemented: it is a divide-and-conquer probe over the suffix
     token arrays, so expressing it set-orientedly means joining the
     full sorted shingle arrays onto every candidate — the exact cost
@@ -1732,12 +1696,9 @@ def near_dup_pairs_ppjoin(
     """
     if not 0 < threshold <= 1:
         raise ValueError(f"ppjoin: threshold must be in (0, 1], got {threshold}")
-    rows = shingle_rows(df, text_col, id_col, k).dropDuplicates(
-        [id_col, "shingle"]
+    rows, dfreq = _shingle_index(
+        df, text_col, id_col, k, persist_intermediates
     )
-    if persist_intermediates:
-        rows = rows.persist()
-    dfreq = rows.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
     order = Window.partitionBy(id_col).orderBy(
         F.col("_df").asc(), F.col("shingle").asc()
     )
@@ -1808,10 +1769,10 @@ def near_dup_pairs_ppjoin(
         .where(F.col("_ub") >= F.col("_alpha"))
         .select("id_a", "id_b")
     )
-    verified = ngram_jaccard(
-        df, cands, text_col, id_col, k, persist_sets=persist_intermediates
+    verified = ngram_jaccard(cands, _hashed_sets(rows, id_col), id_col)
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    return verified.filter(F.col("jaccard") >= threshold)
 
 
 def incremental_near_dedup(
@@ -2235,7 +2196,7 @@ def compact_anchor_store(
     dropped: DataFrame,
     id_col: str = "doc_id",
 ) -> tuple[int, int]:
-    """Anchor-store LIFECYCLE (round 11): incremental_substring_dedup
+    """Anchor-store LIFECYCLE: incremental_substring_dedup
     appends anchors forever, so without maintenance the store grows
     O(ingested tokens). This drops the anchors of documents a LATER
     hard-dedup pass removed from the corpus (`dropped` = their ids)

@@ -69,9 +69,17 @@ def as_double(a: Column) -> Column:
     return a.cast("array<double>")
 
 
-def _topk_per_query(scored: DataFrame, k: int, n_salts: int = 32) -> DataFrame:
-    """Exact per-query top-k over (query_id, neighbor_id, cos) rows,
-    ranked by (cos desc, neighbor_id asc), as a salted two-phase agg.
+def _topk_per_query(
+    scored: DataFrame,
+    k: int,
+    val_col: str = "cos",
+    descending: bool = True,
+    n_salts: int = 32,
+) -> DataFrame:
+    """Exact per-query top-k over (query_id, neighbor_id, val_col) rows,
+    ranked by (val_col desc — or asc for a distance — then neighbor_id
+    asc), as a salted two-phase agg. Rows with a NULL value are
+    dropped (the zero-norm cosine guard).
 
     Why not `row_number().over(Window.partitionBy("query_id"))`: a
     window shuffles EVERY scored row onto one partition per query_id
@@ -87,14 +95,17 @@ def _topk_per_query(scored: DataFrame, k: int, n_salts: int = 32) -> DataFrame:
       query — a trivially small final merge.
 
     Exact by construction: every global top-k row is the top-k of its
-    own salt bucket. The struct sort key (-cos, neighbor_id) is a
-    total order, so ties resolve identically to the window version.
+    own salt bucket. The struct sort key (±val, neighbor_id) is a
+    total order, so ties resolve identically to the window version;
+    a decimal value is compared exactly, and negation is exact, so
+    the output value is the input value bit for bit. Output:
+    (query_id, neighbor_id, val_col, rank).
     """
-    scored = scored.filter(F.col("cos").isNotNull())  # zero-norm guard
+    scored = scored.filter(F.col(val_col).isNotNull())
+    sign = (lambda c: -c) if descending else (lambda c: c)
     entry = F.struct(
-        (-F.col("cos")).alias("_negcos"),
+        sign(F.col(val_col)).alias("_key"),
         F.col("neighbor_id").alias("neighbor_id"),
-        F.col("cos").alias("cos"),
     )
     local = (
         scored.groupBy(
@@ -112,7 +123,7 @@ def _topk_per_query(scored: DataFrame, k: int, n_salts: int = 32) -> DataFrame:
     ).select(
         "query_id",
         F.col("_e.neighbor_id").alias("neighbor_id"),
-        F.col("_e.cos").alias("cos"),
+        sign(F.col("_e._key")).alias(val_col),
         (F.col("_pos") + 1).alias("rank"),
     )
 
@@ -437,7 +448,7 @@ def ivf_objective(
 
 
 def ivf_save_codebook(spark, path: str, centroids) -> None:
-    """REGISTER the codebook beside its inverted file (round 13):
+    """REGISTER the codebook beside its inverted file:
     (cid, centroid array<double>) parquet under `<path>/_codebook` —
     the leading underscore keeps the directory invisible to Spark's
     partition discovery, so index reads over `path` are untouched.
@@ -470,8 +481,8 @@ def ivf_load_codebook(spark, path: str) -> "np.ndarray":
     except AnalysisException as e:
         raise ValueError(
             f"ivf_load_codebook: no registered codebook under {path!r} "
-            "— the index was written before round 13 or without "
-            "centroids; rebuild with ivf_write_index (which registers "
+            "— the index was written without a registered "
+            "codebook; rebuild with ivf_write_index (which registers "
             "it) or pass centroids explicitly"
         ) from e
     return np.array([r["centroid"] for r in rows], dtype=np.float64)
@@ -482,7 +493,7 @@ def _codebook_exists(spark, path: str) -> bool:
     ONLY the path-not-found AnalysisException (like ivf_load_codebook):
     a transient IO/permission/corruption error must propagate loudly —
     swallowed, it would silently fall back to the md5 default codebook
-    and mis-file every appended vector (ADVICE r13 medium)."""
+    and mis-file every appended vector."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -515,7 +526,7 @@ def ivf_write_index(
     overwrite (see ivf_append_index's contract) — ONE write path
     serves the batch, append, and streaming-epoch cases.
 
-    Codebook registration (round 13): a FRESH build
+    Codebook registration: a FRESH build
     (mode='overwrite') persists its codebook — explicit or the md5
     default — under `<path>/_codebook`, so appends and probes can
     load the registered one instead of trusting every caller to
@@ -530,8 +541,8 @@ def ivf_write_index(
         # An epoch-layout "overwrite" replaces ONE epoch's partitions,
         # not the index: re-registering a different codebook here would
         # leave earlier epochs filed under the old one — the exact
-        # mixed-codebook index the append-path validation prevents
-        # (ADVICE r13 low). Validate like ivf_append_index instead.
+        # mixed-codebook index the append-path validation prevents.
+        # Validate like ivf_append_index instead.
         registered = ivf_load_codebook(spark, path)
         got = np.asarray(cents, dtype=np.float64)
         if got.shape != registered.shape or not np.array_equal(
@@ -611,16 +622,15 @@ def ivf_append_index(
     A long-running stream accumulates one epoch=<n> subtree per
     micro-batch — fold them periodically with ivf_compact_index.
 
-    Codebook contract (round 13): with centroids=None the append
+    Codebook contract: with centroids=None the append
     LOADS the codebook registered at build time (`<path>/_codebook`)
     — the recommended call shape; nothing to mis-supply. Explicit
     centroids are VALIDATED against the registered codebook when one
     exists (exact float64 equality — both sides derive from the same
     deterministic training) and a mismatch raises instead of silently
-    mis-filing every appended vector. Pre-round-13 indexes (no
-    registered codebook) keep the old trust-the-caller behavior when
-    centroids are passed; centroids=None on such an index previously
-    meant "the md5 default" and still does."""
+    mis-filing every appended vector. An index with no registered
+    codebook trusts the caller's centroids when they are passed, and
+    centroids=None on such an index means "the md5 default"."""
     spark = new_vectors.sparkSession
     if _codebook_exists(spark, path):
         registered = ivf_load_codebook(spark, path)
@@ -694,7 +704,7 @@ def ivf_compact_index(
         upto_epoch = max(epochs)
     body = idx.filter(F.col("epoch") <= F.lit(int(upto_epoch))).drop("epoch")
     _write_cells(body, out_path, mode="overwrite", epoch=None)
-    # the registered codebook travels with the fold (round 13): a
+    # the registered codebook travels with the fold: a
     # compacted replica must stay appendable/probeable under the SAME
     # codebook or every later vector would be silently mis-filed
     if _codebook_exists(spark, path):
@@ -1154,38 +1164,6 @@ def pq_encode(
     )
 
 
-def _topk_min_per_query(
-    scored: DataFrame, k: int, val_col: str, n_salts: int = 32
-) -> DataFrame:
-    """Exact per-query MIN-k over (query_id, neighbor_id, val) rows —
-    the ascending twin of _topk_per_query (same salted two-phase
-    hash-agg shape, same reason: no full-width window sort per
-    query). Ties break on neighbor_id; val's type (decimal here) is
-    compared exactly by the struct sort."""
-    entry = F.struct(
-        F.col(val_col).alias("_v"), F.col("neighbor_id").alias("neighbor_id")
-    )
-    local = (
-        scored.groupBy(
-            "query_id",
-            F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(n_salts)).alias("_salt"),
-        )
-        .agg(F.slice(F.array_sort(F.collect_list(entry)), 1, k).alias("_top"))
-        .select("query_id", F.explode("_top").alias("_e"))
-    )
-    merged = local.groupBy("query_id").agg(
-        F.slice(F.array_sort(F.collect_list("_e")), 1, k).alias("_top")
-    )
-    return merged.select(
-        "query_id", F.posexplode("_top").alias("_pos", "_e")
-    ).select(
-        "query_id",
-        F.col("_e.neighbor_id").alias("neighbor_id"),
-        F.col("_e._v").alias(val_col),
-        (F.col("_pos") + 1).alias("rank"),
-    )
-
-
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1272,7 +1250,7 @@ def _adc_rank(
     scored = scored_rows.groupBy(
         "query_id", F.col(id_col).alias("neighbor_id")
     ).agg(F.sum("d2").alias("d2"))
-    out = _topk_min_per_query(scored, k, "d2")
+    out = _topk_per_query(scored, k, "d2", descending=False)
     return out.select(
         "query_id",
         "neighbor_id",
@@ -1357,7 +1335,7 @@ def semantic_decontaminate(
     flagged rows only, deterministic (cos desc, eval_id asc) choice
     among ties.
     """
-    # fan-out floor (round 14): the |corpus|x|evals| interpreted
+    # fan-out floor: the |corpus|x|evals| interpreted
     # cosine folds (~60 us/pair) run on the corpus side's scan
     # partitioning (evals broadcast) — the one similarity path where
     # the paired probe showed the floor paying for its exchange
@@ -1493,10 +1471,10 @@ def ann_recall_report(
     brute_topk: DataFrame,
     k: int,
 ) -> DataFrame:
-    """ANN QUALITY report (round 11): one row grading an approximate
+    """ANN QUALITY report: one row grading an approximate
     index's top-k against brute-force ground truth over the same query
-    set — the "no silent caps" discipline applied to ANN recall, which
-    until now lived only in pytest assertions. Inputs are two
+    set — the "no silent caps" discipline applied to ANN recall as a
+    graded report, not only a pytest assertion. Inputs are two
     (query_id, neighbor_id, rank) frames (brute = truth). Output:
     (k, n_queries, n_truth, n_hits, recall_at_k,
     mean_rank_displacement) where recall_at_k = hits / truth rows

@@ -4296,37 +4296,71 @@ def test_digest_merge_deterministic_without_order_cols(spark):
 
 
 def test_ngram_jaccard_hashed_equals_string_verify(spark):
-    """The hashed verify path (xxhash64 shingle arrays) must return
-    exactly the string-set path's pairs AND jaccard values on a corpus
-    with shared boilerplate, partial overlaps, and disjoint docs —
-    collisions aside (probability ~n²/2^64), the two are the same
-    math over smaller bytes."""
-    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
-        near_dup_pairs_ngram,
-    )
-
-    rows = [Row(doc_id=i, text=f"shared prefix tokens here item {i} tail {i % 3}")
-            for i in range(12)]
-    rows += [Row(doc_id=100, text="utterly unrelated content entirely")]
-    df = spark.createDataFrame(rows)
-    # near_dup_pairs_ngram -> ngram_jaccard(hashed=True) is the default
-    hashed = sorted(map(tuple, near_dup_pairs_ngram(df, k=2, threshold=0.3).collect()))
-    # string path: force hashed=False through the underlying verify
+    """The verify over xxhash64 shingle arrays (the engine's sets) must
+    return exactly the string-set path's pairs AND jaccard AND
+    containment values on a corpus with shared boilerplate, partial
+    overlaps, nested docs and disjoint docs — collisions aside
+    (probability ~n²/2^64), the two are the same math over smaller
+    bytes."""
     from aces_nifi_processors_bundle_spark.pipeline.dedup import (
         _pairs_within_groups,
+        near_dup_pairs_ngram,
         ngram_jaccard,
+        shingle_sets,
     )
     from aces_nifi_processors_bundle_spark.pipeline.text import shingle_rows
 
+    rows = [Row(doc_id=i, text=f"shared prefix tokens here item {i} tail {i % 3}")
+            for i in range(12)]
+    rows += [Row(doc_id=50, text="shared prefix tokens here")]
+    rows += [Row(doc_id=100, text="utterly unrelated content entirely")]
+    df = spark.createDataFrame(rows)
     idx = shingle_rows(df, "text", "doc_id", 2).dropDuplicates(["doc_id", "shingle"])
     cands = _pairs_within_groups(idx, "shingle", "doc_id", bounded=False)
-    strings = sorted(
-        map(tuple,
-            ngram_jaccard(df, cands, "text", "doc_id", 2, hashed=False)
-            .filter(F.col("jaccard") >= 0.3).collect())
-    )
-    assert hashed == strings
+
+    def verify(hashed):
+        sets = shingle_sets(df, "text", "doc_id", 2, hashed=hashed)
+        return sorted(map(tuple, ngram_jaccard(cands, sets).collect()))
+
+    strings = verify(False)
+    assert verify(True) == strings
+    # the nested doc makes containment differ from jaccard
+    assert any(c == 1.0 and j < 1.0 for _, _, j, c in strings)
+    # the producer's own verify sets (hashed, from the index rows)
+    hashed = sorted(map(tuple, near_dup_pairs_ngram(df, k=2, threshold=0.3).collect()))
+    assert hashed == [(a, b, j) for a, b, j, _ in strings if j >= 0.3]
     assert len(hashed) > 0
+
+
+def test_exact_family_persists_one_frame(spark):
+    """With persist_intermediates=True, PPJoin, n-gram and containment
+    each cache exactly one frame — the shingle index rows, which feed
+    both candidate generation and the verify sets — rather than
+    shingling the corpus a second time for a separately cached set
+    frame."""
+    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
+        containment_pairs,
+        near_dup_pairs_ngram,
+        near_dup_pairs_ppjoin,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    df = spark.createDataFrame([
+        Row(doc_id=1, text=base),
+        Row(doc_id=2, text=base + " today"),
+        Row(doc_id=3, text=" ".join(base.split()[:8])),
+        Row(doc_id=4, text="nothing here resembles any other document at all"),
+    ])
+    jsc = spark.sparkContext._jsc
+    for fn in (near_dup_pairs_ppjoin, near_dup_pairs_ngram, containment_pairs):
+        spark.catalog.clearCache()
+        before = set(jsc.getPersistentRDDs().keySet())
+        try:
+            assert fn(df, k=3, persist_intermediates=True).collect(), fn.__name__
+            added = set(jsc.getPersistentRDDs().keySet()) - before
+            assert len(added) == 1, (fn.__name__, len(added))
+        finally:
+            spark.catalog.clearCache()
 
 
 def test_pairs_within_groups_strategies_identical(spark):

@@ -140,11 +140,13 @@ def test_shingles_model(spark, docs):
         max_size=120,
     ),
     st.integers(min_value=1, max_value=6),  # k
+    st.booleans(),  # descending: cosine similarity, else a distance
 )
-def test_salted_topk_equals_python_model(spark, rows, k):
+def test_salted_topk_equals_python_model(spark, rows, k, descending):
     """_topk_per_query (salted two-phase agg) must equal the exact
-    per-query top-k under the (cos desc, neighbor_id asc) total order —
-    the property that justifies replacing the window-function plan."""
+    per-query top-k under the (value desc, neighbor_id asc) total order
+    — or (value asc, neighbor_id asc) for a distance — the property
+    that justifies replacing the window-function plan."""
     from aces_nifi_processors_bundle_spark.pipeline.similarity import (
         _topk_per_query,
     )
@@ -155,18 +157,21 @@ def test_salted_topk_equals_python_model(spark, rows, k):
     for q, n, s in rows:
         seen[(q, n)] = s / 1000.0
     data = [(q, n, s) for (q, n), s in seen.items()]
-    df = spark.createDataFrame(data, "query_id long, neighbor_id long, cos double")
+    col = "cos" if descending else "d2"
+    df = spark.createDataFrame(data, f"query_id long, neighbor_id long, {col} double")
     df = df.repartition(8)  # arbitrary physical layout
     got = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-        for r in _topk_per_query(df, k).collect()
+        (r["query_id"], r["rank"]): (r["neighbor_id"], r[col])
+        for r in _topk_per_query(df, k, col, descending).collect()
     }
     expect = {}
     by_q: dict = {}
     for q, n, s in data:
         by_q.setdefault(q, []).append((n, s))
     for q, pairs in by_q.items():
-        ranked = sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
+        ranked = sorted(
+            pairs, key=lambda p: (-p[1] if descending else p[1], p[0])
+        )[:k]
         for i, (n, s) in enumerate(ranked):
             expect[(q, i + 1)] = (n, s)
     assert got == expect
