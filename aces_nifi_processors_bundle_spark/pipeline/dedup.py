@@ -163,13 +163,18 @@ def minhash_lsh_candidates(
         band_entries = band_entries.join(small, "band_key", "left_semi")
     return _pairs_within_groups(
         band_entries, "band_key", id_col, bounded=max_bucket is not None
-    )
+    ).select("id_a", "id_b")
 
 
 def _pairs_within_groups(
     entries: DataFrame, group_col: str, id_col: str, bounded: bool
 ) -> DataFrame:
-    """Distinct (id_a < id_b) pairs of ids sharing a group value.
+    """(id_a < id_b, count) for ids sharing a group value, where count
+    is the number of (group, id_a) x (group, id_b) entry matches — over
+    distinct (group, id) entries, the number of groups the pair shares.
+    On a shingle inverted index that is |A∩B| over the indexed
+    shingles, the AllPairs/ScanCount overlap count, paid for by the
+    same (id_a, id_b) hash aggregate a distinct() would run.
 
     Two physical strategies with identical output:
     - bounded=True (a skew guard caps group size): groupBy +
@@ -188,7 +193,8 @@ def _pairs_within_groups(
             g.select(F.explode("_ids").alias("id_a"), "_ids")
             .select("id_a", F.explode("_ids").alias("id_b"))
             .filter(F.col("id_a") < F.col("id_b"))
-            .distinct()
+            .groupBy("id_a", "id_b")
+            .count()
         )
     a = entries.alias("a")
     b = entries.alias("b")
@@ -199,8 +205,26 @@ def _pairs_within_groups(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
         )
-        .distinct()
+        .groupBy("id_a", "id_b")
+        .count()
     )
+
+
+def _set_ratios(inter: Column, union: Column, smaller: Column) -> list[Column]:
+    """jaccard = |A∩B| / |A∪B| and containment = |A∩B| / min(|A|, |B|)
+    from the three sizes. Each is ONE IEEE division of two exact
+    integers (the DuckDB oracles run the same one) and reads 0.0 over
+    empty sets. The counted path passes |A∪B| = |A| + |B| − |A∩B|;
+    the array verify passes size(array_union), which keeps its join
+    condition at one array_intersect (no subexpression elimination
+    there: the |A|+|B|−|A∩B| form evaluates array_intersect three
+    times per candidate and measured slower in minhash and PPJoin)."""
+    return [
+        F.when(union > 0, inter.cast("double") / union)
+        .otherwise(F.lit(0.0)).alias("jaccard"),
+        F.when(smaller > 0, inter.cast("double") / smaller)
+        .otherwise(F.lit(0.0)).alias("containment"),
+    ]
 
 
 def ngram_jaccard(
@@ -208,51 +232,40 @@ def ngram_jaccard(
     sets: DataFrame,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact set ratios for candidate pairs — the one verify of the
-    exact near-dup family (minhash's verify step, n-gram, containment
-    and PPJoin all end here).
+    """Exact set ratios for candidate pairs from per-doc shingle arrays
+    — the verify of minhash (its candidates share a band, not a
+    counted shingle) and PPJoin (its candidates share only a prefix
+    shingle). n-gram and containment count |A∩B| in the index join
+    instead (`_counted_pairs`).
 
     `sets` holds one (id, sh) row per doc, sh its distinct shingle
     array. The (small) candidate pair set joins to it twice — one hash
-    join per side — and one array_intersect size gives both ratios:
-    jaccard = |A∩B| / |A∪B| and containment = |A∩B| / min(|A|, |B|),
-    each 0.0 over empty sets. Verification cost scales with
-    candidates, not corpus. Output: (id_a, id_b, jaccard, containment).
+    join per side — and one array_intersect size gives both ratios
+    (`_set_ratios`). Verification cost scales with candidates, not
+    corpus. Output: (id_a, id_b, jaccard, containment).
 
     The engine's callers pass xxhash64(shingle) arrays (shingle_sets
-    hashed=True, or `_hashed_sets` over the shingle index): the verify
-    join is the dominant cost of every exact near-dup path once
+    hashed=True, or PPJoin's per-doc aggregate over its index rows):
+    the verify join is the dominant cost of these paths once
     candidates number in the millions (measured 70.6 s → 31.0 s for
     the whole sf1 PPJoin, SCALE.md), and the ratios differ from
     string-set ratios only on a 64-bit collision inside one comparison
-    (~n²/2^64, the engine's standard sketch contract). The DuckDB
-    oracles stay on raw strings deliberately, so a collision at graded
-    scale would surface as a mismatch rather than hide.
+    (~n²/2^64, the engine's standard sketch contract). The DuckDB oracles stay on
+    raw strings deliberately, so a collision at graded scale would
+    surface as a mismatch rather than hide.
     """
     out = (
         pairs.join(sets.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sets.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    smaller = F.least(F.size("sh_a"), F.size("sh_b"))
     return out.select(
         "id_a",
         "id_b",
-        F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0)).alias("jaccard"),
-        F.when(smaller > 0, inter.cast("double") / smaller)
-        .otherwise(F.lit(0.0))
-        .alias("containment"),
-    )
-
-
-def _hashed_sets(rows: DataFrame, id_col: str) -> DataFrame:
-    """(id, sh) verify sets from the shingle index's distinct
-    (id, shingle) rows: one (id, xxhash64) aggregate over rows the
-    caller already built, instead of a second corpus scan, regex and
-    explode."""
-    return rows.groupBy(id_col).agg(
-        F.collect_set(F.xxhash64("shingle")).alias("sh")
+        *_set_ratios(
+            F.size(F.array_intersect("sh_a", "sh_b")),
+            F.size(F.array_union("sh_a", "sh_b")),
+            F.least(F.size("sh_a"), F.size("sh_b")),
+        ),
     )
 
 
@@ -321,8 +334,12 @@ def ngram_prune_stats(
     itself computes, so the report costs one extra pass over data the
     caller was already going to scan. docs_affected counts documents
     that LOSE at least one indexed shingle — the population whose
-    candidate recall the cap can touch."""
-    rows, dfreq = _shingle_index(df, text_col, id_col, k, persist=False)
+    candidate recall the cap can touch. Like the prune, it indexes
+    only docs with a non-null id."""
+    rows, dfreq = _shingle_index(
+        df.where(F.col(id_col).isNotNull()), text_col, id_col, k,
+        persist=False,
+    )
     cutoff = _df_cutoff(dfreq, max_df, max_df_quantile)
     marked = dfreq.crossJoin(F.broadcast(cutoff))
     dropped_rows = (
@@ -414,10 +431,10 @@ def _shingle_index(
     k: int,
     persist: bool,
 ) -> tuple[DataFrame, DataFrame]:
-    """The shingle inverted index every exact-family producer reads:
+    """The shingle inverted index PPJoin and ngram_prune_stats read:
     the distinct (id, shingle) rows — persisted when asked, because
-    candidate generation and the verify sets both consume them — and
-    each shingle's document frequency (shingle, _df bigint). The df
+    PPJoin's candidate generation and verify sets both consume them —
+    and each shingle's document frequency (shingle, _df bigint). The df
     frame is lazy; callers that never prune or rank by df never run
     it."""
     rows = shingle_rows(df, text_col, id_col, k).dropDuplicates(
@@ -431,52 +448,90 @@ def _shingle_index(
     return rows, dfreq
 
 
-def _df_pruned_candidates(
+def _counted_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
     k: int,
     max_df: int | None,
     max_df_quantile: float | None,
-    persist_intermediates: bool,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared candidate generation of the inverted-index dedup family
-    (near_dup_pairs_ngram, containment_pairs): the shingle index, an
-    optional absolute/quantile df prune, per-shingle pairing. ONE
-    definition so the prune arithmetic and the pair strategy cannot
-    drift between the Jaccard and containment paths.
+) -> DataFrame:
+    """Shared producer of near_dup_pairs_ngram and containment_pairs:
+    the shingle index, an optional absolute/quantile df prune,
+    per-shingle pairing, and both ratios COUNTED, not verified.
+    Output: (id_a, id_b, jaccard, containment) for every pair sharing
+    >= 1 indexed shingle.
 
-    Only an absolute max_df proves posting lists short enough for the
-    in-task collect_list pairing; a quantile cutoff is a
-    data-dependent value the planner cannot use to bound posting-list
-    length, so that path (like the unpruned one) uses the self-join,
-    which streams a skewed shingle instead of collecting it into one
-    row.
+    The pairing's (id_a, id_b) aggregate counts one row per shared
+    indexed shingle, c. Unpruned, c = |A∩B| and n = rows per id = |A|:
+    string-exact ratios with no shingle arrays and no verify join.
+    Pruned, kept and pruned ("hot") shingles are disjoint, so |A∩B| =
+    c + |hot_A ∩ hot_B|, hot being a per-doc collect_set of xxhash64
+    over the pruned shingles, built in the aggregate that counts n —
+    exact over FULL sets up to a 64-bit collision among one pair's hot
+    shingles. The prune touches candidate RECALL only.
 
-    Returns (distinct (id_a, id_b) candidates, their verify sets):
-    verification is always over full shingle sets, so the sets come
-    from the UNPRUNED index rows."""
+    The index is shuffled by shingle once; the dedup, each pruned
+    row's df (a count window over its shingle) and the shingle pairing
+    all run in those partitions, so the prune adds no join and no
+    exchange (a hot shingle's rows pass through one task, whose window
+    buffer spills rather than fails). Only an absolute max_df bounds
+    posting lists enough for the in-task collect_list pairing; the
+    quantile and unpruned paths use the self-join, which streams a
+    skewed shingle. Nothing is persisted: AQE's exchange reuse shares
+    the index shuffle between the pairing and the per-id aggregate,
+    where a cache would add cache-fill jobs."""
     if max_df is not None and max_df_quantile is not None:
         raise ValueError("set at most one of max_df / max_df_quantile")
-    rows, dfreq = _shingle_index(
-        df, text_col, id_col, k, persist_intermediates
+    # A null id never pairs, so df counts docs with an id; dropping
+    # null ids up front keeps every branch on one index plan for
+    # exchange reuse (the joins' inferred not-null filters would
+    # otherwise fork it).
+    rows = (
+        shingle_rows(df.where(F.col(id_col).isNotNull()), text_col, id_col, k)
+        .repartition("shingle")
+        .dropDuplicates([id_col, "shingle"])
     )
-    indexed = rows
-    if max_df is not None:
-        keep = dfreq.filter(F.col("_df") <= max_df).select("shingle")
-        indexed = rows.join(keep, "shingle", "left_semi")
-    elif max_df_quantile is not None:
-        cutoff = _df_cutoff(dfreq, None, max_df_quantile)
-        keep = (
-            dfreq.crossJoin(F.broadcast(cutoff))
-            .filter(F.col("_df") <= F.col("df_cutoff"))
-            .select("shingle")
+    n = F.count(F.lit(1)).alias("_n")
+    if max_df is None and max_df_quantile is None:
+        pairs = _pairs_within_groups(rows, "shingle", id_col, bounded=False)
+        sizes = rows.groupBy(id_col).agg(n)
+        inter = F.col("count")
+    else:
+        marked = rows.withColumn(
+            "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
         )
-        indexed = rows.join(keep, "shingle", "left_semi")
-    cands = _pairs_within_groups(
-        indexed, "shingle", id_col, bounded=max_df is not None
+        if max_df is not None:
+            hot = F.col("_df") > max_df
+        else:
+            dfreq = rows.groupBy("shingle").agg(
+                F.count(F.lit(1)).cast("bigint").alias("_df")
+            )
+            marked = marked.crossJoin(
+                F.broadcast(_df_cutoff(dfreq, None, max_df_quantile))
+            )
+            hot = F.col("_df") > F.col("df_cutoff")
+        marked = marked.withColumn("_hot", hot)
+        pairs = _pairs_within_groups(
+            marked.where(~F.col("_hot")), "shingle", id_col,
+            bounded=max_df is not None,
+        )
+        sizes = marked.groupBy(id_col).agg(
+            n,
+            F.collect_set(
+                F.when(F.col("_hot"), F.xxhash64("shingle"))
+            ).alias("_hs"),
+        )
+        inter = F.col("count") + F.size(F.array_intersect("_hs_a", "_hs_b"))
+
+    def side(s: str) -> DataFrame:
+        return sizes.toDF(f"id_{s}", *(f"{c}_{s}" for c in sizes.columns[1:]))
+
+    n_a, n_b = F.col("_n_a"), F.col("_n_b")
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b").select(
+        "id_a", "id_b",
+        *_set_ratios(inter, n_a + n_b - inter, F.least(n_a, n_b)),
     )
-    return cands, _hashed_sets(rows, id_col)
 
 
 def _diagonal_runs(
@@ -521,7 +576,6 @@ def near_dup_pairs_ngram(
     threshold: float = 0.5,
     max_df: int | None = None,
     max_df_quantile: float | None = None,
-    persist_intermediates: bool = False,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via a shingle inverted index
     — the LSH-free scale path (minhash trades exactness for fewer
@@ -553,17 +607,15 @@ def near_dup_pairs_ngram(
     and audit any cap with ngram_prune_stats, which reports exactly
     how many shingles/index rows/documents the prune touches.
 
-    Verification is exact Jaccard over the full (unpruned) shingle
-    sets, so pruning affects candidate RECALL only, never precision.
-    The candidate frame is consumed once (see near_dup_pairs_minhash);
-    only the index rows, read by both the pairing and the verify sets,
-    earn their cache.
+    Jaccard is exact over the full (unpruned) shingle sets: c, the
+    count of the pair's join rows in the index self-join, is |A∩B|
+    over the indexed shingles, and a pruned index adds the pair's
+    shared pruned shingles (`_counted_pairs`). Pruning affects
+    candidate RECALL only, never precision.
     """
-    cands, sets = _df_pruned_candidates(
-        df, text_col, id_col, k, max_df, max_df_quantile,
-        persist_intermediates,
+    verified = _counted_pairs(
+        df, text_col, id_col, k, max_df, max_df_quantile
     )
-    verified = ngram_jaccard(cands, sets, id_col)
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )
@@ -577,7 +629,6 @@ def containment_pairs(
     threshold: float = 0.8,
     max_df: int | None = None,
     max_df_quantile: float | None = None,
-    persist_intermediates: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC near-dup pairs by shingle CONTAINMENT (Broder's
     containment coefficient): C = |A ∩ B| / min(|A|, |B|) — the
@@ -592,22 +643,21 @@ def containment_pairs(
     Same candidate machinery as near_dup_pairs_ngram (a pair with
     C >= t > 0 shares a shingle, so the inverted index has exact
     recall unpruned; max_df / max_df_quantile are the same Σdf² skew
-    knobs with the same recall caveats) and the same verify,
-    ngram_jaccard — only the kept ratio differs: intersection over
-    the SMALLER set instead of the union. Output: (id_a, id_b,
-    containment, jaccard) for pairs with containment >= threshold —
-    jaccard rides along for free (same intersect arithmetic) so
+    knobs with the same recall caveats) and the same counted |A∩B|
+    (`_counted_pairs`: the pair's join-row count, plus its shared
+    pruned shingles on a pruned index) — only the kept ratio differs:
+    intersection over the SMALLER set instead of the union. Output:
+    (id_a, id_b, containment, jaccard) for pairs with containment >=
+    threshold — jaccard rides along for free (same counts) so
     downstream policy can distinguish true near-dups from subset
     relations."""
     if not 0 < threshold <= 1:
         raise ValueError(
             f"containment: threshold must be in (0, 1], got {threshold}"
         )
-    cands, sets = _df_pruned_candidates(
-        df, text_col, id_col, k, max_df, max_df_quantile,
-        persist_intermediates,
+    verified = _counted_pairs(
+        df, text_col, id_col, k, max_df, max_df_quantile
     )
-    verified = ngram_jaccard(cands, sets, id_col)
     return (
         # plain >= like every verify threshold here (ngram, minhash,
         # PPJoin): the ratio is ONE IEEE division both engines
@@ -844,6 +894,38 @@ def dedup_recall_report(
     )
 
 
+def minhash_recall_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    num_hashes: int = 8,
+    band_size: int = 2,
+    k: int = 3,
+    threshold: float = 0.5,
+) -> tuple[DataFrame, DataFrame]:
+    """(approx, exact) pair frames for dedup_recall_report: the
+    minhash funnel's verified pairs and the unpruned exact n-gram
+    Jaccard pairs over the same corpus and threshold, verified ONCE.
+
+    exact is near_dup_pairs_ngram unpruned: every pair with J >= t.
+    approx is minhash_lsh_candidates left-semi-joined to exact's
+    (id_a, id_b) — the same set near_dup_pairs_minhash returns,
+    because J >= t > 0 needs a shared shingle, so exact holds every
+    pair minhash's own verify would keep. That drops minhash's
+    shingle-set aggregate and its two verify joins. The equivalence
+    needs t > 0, so a threshold <= 0 is rejected."""
+    if not threshold > 0:
+        raise ValueError(
+            f"recall report: threshold must be > 0, got {threshold}"
+        )
+    exact = near_dup_pairs_ngram(
+        df, id_col=id_col, k=k, threshold=threshold
+    )
+    approx = minhash_lsh_candidates(
+        df, id_col=id_col, num_hashes=num_hashes, band_size=band_size, k=k
+    ).join(exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
+    return approx, exact
+
+
 # One-sided 95% normal quantile for the Wilson score upper bound on
 # the sampled recall reports' miss rate. A literal (not a scipy call)
 # so the DuckDB oracle replays the identical arithmetic.
@@ -868,8 +950,9 @@ def dedup_recall_sampled(
     the sample is a pure function of ids: stable across corpus
     growth, re-runnable, and mirrored bit-for-bit by the DuckDB
     oracle. Both funnels (minhash-banded approx, unpruned exact
-    n-gram Jaccard) run on the SAME sampled corpus, then the standard
-    recall report grades them.
+    n-gram Jaccard) run on the SAME sampled corpus and are verified
+    once (minhash_recall_pairs), then the standard recall report
+    grades them.
 
     Statistically: banding recall is a per-pair Bernoulli property
     (P[some band collides | J(a,b)] depends only on the pair), so
@@ -903,22 +986,16 @@ def dedup_recall_sampled(
             f"got {sample_denom}"
         )
     sample = hash_mod_sample(df, id_col, sample_denom, seed)
-    approx = near_dup_pairs_minhash(
-        sample,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        k=k,
-        threshold=threshold,
-    )
-    exact = near_dup_pairs_ngram(
-        sample, k=k, threshold=threshold, persist_intermediates=True
-    )
     # an unbiased-estimate report states its own n: the sampled doc
     # count rides along as one broadcast column (no silent caps)
     n = sample.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs_sampled")
     )
-    rep = dedup_recall_report(approx, exact).crossJoin(F.broadcast(n))
+    rep = dedup_recall_report(
+        *minhash_recall_pairs(
+            sample, id_col, num_hashes, band_size, k, threshold
+        )
+    ).crossJoin(F.broadcast(n))
     x = (F.col("n_exact") - F.col("n_hits")).cast("double")  # misses
     nn = F.col("n_exact").cast("double")
     z2 = F.lit(WILSON_Z95) * F.lit(WILSON_Z95)
@@ -1769,7 +1846,12 @@ def near_dup_pairs_ppjoin(
         .where(F.col("_ub") >= F.col("_alpha"))
         .select("id_a", "id_b")
     )
-    verified = ngram_jaccard(cands, _hashed_sets(rows, id_col), id_col)
+    # verify sets from the index rows already built, not a second
+    # corpus scan, regex and explode
+    sets = rows.groupBy(id_col).agg(
+        F.collect_set(F.xxhash64("shingle")).alias("sh")
+    )
+    verified = ngram_jaccard(cands, sets, id_col)
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )

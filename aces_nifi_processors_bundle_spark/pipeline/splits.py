@@ -79,7 +79,7 @@ def hash_topn_sample(
     n: int = 32,
     seed: str = "sample",
 ) -> DataFrame:
-    """Deterministic ABSOLUTE-BUDGET sample (round 13): the first `n`
+    """Deterministic ABSOLUTE-BUDGET sample: the first `n`
     rows of the md5-hash order (full 60-bit hash value ascending, id
     ascending on ties). Where hash_mod_sample's FRACTIONAL contract
     (keep 1/denom) lets the sample grow with the corpus — the sampled
@@ -95,10 +95,10 @@ def hash_topn_sample(
     per-partition top-n heaps, one n-row driver merge; no global sort
     shuffle, no corpus materialization.
 
-    NULL ids are FILTERED before the ordering (round 14 — ADVICE r13
-    low): md5(NULL) is NULL, and Spark's ascending sort is NULLS FIRST
-    while DuckDB's is NULLS LAST, so NULL-id rows would consume the
-    budget on the Spark side only and desync the two engines. A NULL
+    NULL ids are FILTERED before the ordering: md5(NULL) is NULL, and
+    Spark's ascending sort is NULLS FIRST while DuckDB's is NULLS
+    LAST, so NULL-id rows would consume the budget on the Spark side
+    only and desync the two engines. A NULL
     id is not a samplable identity; dropping it keeps the sample a
     pure function of real ids on BOTH engines."""
     if n < 0:
@@ -392,7 +392,7 @@ def pack_materialize(
     pos_col: str = "pos",
     value_col: str = "token_id",
 ) -> DataFrame:
-    """MATERIALIZE a packing plan (round 13): turn pack_sequences'
+    """MATERIALIZE a packing plan: turn pack_sequences'
     layout (which sequence each chunk starts in, at what offset) plus
     the tokenizer's (id, pos, token_id) stream into the actual
     fixed-length training sequences — (shard, seq_id, pos_in_seq,
@@ -517,8 +517,8 @@ def dsir_weights(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """Data Selection with Importance Resampling weights (round 11 —
-    the public DSIR method, Xie et al. 2023, arXiv:2302.03169): score
+    """Data Selection with Importance Resampling weights (the public
+    DSIR method, Xie et al. 2023, arXiv:2302.03169): score
     every raw document by how target-like its hashed n-gram profile
     is. Features are word unigrams + bigrams hashed into `n_buckets`;
     the two bucket distributions (target vs raw) get Laplace
@@ -578,7 +578,7 @@ def dsir_lambda(
     n_buckets: int = 1024,
     include_counts: bool = False,
 ) -> DataFrame:
-    """FIT the DSIR log-ratio table (round 12 split of dsir_weights):
+    """FIT the DSIR log-ratio table (dsir_weights' fit half):
     (bucket, log-ratio) over n_buckets rows — the broadcastable model
     state. Separated from scoring so the SERVING shape works: fit on
     the (slow-cadence) reference corpora batch-side, score any frame
@@ -598,7 +598,7 @@ def dsir_lambda(
     tot_t = ct.agg(F.coalesce(F.sum("_ct"), F.lit(0)).alias("_T"))
     tot_r = cr.agg(F.coalesce(F.sum("_cr"), F.lit(0)).alias("_R"))
     extra = (
-        # round 13: the fitted raw bucket DISTRIBUTION rides along so
+        # the fitted raw bucket DISTRIBUTION rides along so
         # the persisted model can serve the drift report
         # (dsir_drift) without re-scanning the fit-time pool
         [F.coalesce("_cr", F.lit(0)).cast("bigint").alias("_cr")]
@@ -636,7 +636,7 @@ def dsir_score(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """SCORE a frame against a fitted DSIR lambda table (round 12):
+    """SCORE a frame against a fitted DSIR lambda table:
     (id, n_features, importance) for every doc with >= 1 feature —
     featurize, broadcast-join the n_buckets-row table, one map-side-
     combined per-doc decimal sum. On a stream, run it inside
@@ -690,7 +690,7 @@ def dsir_drift(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """DSIR MODEL-DRIFT report (round 13) — one row comparing a
+    """DSIR MODEL-DRIFT report — one row comparing a
     scored batch's feature-bucket distribution against the FITTED raw
     distribution the lambda table was trained on. The dsir_fit /
     dsir_score lifecycle serves a model that ages as the raw pool
@@ -788,7 +788,7 @@ def dsir_select(
     temperature: float = 1.0,
     seed: str = "dsir",
 ) -> DataFrame:
-    """DSIR END-TO-END selection (round 12) — the weights actually
+    """DSIR END-TO-END selection — the weights actually
     driving membership, which is the method's whole point (Xie et al.
     2023): dsir_weights' importance scores squashed into a keep
     probability and resolved to a deterministic per-doc keep decision
@@ -845,7 +845,7 @@ def dsir_resample(
     seed: str = "dsirg",
     salt_parts: int = 16,
 ) -> DataFrame:
-    """DSIR sampling WITHOUT replacement (round 12) — the paper's
+    """DSIR sampling WITHOUT replacement — the paper's
     actual resampling scheme (Xie et al. 2023 resamples k documents
     with probability proportional to exp(importance/T)), made
     deterministic with the Gumbel top-k identity: draw

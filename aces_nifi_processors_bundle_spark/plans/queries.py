@@ -1796,9 +1796,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline.dedup import near_dup_pairs_ngram
 
     docs = load_table(spark, sf_dir, "documents")
-    out = near_dup_pairs_ngram(
-        docs, k=3, threshold=0.5, max_df=20, persist_intermediates=True
-    )
+    out = near_dup_pairs_ngram(docs, k=3, threshold=0.5, max_df=20)
     return out.select("id_a", "id_b", "jaccard")
 
 
@@ -5655,8 +5653,7 @@ def q_dedup_ngram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     out = near_dup_pairs_ngram(
-        docs, k=3, threshold=0.5, max_df_quantile=0.99,
-        persist_intermediates=True,
+        docs, k=3, threshold=0.5, max_df_quantile=0.99
     )
     return out.select("id_a", "id_b", "jaccard")
 
@@ -5820,9 +5817,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     corpus = docs.unionByName(excerpts)
-    out = containment_pairs(
-        corpus, k=3, threshold=0.8, persist_intermediates=True
-    )
+    out = containment_pairs(corpus, k=3, threshold=0.8)
     return out.select(
         "id_a", "id_b",
         F.round("containment", 6).alias("containment"),
@@ -5853,8 +5848,7 @@ def q_containment_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionByName(excerpts)
     out = containment_pairs(
-        corpus, k=3, threshold=0.8, max_df_quantile=0.99,
-        persist_intermediates=True,
+        corpus, k=3, threshold=0.8, max_df_quantile=0.99
     )
     return out.select(
         "id_a", "id_b",
@@ -6072,8 +6066,7 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     body = docs.select("doc_id", "text")
     spans = substring_matches(body, k=8, min_tokens=12)
     cpairs = containment_pairs(
-        body, k=3, threshold=0.8, max_df_quantile=0.99,
-        persist_intermediates=True,
+        body, k=3, threshold=0.8, max_df_quantile=0.99
     )
     return corpus_card(body, clusters, spans, cpairs)
 
@@ -6083,25 +6076,20 @@ def q_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline/dedup.py::dedup_recall_report): the standard
     8-hash/4-band funnel graded against the UNPRUNED exact n-gram
     Jaccard pair set at the same 0.5 threshold — one row of
-    (n_exact, n_approx, n_hits, recall, precision). Both funnels end
-    with an exact verify, so precision is 1.0 by construction and the
-    number under grade is banding recall — exactly what the
-    num_hashes/band_size knobs trade away. The oracle recomputes BOTH
-    pair sets and the report algebra."""
-    from ..pipeline.dedup import (
-        dedup_recall_report,
-        near_dup_pairs_minhash,
-        near_dup_pairs_ngram,
-    )
+    (n_exact, n_approx, n_hits, recall, precision). The banded
+    candidates are verified once, by a semi-join to the exact pairs
+    (pipeline/dedup.py::minhash_recall_pairs), so precision is 1.0 by
+    construction and the number under grade is banding recall —
+    exactly what the num_hashes/band_size knobs trade away. The oracle
+    recomputes BOTH pair sets and the report algebra."""
+    from ..pipeline.dedup import dedup_recall_report, minhash_recall_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    approx = near_dup_pairs_minhash(
-        docs, num_hashes=8, band_size=2, k=3, threshold=0.5
+    return dedup_recall_report(
+        *minhash_recall_pairs(
+            docs, num_hashes=8, band_size=2, k=3, threshold=0.5
+        )
     )
-    exact = near_dup_pairs_ngram(
-        docs, k=3, threshold=0.5, persist_intermediates=True
-    )
-    return dedup_recall_report(approx, exact)
 
 
 def q_dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:

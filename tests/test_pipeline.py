@@ -4326,18 +4326,19 @@ def test_ngram_jaccard_hashed_equals_string_verify(spark):
     assert verify(True) == strings
     # the nested doc makes containment differ from jaccard
     assert any(c == 1.0 and j < 1.0 for _, _, j, c in strings)
-    # the producer's own verify sets (hashed, from the index rows)
+    # the producer's own counted ratios
     hashed = sorted(map(tuple, near_dup_pairs_ngram(df, k=2, threshold=0.3).collect()))
     assert hashed == [(a, b, j) for a, b, j, _ in strings if j >= 0.3]
     assert len(hashed) > 0
 
 
 def test_exact_family_persists_one_frame(spark):
-    """With persist_intermediates=True, PPJoin, n-gram and containment
-    each cache exactly one frame — the shingle index rows, which feed
-    both candidate generation and the verify sets — rather than
-    shingling the corpus a second time for a separately cached set
-    frame."""
+    """With persist_intermediates=True, PPJoin caches exactly one
+    frame — the shingle index rows, which feed both candidate
+    generation and the verify sets — rather than shingling the corpus
+    a second time for a separately cached set frame. n-gram and
+    containment count |A∩B| in the index join and cache nothing: the
+    index is read through one shared shuffle."""
     from aces_nifi_processors_bundle_spark.pipeline.dedup import (
         containment_pairs,
         near_dup_pairs_ngram,
@@ -4352,22 +4353,30 @@ def test_exact_family_persists_one_frame(spark):
         Row(doc_id=4, text="nothing here resembles any other document at all"),
     ])
     jsc = spark.sparkContext._jsc
-    for fn in (near_dup_pairs_ppjoin, near_dup_pairs_ngram, containment_pairs):
+    runs = [
+        (near_dup_pairs_ppjoin, {"persist_intermediates": True}, 1),
+        (near_dup_pairs_ngram, {}, 0),
+        (containment_pairs, {}, 0),
+    ]
+    for fn, kw, cached in runs:
         spark.catalog.clearCache()
         before = set(jsc.getPersistentRDDs().keySet())
         try:
-            assert fn(df, k=3, persist_intermediates=True).collect(), fn.__name__
+            assert fn(df, k=3, **kw).collect(), fn.__name__
             added = set(jsc.getPersistentRDDs().keySet()) - before
-            assert len(added) == 1, (fn.__name__, len(added))
+            assert len(added) == cached, (fn.__name__, len(added))
         finally:
             spark.catalog.clearCache()
 
 
 def test_pairs_within_groups_strategies_identical(spark):
     """Both sides of the skew-guard switch: the bounded collect_list
-    explode and the unbounded self-join return the same distinct
-    (id_a < id_b) pairs on one hot group plus several small ones, with
-    ids shared across groups and a repeated (group, id) entry."""
+    explode and the unbounded self-join return the same (id_a < id_b)
+    pairs AND counts on one hot group plus several small ones, with
+    ids shared across groups and a repeated (group, id) entry. The
+    count is the number of matching entry pairs: the shared-group
+    count when entries are distinct, doubled by the repeated entry."""
+    from collections import Counter
     from itertools import combinations
 
     from aces_nifi_processors_bundle_spark.pipeline.dedup import (
@@ -4380,9 +4389,12 @@ def test_pairs_within_groups_strategies_identical(spark):
     rows = [(g, i) for g, ids in groups.items() for i in ids]
     rows.append(("g0", 100))
     entries = spark.createDataFrame(rows, "shingle string, doc_id long")
-    want = {
-        p for ids in groups.values() for p in combinations(sorted(set(ids)), 2)
-    }
+    want = Counter()
+    for g in groups:
+        ids = [i for gg, i in rows if gg == g]
+        want.update(
+            (a, b) for a, b in combinations(sorted(ids), 2) if a < b
+        )
     got = {
         bounded: sorted(
             map(tuple,
@@ -4391,7 +4403,93 @@ def test_pairs_within_groups_strategies_identical(spark):
         )
         for bounded in (True, False)
     }
-    assert got[True] == got[False] == sorted(want)
+    assert got[True] == got[False] == sorted(
+        (a, b, c) for (a, b), c in want.items()
+    )
+    assert want[(0, 100)] == 2 and want[(0, 1)] == 2  # repeat; shared
+
+
+# Docs 1 and 2 share the four hot "click here to subscribe now"
+# shingles (df 8, pruned by max_df=3 and by the 0.8 df quantile, whose
+# cutoff is 2) and one kept shingle: J = 5/7 and containment = 5/6,
+# but the kept overlap alone gives 1/11 and 1/6. Doc 21 is a prefix
+# of doc 20 (containment 1.0, Jaccard 0.5).
+_HOT_CORPUS = [
+    (1, "click here to subscribe now alpha beta"),
+    (2, "click here to subscribe now alpha gamma"),
+    *[(i, f"click here to subscribe now u{i} v{i}") for i in range(3, 9)],
+    (20, "the quick brown fox jumps over the lazy dog"),
+    (21, "the quick brown fox jumps"),
+    (22, "nothing here resembles anything else"),
+]
+
+
+@pytest.mark.parametrize(
+    "prune",
+    [{}, {"max_df": 3}, {"max_df_quantile": 0.8}],
+    ids=["unpruned", "max_df", "quantile"],
+)
+def test_counted_pairs_equal_string_verify(spark, prune):
+    """The counted ratios of near_dup_pairs_ngram and containment_pairs
+    (|A∩B| from the index join's row count, plus the shared pruned
+    shingles on a pruned index) equal the string-set verify of the same
+    pairs exactly, unpruned and under both prunes — and on the pruned
+    index the hot-shingle term decides the threshold for (1, 2)."""
+    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
+        _counted_pairs,
+        containment_pairs,
+        near_dup_pairs_ngram,
+        ngram_jaccard,
+        shingle_sets,
+    )
+
+    df = spark.createDataFrame(_HOT_CORPUS, "doc_id long, text string")
+    max_df, q = prune.get("max_df"), prune.get("max_df_quantile")
+    counted = _counted_pairs(df, "text", "doc_id", 2, max_df, q)
+    got = sorted(map(tuple, counted.collect()))
+    sets = shingle_sets(df, "text", "doc_id", 2, hashed=False)
+    want = sorted(map(tuple, ngram_jaccard(
+        counted.select("id_a", "id_b"), sets).collect()))
+    assert got == want
+    assert (1, 2, 5 / 7, 5 / 6) in got
+    assert (20, 21, 0.5, 1.0) in got
+    # the pruned index pairs only docs sharing a kept shingle: the
+    # hot-only pairs among docs 3..8 (J = 4/8) drop out of candidates
+    assert ((3, 4, 0.5, 4 / 6) in got) == (not prune)
+    ngram = sorted(map(tuple, near_dup_pairs_ngram(
+        df, k=2, threshold=0.5, **prune).collect()))
+    assert ngram == [(a, b, j) for a, b, j, _ in got if j >= 0.5]
+    assert (1, 2, 5 / 7) in ngram
+    cont = sorted(map(tuple, containment_pairs(
+        df, k=2, threshold=0.8, **prune).collect()))
+    assert cont == [(a, b, c, j) for a, b, j, c in got if c >= 0.8]
+    assert (1, 2, 5 / 6, 5 / 7) in cont
+
+
+def test_minhash_recall_pairs_approx_equals_minhash(spark, sf_dir):
+    """The recall report's approx side — banded candidates semi-joined
+    to the exact pairs — is near_dup_pairs_minhash's pair set, and the
+    exact side is the unpruned n-gram producer's; t <= 0, where a pair
+    need not share a shingle, is a loud error."""
+    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
+        minhash_recall_pairs,
+        near_dup_pairs_minhash,
+        near_dup_pairs_ngram,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    approx, exact = minhash_recall_pairs(
+        docs, num_hashes=8, band_size=2, k=3, threshold=0.5
+    )
+    minhash = near_dup_pairs_minhash(
+        docs, num_hashes=8, band_size=2, k=3, threshold=0.5
+    ).select("id_a", "id_b")
+    got = sorted(map(tuple, approx.collect()))
+    assert got and got == sorted(map(tuple, minhash.collect()))
+    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple,
+        near_dup_pairs_ngram(docs, k=3, threshold=0.5).collect()))
+    with pytest.raises(ValueError, match="threshold"):
+        minhash_recall_pairs(docs, threshold=0.0)
 
 
 def test_temperature_mix_upsamples_low_resource_sources(spark):
@@ -5662,9 +5760,7 @@ def test_dedup_recall_sampled_membership_and_degenerate_denom(spark, sf_dir):
         near_dup_pairs_minhash(
             docs, num_hashes=8, band_size=2, k=3, threshold=0.5
         ),
-        near_dup_pairs_ngram(
-            docs, k=3, threshold=0.5, persist_intermediates=True
-        ),
+        near_dup_pairs_ngram(docs, k=3, threshold=0.5),
     ).collect()[0]
     same = dedup_recall_sampled(docs, sample_denom=1).collect()[0]
     # identical report columns, plus the sample size and the round-13

@@ -108,15 +108,45 @@ def test_bin_count_has_partial_aggregation(spark, sf_dir, gran):
 
 def test_ngram_inverted_index_is_equi_join(spark, sf_dir):
     """The n-gram candidate self-join must be an equi-join on the
-    shingle (hash/sort-merge), never a nested loop, with the df prune
-    applied as an aggregate + semi join upstream."""
+    shingle (hash/sort-merge), never a nested loop. The df prune takes
+    each index row's df from a count window over its shingle, with no
+    join: the pairing keeps rows at _df <= max_df, and the per-doc
+    size aggregate collects the hashes of the pruned ("hot") ones."""
+    import re
+
     from aces_nifi_processors_bundle_spark.plans.queries import (
         q_dedup_ngram_jaccard,
     )
 
     plan = plan_of(q_dedup_ngram_jaccard(spark, sf_dir))
     assert "NestedLoop" not in plan and "Cartesian" not in plan
-    assert "LeftSemi" in plan  # the max_df prune
+    assert "LeftSemi" not in plan
+    assert re.search(
+        r"count\(1\) windowspecdefinition\(shingle#\d+, .*\) AS _df#", plan
+    )
+    assert re.search(r"Condition : \(_df#\d+L <= 20\)", plan)
+    assert re.search(
+        r"collect_set\(CASE WHEN _hot#\d+ THEN xxhash64\(shingle#\d+, 42\)"
+        r" END", plan
+    )
+
+
+def test_counted_ngram_and_recall_verify_nothing(spark, sf_dir):
+    """Unpruned n-gram Jaccard takes |A∩B| from the index join's row
+    count: its optimized plan has no array_intersect verify and no
+    cached frame. The recall report verifies its banded candidates by
+    a semi-join to those exact pairs, so it has no verify either."""
+    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
+        near_dup_pairs_ngram,
+    )
+    from aces_nifi_processors_bundle_spark.plans.queries import q_dedup_recall
+
+    docs = load_table(spark, sf_dir, "documents")
+    for df in (near_dup_pairs_ngram(docs, k=3, threshold=0.5),
+               q_dedup_recall(spark, sf_dir)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "array_intersect" not in plan
+        assert "InMemoryRelation" not in plan
 
 
 def test_profile_approx_sketch_merges_map_side(spark, sf_dir):
