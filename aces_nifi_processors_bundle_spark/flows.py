@@ -189,6 +189,10 @@ _TABLE_STAGES: dict[str, str] = {
     "ngram_novelty": "pipeline.text:ngram_novelty",
     "quantile_digest": "pipeline.sketches:cluster_digest",
     "intra_repeats": "pipeline.dedup:intra_doc_repeats",
+    # exact near-dup pairs; the op keeps its name so older flow
+    # documents still run
+    "ppjoin_dedup": "pipeline.dedup:near_dup_pairs_ngram",
+    "containment_dedup": "pipeline.dedup:containment_pairs",
 }
 _TWO_INPUT_TABLE_STAGES: dict[str, str] = {
     "asof_join": "operators.joins:asof_join",
@@ -1294,22 +1298,6 @@ def _boilerplate_rate(
     return boilerplate_rate(df, text_col, id_col, group_col, pct)
 
 
-@stage("ppjoin_dedup")
-def _ppjoin_dedup(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    threshold: float = 0.5,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact-recall near-dup pairs via prefix filtering."""
-    from .pipeline.dedup import near_dup_pairs_ppjoin
-
-    return near_dup_pairs_ppjoin(df, text_col, id_col, k, threshold)
-
-
 @stage("digest_fold")
 def _digest_fold(
     spark: SparkSession,
@@ -1468,28 +1456,6 @@ def _trim_repetitions(
         df, trimmed, text_col, id_col,
         ["kept_lines", "dropped_lines"],
         zero_fill=("kept_lines", "dropped_lines"),
-    )
-
-
-@stage("containment_dedup")
-def _containment_dedup(
-    spark: SparkSession,
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.8,
-    max_df: int | None = None,
-    max_df_quantile: float | None = None,
-) -> DataFrame:
-    """Asymmetric containment near-dup pairs: the
-    doc-inside-doc detector — emits (id_a, id_b, containment,
-    jaccard) for downstream keep/drop policy."""
-    from .pipeline.dedup import containment_pairs
-
-    return containment_pairs(
-        df, text_col, id_col, k, threshold, max_df, max_df_quantile
     )
 
 

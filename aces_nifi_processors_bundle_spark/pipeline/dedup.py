@@ -218,7 +218,7 @@ def _set_ratios(inter: Column, union: Column, smaller: Column) -> list[Column]:
     the array verify passes size(array_union), which keeps its join
     condition at one array_intersect (no subexpression elimination
     there: the |A|+|B|−|A∩B| form evaluates array_intersect three
-    times per candidate and measured slower in minhash and PPJoin)."""
+    times per candidate and measured slower in minhash)."""
     return [
         F.when(union > 0, inter.cast("double") / union)
         .otherwise(F.lit(0.0)).alias("jaccard"),
@@ -233,10 +233,9 @@ def ngram_jaccard(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact set ratios for candidate pairs from per-doc shingle arrays
-    — the verify of minhash (its candidates share a band, not a
-    counted shingle) and PPJoin (its candidates share only a prefix
-    shingle). n-gram and containment count |A∩B| in the index join
-    instead (`_counted_pairs`).
+    — the verify of minhash, whose candidates share a band, not a
+    counted shingle. n-gram and containment count |A∩B| in the index
+    join instead (`_counted_pairs`).
 
     `sets` holds one (id, sh) row per doc, sh its distinct shingle
     array. The (small) candidate pair set joins to it twice — one hash
@@ -245,10 +244,10 @@ def ngram_jaccard(
     corpus. Output: (id_a, id_b, jaccard, containment).
 
     The engine's callers pass xxhash64(shingle) arrays (shingle_sets
-    hashed=True, or PPJoin's per-doc aggregate over its index rows):
-    the verify join is the dominant cost of these paths once
-    candidates number in the millions (measured 70.6 s → 31.0 s for
-    the whole sf1 PPJoin, SCALE.md), and the ratios differ from
+    hashed=True): the verify join is the dominant cost of a verified
+    path once candidates number in the millions (measured 70.6 s →
+    31.0 s for a whole sf1 prefix-filter join, SCALE.md), and the
+    ratios differ from
     string-set ratios only on a 64-bit collision inside one comparison
     (~n²/2^64, the engine's standard sketch contract). The DuckDB oracles stay on
     raw strings deliberately, so a collision at graded scale would
@@ -278,20 +277,8 @@ def near_dup_pairs_minhash(
     k: int = 3,
     threshold: float = 0.5,
     max_bucket: int | None = None,
-    persist_intermediates: bool = False,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard ≥ threshold.
-
-    persist_intermediates: at corpus scale the shingle-set frame
-    feeds BOTH sides of the verify join — without persistence Spark
-    recomputes the whole upstream per consumer (profiled 3x total work
-    at 100k docs). The candidate frame itself appears exactly once in
-    the final plan, so it is deliberately NOT persisted (caching a
-    potentially huge pair set that is never re-read would be pure
-    block-manager overhead). Persisted frames live until the session
-    drops them — long-lived sessions calling this repeatedly should
-    spark.catalog.clearCache() between corpora. Lazy-exact for the
-    oracle either way.
 
     Signatures and verify sets stay two aggregates on purpose: one
     combined groupBy(id) read perf-neutral at sf0.1 (the set sides
@@ -302,8 +289,6 @@ def near_dup_pairs_minhash(
         df, text_col, id_col, num_hashes, band_size, k, max_bucket
     )
     sets = shingle_sets(df, text_col, id_col, k, hashed=True)
-    if persist_intermediates:
-        sets = sets.persist()
     verified = ngram_jaccard(cands, sets, id_col)
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
@@ -325,8 +310,8 @@ def ngram_prune_stats(
     same max_df=20 that is lossless at sf0.1 discards 92% of true
     pairs at sf1, where document frequencies are 10× higher, and the
     oracle gate cannot see it because the oracle mirrors the cap).
-    Run this BEFORE trusting a max_df choice, or use
-    near_dup_pairs_ppjoin, which needs no cap at all.
+    Run this BEFORE trusting a max_df choice, or run
+    near_dup_pairs_ngram unpruned, which needs no cap at all.
 
     One row: (df_cutoff, n_shingles, n_shingles_dropped,
     n_index_rows_dropped, docs_affected, docs_total) — every number a
@@ -336,9 +321,11 @@ def ngram_prune_stats(
     that LOSE at least one indexed shingle — the population whose
     candidate recall the cap can touch. Like the prune, it indexes
     only docs with a non-null id."""
-    rows, dfreq = _shingle_index(
-        df.where(F.col(id_col).isNotNull()), text_col, id_col, k,
-        persist=False,
+    rows = shingle_rows(
+        df.where(F.col(id_col).isNotNull()), text_col, id_col, k
+    ).dropDuplicates([id_col, "shingle"])
+    dfreq = rows.groupBy("shingle").agg(
+        F.count(F.lit(1)).cast("bigint").alias("_df")
     )
     cutoff = _df_cutoff(dfreq, max_df, max_df_quantile)
     marked = dfreq.crossJoin(F.broadcast(cutoff))
@@ -422,30 +409,6 @@ def _df_cutoff(
         )
         .agg(F.min("_df").cast("bigint").alias("df_cutoff"))
     )
-
-
-def _shingle_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    persist: bool,
-) -> tuple[DataFrame, DataFrame]:
-    """The shingle inverted index PPJoin and ngram_prune_stats read:
-    the distinct (id, shingle) rows — persisted when asked, because
-    PPJoin's candidate generation and verify sets both consume them —
-    and each shingle's document frequency (shingle, _df bigint). The df
-    frame is lazy; callers that never prune or rank by df never run
-    it."""
-    rows = shingle_rows(df, text_col, id_col, k).dropDuplicates(
-        [id_col, "shingle"]
-    )
-    if persist:
-        rows = rows.persist()
-    dfreq = rows.groupBy("shingle").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_df")
-    )
-    return rows, dfreq
 
 
 def _counted_pairs(
@@ -585,7 +548,11 @@ def near_dup_pairs_ngram(
     Candidates = document pairs sharing >= 1 indexed shingle, produced
     by a per-shingle self-join of the (shingle, doc) inverted index —
     complexity Σ df(shingle)², never n². Since J(A,B) >= t > 0 requires
-    a common shingle, recall is EXACT with max_df=None.
+    a common shingle, recall is EXACT with max_df=None. A threshold
+    outside (0, 1] is rejected: at t <= 0 the theorem fails, above 1
+    no pair qualifies. Unpruned, this is the engine's one
+    exact-Jaccard path (SCALE.md §ppjoin times it against prefix
+    filtering).
 
     max_df prunes the index to shingles with document frequency
     <= max_df before the self-join — the same Σdf² skew defense as
@@ -602,8 +569,7 @@ def near_dup_pairs_ngram(
     §ppjoin). Prefer one of:
     - max_df_quantile (e.g. 0.999 = "drop the hottest 0.1% of
       shingles") — the cutoff then tracks the corpus df distribution;
-    - near_dup_pairs_ppjoin — exact recall, no cap at all (the flow
-      default);
+    - no cap (the default) — exact recall;
     and audit any cap with ngram_prune_stats, which reports exactly
     how many shingles/index rows/documents the prune touches.
 
@@ -613,6 +579,10 @@ def near_dup_pairs_ngram(
     shared pruned shingles (`_counted_pairs`). Pruning affects
     candidate RECALL only, never precision.
     """
+    if not 0 < threshold <= 1:
+        raise ValueError(
+            f"near_dup_pairs_ngram: threshold must be in (0, 1], got {threshold}"
+        )
     verified = _counted_pairs(
         df, text_col, id_col, k, max_df, max_df_quantile
     )
@@ -659,8 +629,8 @@ def containment_pairs(
         df, text_col, id_col, k, max_df, max_df_quantile
     )
     return (
-        # plain >= like every verify threshold here (ngram, minhash,
-        # PPJoin): the ratio is ONE IEEE division both engines
+        # plain >= like every verify threshold here (ngram,
+        # minhash): the ratio is ONE IEEE division both engines
         # compute identically, so the compare cannot drift — a slack
         # would instead DESYNC engine and oracle at the boundary
         verified.filter(F.col("containment") >= threshold)
@@ -912,11 +882,7 @@ def minhash_recall_pairs(
     because J >= t > 0 needs a shared shingle, so exact holds every
     pair minhash's own verify would keep. That drops minhash's
     shingle-set aggregate and its two verify joins. The equivalence
-    needs t > 0, so a threshold <= 0 is rejected."""
-    if not threshold > 0:
-        raise ValueError(
-            f"recall report: threshold must be > 0, got {threshold}"
-        )
+    needs t > 0, which near_dup_pairs_ngram enforces."""
     exact = near_dup_pairs_ngram(
         df, id_col=id_col, k=k, threshold=threshold
     )
@@ -1721,139 +1687,6 @@ def boilerplate_rate(
         "n_boiler",
         (F.col("n_boiler").cast("double") / F.col("n_lines").cast("double"))
         .alias("boiler_rate"),
-    )
-
-
-def near_dup_pairs_ppjoin(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.5,
-    persist_intermediates: bool = False,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via PREFIX FILTERING (the
-    PPJoin family — Chaudhuri et al. 2006 primitive, Xiao et al. 2008)
-    — the exact-recall path that needs NO max_df heuristic: only each
-    document's PREFIX (its |X| - ceil(t*|X|) + 1 rarest shingles under
-    one global (df, shingle) order) is indexed, because two sets with
-    J >= t MUST share a prefix element under any global total order
-    (pigeonhole on the <= |X| - ceil(t*|X|) elements a qualifying
-    partner may skip). A size-ratio filter (J >= t forces
-    t*|A| <= |B| <= |A|/t) prunes candidates before the exact verify,
-    applied with a 1e-9 slack so float rounding can only ADMIT
-    boundary pairs, never drop them.
-
-    vs near_dup_pairs_ngram(max_df=...): that path caps Sigma df^2 by
-    dropping hot shingles (recall caveat on template floods); this one
-    is recall-EXACT and shrinks the index instead (measured 260k ->
-    134k rows, 1.12M -> 310k candidates at sf0.1, same verified
-    output). Hot boilerplate shingles have maximal df, so the
-    rare-first order pushes them OUT of prefixes — the skew defense
-    falls out of the algorithm.
-
-    Scale shape: df counts are a map-side-combined aggregate joined
-    back in broadcast territory per-shingle; the per-doc rank window
-    partitions by doc (bounded by the doc's own shingle-set size); the
-    self-join runs on the prefix index only; the POSITIONAL filter
-    (Xiao §3.2, see inline derivation) then prunes candidates using
-    only the prefix ranks and sizes already on the matched rows —
-    before any full shingle set is shipped to the verify join.
-    Verification is exact Jaccard over FULL sets via the shared
-    ngram_jaccard, whose sets come from the same distinct (id,
-    shingle) rows the prefix index ranks — the corpus is shingled
-    once. Xiao's SUFFIX filter (§3.3) is deliberately NOT
-    implemented: it is a divide-and-conquer probe over the suffix
-    token arrays, so expressing it set-orientedly means joining the
-    full sorted shingle arrays onto every candidate — the exact cost
-    of this engine's verify step (one array_intersect per pair), which
-    the suffix filter exists to avoid in RECORD-AT-A-TIME engines
-    where verify is a merge-scan it can short-circuit. Output:
-    (id_a, id_b, jaccard) for all pairs with jaccard >= threshold.
-    """
-    if not 0 < threshold <= 1:
-        raise ValueError(f"ppjoin: threshold must be in (0, 1], got {threshold}")
-    rows, dfreq = _shingle_index(
-        df, text_col, id_col, k, persist_intermediates
-    )
-    order = Window.partitionBy(id_col).orderBy(
-        F.col("_df").asc(), F.col("shingle").asc()
-    )
-    sized = Window.partitionBy(id_col)
-    prefix = (
-        rows.join(dfreq, "shingle")
-        .withColumn("_rk", F.row_number().over(order))
-        .withColumn("_sz", F.count(F.lit(1)).over(sized))
-        .where(
-            # the same conservative 1e-9 slack INSIDE the ceil: IEEE
-            # overshoot (0.55*100 = 55.000...01 -> ceil 56) would
-            # SHORTEN the prefix and silently drop qualifying pairs;
-            # the slack can only lengthen it
-            F.col("_rk")
-            <= F.col("_sz")
-            - F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
-            + 1
-        )
-        .select("shingle", F.col(id_col), "_sz", "_rk")
-    )
-    a = prefix.select(
-        "shingle", F.col(id_col).alias("id_a"),
-        F.col("_sz").alias("_sza"), F.col("_rk").alias("_rka"),
-    )
-    b = prefix.select(
-        "shingle", F.col(id_col).alias("id_b"),
-        F.col("_sz").alias("_szb"), F.col("_rk").alias("_rkb"),
-    )
-    # POSITIONAL FILTER (Xiao et al. 2008 §3.2): a match on prefix
-    # token w at per-doc ranks (i, j) under the GLOBAL (df, shingle)
-    # order bounds the whole overlap — shared tokens are w itself,
-    # tokens strictly O-before w (at most min(i-1, j-1): x holds
-    # exactly i-1 of them, y exactly j-1), and tokens strictly O-after
-    # (at most min(|x|-i, |y|-j)). Each match yields a valid bound, so
-    # the pair survives only if the TIGHTEST one still reaches the
-    # J >= t overlap requirement alpha = ceil(t/(1+t) * (|x|+|y|)).
-    # Both slacks are conservative: alpha's -1e-9 can only LOWER the
-    # requirement and the size-ratio slack only ADMITS boundary pairs
-    # — float rounding can never drop a qualifying pair.
-    overlap_bound = (
-        F.lit(1)
-        + F.least(F.col("_rka") - 1, F.col("_rkb") - 1)
-        + F.least(
-            F.col("_sza") - F.col("_rka"), F.col("_szb") - F.col("_rkb")
-        )
-    )
-    alpha = F.ceil(
-        F.lit(threshold)
-        * (F.col("_sza") + F.col("_szb")).cast("double")
-        / F.lit(1.0 + threshold)
-        - F.lit(1e-9)
-    )
-    cands = (
-        a.join(b, "shingle")
-        .where(
-            (F.col("id_a") < F.col("id_b"))
-            # conservative float slack: only ever ADMITS boundary pairs
-            & (F.col("_szb").cast("double")
-               >= F.lit(threshold) * F.col("_sza").cast("double") - F.lit(1e-9))
-            & (F.col("_sza").cast("double")
-               >= F.lit(threshold) * F.col("_szb").cast("double") - F.lit(1e-9))
-        )
-        .groupBy("id_a", "id_b")
-        # min over every matched prefix token's bound — the same
-        # (id_a, id_b) hash aggregate the old .distinct() paid for,
-        # now carrying the positional prune for free
-        .agg(F.min(overlap_bound).alias("_ub"), F.min(alpha).alias("_alpha"))
-        .where(F.col("_ub") >= F.col("_alpha"))
-        .select("id_a", "id_b")
-    )
-    # verify sets from the index rows already built, not a second
-    # corpus scan, regex and explode
-    sets = rows.groupBy(id_col).agg(
-        F.collect_set(F.xxhash64("shingle")).alias("sh")
-    )
-    verified = ngram_jaccard(cands, sets, id_col)
-    return verified.filter(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
     )
 
 

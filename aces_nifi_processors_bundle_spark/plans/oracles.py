@@ -529,7 +529,7 @@ SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5
 # planted corpus (suffix edits that MUST pair + a 2-template exact-dup
 # flood whose band buckets exceed the cap and are dropped), with the
 # bucket cap mirrored in SQL — the skew guard itself sits under the
-# value-hash gate, the same treatment q_dedup_simhash got in round 5.
+# value-hash gate, as q_dedup_simhash's does.
 oracle("q_dedup_minhash_capped")(
     f"""
 WITH corpus AS (
@@ -625,7 +625,7 @@ FROM ranked WHERE rank <= 5
 )
 
 
-# --- Round-1 widened coverage -------------------------------------------
+# --- date bins, JSON bodies, tokens, nested updates, simhash -------------
 
 oracle("q_bin_date_granularities")(
     """
@@ -3455,7 +3455,7 @@ SELECT v AS vertex, lab AS label FROM l3
 )
 
 
-# --- round 7: mergeable sketches -----------------------------------------
+# --- mergeable sketches --------------------------------------------------
 # The md5->60-bit-bigint hash is the splits.py cross-engine identity:
 # Spark conv(substr(md5(x),1,15),16,10) == DuckDB
 # ('0x'||substr(md5(x),1,15))::BIGINT. All sketch state is integer;
@@ -3549,7 +3549,7 @@ GROUP BY p.user_id
 )
 
 
-# --- round 7: corpus line dedup + Gopher rules ----------------------------
+# --- corpus line dedup + Gopher rules ------------------------------------
 
 oracle("q_line_dedup")(
     """
@@ -4164,7 +4164,7 @@ GROUP BY event_type
 )
 
 
-# --- TPC-H decision-support shapes, round 8 ----------------------------
+# --- TPC-H decision-support shapes ---------------------------------------
 # Same substitutions as the Spark queries: no partsupp (supplycost :=
 # 0.5 * p_retailprice), no commit/receipt dates ('late' := shipped 30
 # resp. 90 days after ordering). Decimal-exact revenue, VARCHAR-hop to
@@ -4914,8 +4914,8 @@ FROM k GROUP BY event_type ORDER BY event_type
 
 
 # GROUND-TRUTH oracle (not a candidate replay): every doc pair sharing
-# >= 1 shingle with exact Jaccard >= t — proving the prefix filter's
-# recall, not just mirroring it.
+# >= 1 shingle with exact Jaccard >= t — proving the ppjoin_dedup
+# stage's recall (the unpruned counted index), not just mirroring it.
 oracle("q_dedup_ngram_prefix")(
     f"""
 WITH {{shingles}},
@@ -5277,7 +5277,7 @@ SELECT doc_id, cluster, copy_rank FROM ranked WHERE copy_rank <= 3
 ORACLES["q_stream_tdigest"] = ORACLES["q_tdigest_merge"]
 
 
-# --- round 10 ------------------------------------------------------------
+# --- pruned n-grams, substring + containment dedup, corpus reports -------
 
 # Mirrors near_dup_pairs_ngram(max_df_quantile=0.99) INCLUDING the
 # _df_cutoff rank walk: cutoff = the smallest df whose cumulative
@@ -6350,7 +6350,7 @@ ORDER BY k.doc_id
 """
 
 
-# --- trained BPE (round 11) ----------------------------------------------
+# --- trained BPE ---------------------------------------------------------
 #
 # The two oracles below are GENERATED: BPE training is inherently
 # iterative (merge i's election depends on merge i-1's application),
@@ -6711,7 +6711,7 @@ assert (
     and ORACLES["q_dedup_recall_sampled"].count("FROM documents") == 1
 )  # only the sample CTE itself reads the base table
 
-# Round 13: the sampled report states how TIGHT it is — n_missed and
+# The sampled report states how TIGHT it is — n_missed and
 # the one-sided 95% Wilson upper bound on the per-pair miss rate,
 # z = 1.6448536269514722 (the closed form; term order mirrors the
 # Spark expression exactly so the doubles agree bit-for-bit). Wrap

@@ -5214,20 +5214,15 @@ def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-recall near-dup pairs via PPJoin prefix filtering
-    (pipeline/dedup.py::near_dup_pairs_ppjoin): only each doc's
-    rarest |X|-ceil(t|X|)+1 shingles are indexed — no max_df
-    heuristic, boilerplate shingles fall out of prefixes by
-    construction. The oracle is the GROUND TRUTH (every pair with
-    J >= t), so candidate recall is value-hash-proven exact."""
-    from ..pipeline.dedup import near_dup_pairs_ppjoin
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = near_dup_pairs_ppjoin(
-        docs, k=3, threshold=0.5, persist_intermediates=True
-    )
-    return out.select("id_a", "id_b", "jaccard")
+# Exact-recall near-dup pairs through the ppjoin_dedup stage: the
+# unpruned counted n-gram index (pipeline/dedup.py::
+# near_dup_pairs_ngram), no max_df heuristic. The oracle is the GROUND
+# TRUTH (every pair with J >= t), so candidate recall is
+# value-hash-proven exact.
+q_dedup_ngram_prefix = _flow(
+    {"op": "load", "table": "documents"},
+    {"op": "ppjoin_dedup", "k": 3, "threshold": 0.5},
+)
 
 
 def q_incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

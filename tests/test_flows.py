@@ -1450,6 +1450,10 @@ _TABLE_STAGE_CASES = {
                          "m": 8, "tie_col": "event_id"}, None),
     "intra_repeats": (dedup.intra_doc_repeats, _DOCS,
                       {"k": 3, "min_tokens": 4}, None),
+    "ppjoin_dedup": (dedup.near_dup_pairs_ngram, _DOCS,
+                     {"k": 3, "threshold": 0.5}, None),
+    "containment_dedup": (dedup.containment_pairs, _DOCS,
+                          {"threshold": 0.8}, None),
     "asof_join": (joins.asof_join, _events_of("purchase"),
                   {"on": ["user_id"], "values": ["event_id", "value"],
                    "tolerance_sec": 21600, "tiebreak": "event_id"},

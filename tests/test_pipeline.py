@@ -684,39 +684,6 @@ def test_ngram_max_df_quantile_tracks_corpus_distribution(spark):
         ngram_prune_stats(df, k=3)
 
 
-def test_ppjoin_positional_filter_randomized_recall(spark):
-    """Randomized adversarial check on the positional filter: 30 docs
-    over a tiny shared vocabulary maximize boundary pairs (sizes and
-    ranks collide constantly); ppjoin must still return EXACTLY the
-    unpruned inverted index's verified pairs at two thresholds.
-    Deterministic seed — failures reproduce."""
-    import random
-
-    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
-        near_dup_pairs_ngram,
-        near_dup_pairs_ppjoin,
-    )
-
-    rng = random.Random(42)
-    vocab = [f"w{i}" for i in range(12)]
-    rows = [
-        Row(
-            doc_id=i,
-            text=" ".join(rng.choice(vocab) for _ in range(rng.randint(4, 14))),
-        )
-        for i in range(30)
-    ]
-    df = spark.createDataFrame(rows)
-    for t in (0.3, 0.6):
-        want = sorted(
-            map(tuple, near_dup_pairs_ngram(df, k=3, threshold=t).collect())
-        )
-        got = sorted(
-            map(tuple, near_dup_pairs_ppjoin(df, k=3, threshold=t).collect())
-        )
-        assert got == want, f"threshold={t}"
-
-
 def test_hash_split_stable_under_corpus_growth(spark):
     """A document's split assignment is a pure function of its id:
     doubling the corpus must not move any original doc."""
@@ -4036,40 +4003,16 @@ def test_weighted_median_hand_case(spark):
     assert "c" not in out  # no positive mass -> no median row
 
 
-def test_ppjoin_equals_unpruned_exact_pairs(spark):
-    """Prefix filtering must return EXACTLY the unpruned inverted
-    index's verified pairs — the recall theorem, checked end-to-end,
-    including under a planted boilerplate flood (hot shingles leave
-    the prefixes but true near-dups still pair)."""
+def test_ngram_rejects_bad_threshold(spark):
+    """Recall is exact only for t > 0, and t > 1 keeps nothing."""
     from aces_nifi_processors_bundle_spark.pipeline.dedup import (
         near_dup_pairs_ngram,
-        near_dup_pairs_ppjoin,
-    )
-
-    flood = "cookie banner accept terms now please"
-    rows = [Row(doc_id=i, text=f"{flood} item {i}") for i in range(20)]
-    rows += [
-        Row(doc_id=100, text="alpha beta gamma delta epsilon zeta"),
-        Row(doc_id=101, text="alpha beta gamma delta epsilon eta"),
-        Row(doc_id=102, text="totally different words here entirely"),
-    ]
-    df = spark.createDataFrame(rows)
-    want = sorted(map(tuple, near_dup_pairs_ngram(
-        df, k=3, threshold=0.4, max_df=None).collect()))
-    got = sorted(map(tuple, near_dup_pairs_ppjoin(
-        df, k=3, threshold=0.4).collect()))
-    assert got == want
-    assert any(p[0] == 100 and p[1] == 101 for p in got)
-
-
-def test_ppjoin_rejects_bad_threshold(spark):
-    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
-        near_dup_pairs_ppjoin,
     )
 
     df = spark.createDataFrame([Row(doc_id=1, text="a b c")])
-    with pytest.raises(ValueError, match="threshold"):
-        near_dup_pairs_ppjoin(df, threshold=0.0)
+    for t in (0.0, -0.5, 1.5):
+        with pytest.raises(ValueError, match="threshold"):
+            near_dup_pairs_ngram(df, threshold=t)
 
 
 def test_incremental_near_dedup_routes_and_accumulates(spark, tmp_path):
@@ -4111,19 +4054,6 @@ def test_incremental_near_dedup_routes_and_accumulates(spark, tmp_path):
     r2 = {x["doc_id"]: x["route"]
           for x in incremental_near_dedup(store, b2, max_hamming=9).collect()}
     assert all(v == "duplicate_store" for v in r2.values())
-
-
-def test_ppjoin_prefix_length_float_guard(spark):
-    """0.55*100 is 55.000...01 in IEEE double: a bare ceil yields 56
-    and SHORTENS the prefix below |X|-ceil(t|X|)+1 (dropping
-    qualifying pairs); the 1e-9 slack restores the exact bound."""
-    out = spark.range(1).select(
-        (F.lit(100) - F.ceil(F.lit(0.55) * F.lit(100) - F.lit(1e-9)) + 1)
-        .alias("guarded"),
-        (F.lit(100) - F.ceil(F.lit(0.55) * F.lit(100)) + 1).alias("bare"),
-    ).collect()[0]
-    assert out["guarded"] == 46  # |X| - ceil(t*|X|) + 1 = 100 - 55 + 1
-    assert out["bare"] == 45     # the silent recall loss the slack prevents
 
 
 def test_min_group_size_counts_rows_in_small_groups(spark):
@@ -4298,10 +4228,17 @@ def test_digest_merge_deterministic_without_order_cols(spark):
 def test_ngram_jaccard_hashed_equals_string_verify(spark):
     """The verify over xxhash64 shingle arrays (the engine's sets) must
     return exactly the string-set path's pairs AND jaccard AND
-    containment values on a corpus with shared boilerplate, partial
-    overlaps, nested docs and disjoint docs — collisions aside
-    (probability ~n²/2^64), the two are the same math over smaller
-    bytes."""
+    containment values — collisions aside (probability ~n²/2^64), the
+    two are the same math over smaller bytes — and the counted
+    producer must keep exactly the string-verified pairs at each
+    threshold. Two corpora: shared boilerplate, partial overlaps,
+    nested docs and disjoint docs (k=2); and 30 seeded random docs over
+    a 12-word vocabulary (k=3), where set sizes and overlaps collide
+    constantly, so many pairs tie on a ratio. No pair of the random
+    corpus reaches J = 0.3, so it is also checked at 0.05, which a
+    handful of pairs pass."""
+    import random
+
     from aces_nifi_processors_bundle_spark.pipeline.dedup import (
         _pairs_within_groups,
         near_dup_pairs_ngram,
@@ -4314,35 +4251,47 @@ def test_ngram_jaccard_hashed_equals_string_verify(spark):
             for i in range(12)]
     rows += [Row(doc_id=50, text="shared prefix tokens here")]
     rows += [Row(doc_id=100, text="utterly unrelated content entirely")]
-    df = spark.createDataFrame(rows)
-    idx = shingle_rows(df, "text", "doc_id", 2).dropDuplicates(["doc_id", "shingle"])
-    cands = _pairs_within_groups(idx, "shingle", "doc_id", bounded=False)
+    rng = random.Random(42)
+    vocab = [f"w{i}" for i in range(12)]
+    random_rows = [
+        Row(
+            doc_id=i,
+            text=" ".join(rng.choice(vocab) for _ in range(rng.randint(4, 14))),
+        )
+        for i in range(30)
+    ]
 
-    def verify(hashed):
-        sets = shingle_sets(df, "text", "doc_id", 2, hashed=hashed)
+    def verify(df, k, hashed):
+        idx = shingle_rows(df, "text", "doc_id", k).dropDuplicates(["doc_id", "shingle"])
+        cands = _pairs_within_groups(idx, "shingle", "doc_id", bounded=False)
+        sets = shingle_sets(df, "text", "doc_id", k, hashed=hashed)
         return sorted(map(tuple, ngram_jaccard(cands, sets).collect()))
 
-    strings = verify(False)
-    assert verify(True) == strings
-    # the nested doc makes containment differ from jaccard
-    assert any(c == 1.0 and j < 1.0 for _, _, j, c in strings)
-    # the producer's own counted ratios
-    hashed = sorted(map(tuple, near_dup_pairs_ngram(df, k=2, threshold=0.3).collect()))
-    assert hashed == [(a, b, j) for a, b, j, _ in strings if j >= 0.3]
-    assert len(hashed) > 0
+    for corpus, k, thresholds in (
+        (rows, 2, (0.3,)), (random_rows, 3, (0.05, 0.3, 0.6)),
+    ):
+        df = spark.createDataFrame(corpus)
+        strings = verify(df, k, False)
+        assert verify(df, k, True) == strings
+        if corpus is rows:
+            # the nested doc makes containment differ from jaccard
+            assert any(c == 1.0 and j < 1.0 for _, _, j, c in strings)
+        # the producer's own counted ratios
+        kept = {}
+        for t in thresholds:
+            counted = sorted(map(tuple, near_dup_pairs_ngram(
+                df, k=k, threshold=t).collect()))
+            assert counted == [(a, b, j) for a, b, j, _ in strings if j >= t], (k, t)
+            kept[t] = len(counted)
+        assert kept[thresholds[0]] > 0, kept
 
 
-def test_exact_family_persists_one_frame(spark):
-    """With persist_intermediates=True, PPJoin caches exactly one
-    frame — the shingle index rows, which feed both candidate
-    generation and the verify sets — rather than shingling the corpus
-    a second time for a separately cached set frame. n-gram and
-    containment count |A∩B| in the index join and cache nothing: the
-    index is read through one shared shuffle."""
+def test_exact_family_persists_nothing(spark):
+    """n-gram and containment count |A∩B| in the index join and cache
+    nothing: the index is read through one shared shuffle."""
     from aces_nifi_processors_bundle_spark.pipeline.dedup import (
         containment_pairs,
         near_dup_pairs_ngram,
-        near_dup_pairs_ppjoin,
     )
 
     base = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -4353,18 +4302,13 @@ def test_exact_family_persists_one_frame(spark):
         Row(doc_id=4, text="nothing here resembles any other document at all"),
     ])
     jsc = spark.sparkContext._jsc
-    runs = [
-        (near_dup_pairs_ppjoin, {"persist_intermediates": True}, 1),
-        (near_dup_pairs_ngram, {}, 0),
-        (containment_pairs, {}, 0),
-    ]
-    for fn, kw, cached in runs:
+    for fn in (near_dup_pairs_ngram, containment_pairs):
         spark.catalog.clearCache()
         before = set(jsc.getPersistentRDDs().keySet())
         try:
-            assert fn(df, k=3, **kw).collect(), fn.__name__
+            assert fn(df, k=3).collect(), fn.__name__
             added = set(jsc.getPersistentRDDs().keySet()) - before
-            assert len(added) == cached, (fn.__name__, len(added))
+            assert not added, (fn.__name__, len(added))
         finally:
             spark.catalog.clearCache()
 
