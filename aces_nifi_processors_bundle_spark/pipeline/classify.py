@@ -219,7 +219,7 @@ def calibration_report(
     label_col: str = "actual",
     n_bins: int = 10,
 ) -> DataFrame:
-    """Reliability table for a probabilistic classifier (round 13) —
+    """Reliability table for a probabilistic classifier —
     the standard calibration diagnostic a corpus-filter pipeline runs
     before trusting a model's probabilities as sampling weights: bin
     predictions into n_bins equal-width probability bins and compare
@@ -277,7 +277,7 @@ def calibration_report(
 def cohens_kappa(
     df: DataFrame, col_a: str, col_b: str
 ) -> DataFrame:
-    """Cohen's kappa between two BOOLEAN label columns (round 13) —
+    """Cohen's kappa between two BOOLEAN label columns —
     chance-corrected agreement, the standard QA number for "does my
     trained filter agree with the rule-based filter / the previous
     model / the human sample beyond what base rates explain".
@@ -331,7 +331,7 @@ def expected_calibration_error(
     label_col: str = "actual",
     n_bins: int = 10,
 ) -> DataFrame:
-    """Expected calibration error (round 13) — calibration_report's
+    """Expected calibration error — calibration_report's
     table folded to the ONE dashboard number: ECE =
     Σ_bins (n_docs/N)·abs_gap, the bin-mass-weighted mean deviation
     from the diagonal. Output: one row (n_docs, n_bins_used, ece).

@@ -109,12 +109,12 @@ def pagerank(
             .agg(F.sum("w").cast("decimal(38,18)").alias("w"))
         )
     # out-weight attached as a WINDOW sum in the same pass that cuts
-    # the normalized edge list (round 14, optimization): the previous
-    # shape eagerly materialized e, then re-materialized e ⋈ deg — two
-    # full passes over the edge list plus a groupBy + join. A sum over
-    # Window.partitionBy(src) is the same exact decimal arithmetic
-    # (order-independent), keyed the same way, computed inside the ONE
-    # eager cut — each sweep still sees (src, dst, w, deg) rows
+    # the normalized edge list: one pass over the edge list, where
+    # materializing e and then e ⋈ deg would take two plus a groupBy
+    # and a join. A sum over Window.partitionBy(src) is the same
+    # exact decimal arithmetic (order-independent), keyed the same
+    # way, computed inside the ONE eager cut — each sweep still sees
+    # (src, dst, w, deg) rows
     # (guide §2.4: operations keyed the same way share one exchange).
     ed = cut_lineage(
         e_plan.withColumn(
@@ -375,7 +375,7 @@ def label_propagation(
         labels = counts.groupBy("v").agg(
             F.max_by("lab", F.struct(F.col("c"), -F.col("lab"))).alias("lab")
         )
-        # round 14 (guide §1.2 step 1 — fewer driver round-trips):
+        # fewer driver round-trips (guide §1.2 step 1):
         # EAGER cuts only every 2nd sweep; odd sweeps cut lazily, so
         # their blocks materialize inside the next action while plan
         # depth between materializations stays <= 2 sweeps (the same
@@ -433,7 +433,7 @@ def shortest_paths(
             .select(F.col("_d").alias("v"))
             .distinct()
         )
-        # round 14: EAGER cuts only every 2nd hop (lazy otherwise) —
+        # EAGER cuts only every 2nd hop (lazy otherwise) —
         # a lazy localCheckpoint still materializes its blocks inside
         # the NEXT eager action (or the consumer's), so every hop's
         # frame is computed exactly once and the dist union's children

@@ -72,8 +72,8 @@ def decoder_available() -> bool:
 
 
 def stdlib_decode_image(payload: bytes, dim: int = 8) -> list[float]:
-    """REAL image decode on nothing but the stdlib (round 12 — the
-    socketio_polling move applied to codecs): parse the two classic
+    """REAL image decode on nothing but the stdlib (as the
+    socketio_polling sink does for its transport): parse the two classic
     uncompressed formats whose specs are public and byte-simple —
     24-bit BI_RGB Windows BMP and binary PPM (P6, maxval <= 255) —
     then grayscale (integer Rec.601: (299R + 587G + 114B) / 1000, the
@@ -110,9 +110,9 @@ def stdlib_decode_image(payload: bytes, dim: int = 8) -> list[float]:
             raise DecoderUnavailable("BMP truncated before pixel end")
         import numpy as np
 
-        # round 13: frombuffer/reshape slicing instead of per-pixel
-        # Python loops (~100× on real rasters, bit-exact — integer
-        # sums are exact and the float ops below are unchanged).
+        # frombuffer/reshape slicing, not per-pixel Python loops
+        # (~100× on real rasters, bit-exact — integer sums are exact
+        # and the float ops below are unchanged).
         # Bottom-up is the BMP default: file row 0 is the LAST image
         # row — flip to image order (irrelevant to column averages,
         # kept so the raster is the image).
@@ -252,8 +252,8 @@ def extract_features(
             else:
                 # codec-less executor: REAL stdlib decode for the
                 # formats it speaks (BMP/P6), deterministic fake for
-                # the rest — auto degrades per PAYLOAD now, not per
-                # environment (round 12)
+                # the rest — auto degrades per PAYLOAD, not per
+                # environment
                 def decode(b: bytes, d: int) -> list[float]:
                     try:
                         return stdlib_decode_image(b, d)

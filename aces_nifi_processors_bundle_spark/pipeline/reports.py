@@ -799,7 +799,7 @@ def funnel_report(times: DataFrame, steps: list[str]) -> DataFrame:
     holds one row per user with nullable step-completion columns
     `_s0.._s{k-1}`; the report is one global counts aggregate exploded
     into per-step rows with the conversion-from-previous rate
-    (round 6, matching the oracle's contract). ONE counts row exploded
+    (matching the oracle's contract). ONE counts row exploded
     into the step rows — a union of N selects over `counts` would
     re-execute the whole upstream chain N times (each union branch is
     its own subtree)."""

@@ -331,7 +331,7 @@ def approx_distinct_profile(
     semantics. Output: (column, regs_hit, est_distinct)."""
     from ..sources.registry import ensure_fanout_parallelism
 
-    # round 14: the melt multiplies rows by len(cols) and every value
+    # the melt multiplies rows by len(cols) and every value
     # pays an md5+conv hash — fan-out floor (no-op at scale)
     df = ensure_fanout_parallelism(df.select(*cols))
     melted = df.select(

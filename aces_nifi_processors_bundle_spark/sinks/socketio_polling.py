@@ -34,20 +34,16 @@ API mirrors python-socketio v5 ``Client`` (connect/emit/send/
 disconnect with the same keyword layout) so the sink's
 ``client_factory`` injection point treats both interchangeably.
 
-DELIVERY-SEMANTICS CHANGE (round 12, flagged prominently per the
-round-12 advisory): through round 11, ``emit()`` transparently
-reconnected and RESENT on any OSError — at-least-once for every
-failure class, including transient timeouts/resets where the server
-may already have received the packet (duplicate risk). Since round
-12 the default is at-MOST-once for transients (the OSError is
-raised to the caller) and the transparent resend fires only on a
-DEFINITE session expiry (HTTP 400 — the server provably dropped the
-session, so the packet provably did not land). Callers that relied
-on emit self-healing over timeouts must now opt back in with
-``PollingSocketIOClient(resend_transient=True)`` (a constructor
-parameter since round 13; the mutable ``resend_transient`` instance
-attribute remains for back-compat) and accept the duplicate risk —
-a RuntimeWarning marks the opt-in at resend time.
+DELIVERY SEMANTICS: ``emit()`` is at-MOST-once for transient
+failures (timeouts, resets, where the server may already have
+received the packet): the OSError is raised to the caller. The
+transparent reconnect-and-resend fires only on a DEFINITE session
+expiry (HTTP 400 — the server provably dropped the session, so the
+packet provably did not land). Callers that want emit to self-heal
+over transients opt in with
+``PollingSocketIOClient(resend_transient=True)`` (the mutable
+``resend_transient`` instance attribute is also honoured) and accept
+the duplicate risk; a RuntimeWarning marks the opt-in at resend time.
 """
 
 from __future__ import annotations
@@ -68,8 +64,8 @@ class PollingSocketIOClient:
 
     Keyword layout copies python-socketio's ``Client.connect`` so the
     sink's ``connect(url, wait_timeout=...)`` call binds identically
-    against either implementation (the round-7 positional-timeout bug
-    class is held off by the shared signature)."""
+    against either implementation (the shared signature keeps a
+    positional ``wait_timeout`` from binding to the wrong parameter)."""
 
     def __init__(
         self,
@@ -104,10 +100,9 @@ class PollingSocketIOClient:
         # OSErrors (timeouts, resets), accepting duplicate-delivery
         # risk. Default False = at-most-once for transients; only a
         # definite session expiry (HTTP 400) triggers the resend.
-        # Round 13: a constructor parameter (the proper injection
-        # point — the sink's client_factory can bind it at
-        # construction); the instance attribute remains writable for
-        # back-compat with round-12 callers that set it post-hoc.
+        # A constructor parameter, so the sink's client_factory can
+        # bind it at construction; the instance attribute stays
+        # writable for callers that set it after construction.
         self.resend_transient = resend_transient
 
     # -- transport ---------------------------------------------------------

@@ -2,7 +2,8 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": sf}. The full per-query map also goes to
-bench_logs/sweep_<UTC start>_p<pid>_c<SPARK_GRAFT_CPUS>.json.
+bench_logs/sweep_<UTC start>_p<pid>_c<SPARK_GRAFT_CPUS>.json, with
+the janino compiles of each query's first run ("compiles").
 
 Each query is fully materialized through the built-in `noop` sink —
 unlike count(), noop cannot let Catalyst prune the projected columns
@@ -49,6 +50,11 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    # Janino compiles per query (pass 1), read from the JVM counter
+    # before and after it: two reads, no Spark job.
+    compiles: dict[str, int] = {}
+    jvm_metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compile_count = jvm_metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
 
     def _run_once(name: str, fn) -> float | None:
         # Timer wraps the query FUNCTION too, not just the final write:
@@ -56,6 +62,7 @@ def main() -> None:
         # eagerly inside fn, and excluding that would under-report them.
         # One failing query must not abort the run — record the error
         # and keep timing the rest (BENCH_r02 died on a single query).
+        n0 = compile_count()
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -65,6 +72,7 @@ def main() -> None:
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             return None
         finally:
+            compiles.setdefault(name, compile_count() - n0)
             # Per-query cache isolation: queries that persist
             # intermediates (the near-dup family, store queries) would
             # otherwise leave their frames pinned in the block manager
@@ -142,6 +150,7 @@ def main() -> None:
     # fail the bench.
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     full_record["cpus"] = cpus
+    full_record["compiles"] = compiles
     try:
         log_dir = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "bench_logs"

@@ -833,34 +833,6 @@ def test_flow_incremental_substring_stage_accumulates(spark, sf_dir, tmp_path):
             assert r["route"] == "duplicate_store"
 
 
-def test_flow_containment_dedup_stage(spark, sf_dir):
-    """round 10: containment through the canvas equals the direct
-    call."""
-    from aces_nifi_processors_bundle_spark.flows import build_flow
-    from aces_nifi_processors_bundle_spark.pipeline.dedup import (
-        containment_pairs,
-    )
-    from aces_nifi_processors_bundle_spark.sources.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    got = build_flow(spark, [
-        {"op": "load", "table": "documents"},
-        {"op": "select", "columns": ["doc_id", "text"]},
-        {"op": "containment_dedup", "threshold": 0.8},
-        {"op": "sql", "query": (
-            "SELECT id_a, id_b, round(containment, 6) AS containment "
-            "FROM __this__"
-        )},
-    ], sf_dir).collect()
-    want = (
-        containment_pairs(docs, k=3, threshold=0.8)
-        .selectExpr("id_a", "id_b", "round(containment, 6) AS containment")
-        .collect()
-    )
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-    assert got  # the natural corpus has symmetric high-containment pairs
-
-
 def test_flow_intra_repeat_stages(spark, sf_dir):
     """round 10: the intra-doc report and repair stages equal the
     direct calls; the repair rewrites text in place with columns

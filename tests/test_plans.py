@@ -922,3 +922,30 @@ def test_hash_topn_sample_is_take_ordered_not_global_sort(spark, sf_dir):
     mplan = plan_of(mat)
     assert "EvalPython" not in mplan
     assert "TakeOrderedAndProject" not in mplan  # no driver funnel
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (Spark's CodegenMetrics)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeat_run_compiles_no_new_classes(spark, sf_dir):
+    """The batch flow_batch queries, run again in the same session,
+    reuse every compiled class: the compiled-class cache holds their
+    working set (at Spark's default of 100 entries the cycle evicts
+    each class before its reuse, so every repeat recompiles). Run 1
+    only fills the cache, so earlier tests do not matter."""
+    from aces_nifi_processors_bundle_spark.plans.registry import QUERIES
+    from perfbench.workloads import FLOW_QUERIES
+
+    names = [n for n in FLOW_QUERIES if not n.startswith("q_stream_")]
+    compiled = []
+    for _ in range(3):
+        before = _compiles(spark)
+        for name in names:
+            spark.catalog.clearCache()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        compiled.append(_compiles(spark) - before)
+    assert compiled[1:] == [0, 0], compiled
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
